@@ -1,18 +1,25 @@
 package graft.etl
 
-import graft.sources.Intake
+import graft.GraftSession
+import graft.sources.{Intake, SniffCsv}
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** The reference's whole intake workflow as one callable (SURVEY.md
   * §2.1): enumerate uploads → per-file size + structural validation →
   * canonical-CSV normalization into a session prefix → manifest
   * (streamlit_app.py:215-330 end to end).
   *
-  * File-level control flow runs on the driver (it is control flow —
-  * the reference iterates uploads the same way); each file's parse,
-  * validation and rewrite is a distributed Spark job, so a 100-file ×
-  * 1 TB-each drop ingests with full cluster parallelism per file.
+  * Files run concurrently on a bounded driver pool of
+  * `min(files, GraftSession.cores)` threads, so a session's intake
+  * time tracks its slowest file rather than the sum of its files; each
+  * file's parse, validation and rewrite is still a distributed Spark
+  * job, so a 100-file × 1 TB-each drop ingests with full cluster
+  * parallelism per file. The manifest lists files in name order
+  * whatever order they finish in.
   */
 object Pipeline {
 
@@ -90,7 +97,9 @@ object Pipeline {
     * the reference's validate-even-when-S3-is-unavailable contract
     * (load_cfg + offline ZIP, streamlit_app.py:37-50,333) — it just
     * writes nothing; `allowXlsx=false` rejects .xlsx uploads with a
-    * typed issue like the reference's feature gate.
+    * typed issue like the reference's feature gate. `clock` stamps
+    * each file's `uploaded_at_utc`; it is called from the pool threads
+    * as each file finishes, so it must be thread-safe.
     */
   def ingestWith(spark: SparkSession, inDir: String, cfg: GraftConfig,
                  sessionTs: Option[String] = None,
@@ -98,7 +107,6 @@ object Pipeline {
                  clock: () => String = () => java.time.Instant.now().toString): DataFrame = {
     import spark.implicits._
     val session = cfg.sinkUri.map(out => sessionPrefix(out, sessionTs, sessionId))
-    val maxFileMb = cfg.maxFileMb
     val inPath = new Path(inDir)
     val fs = inPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = fs.listStatus(inPath).filter(_.isFile).map(_.getPath)
@@ -106,68 +114,106 @@ object Pipeline {
         p.getName.toLowerCase.endsWith(".xlsx"))
       .sortBy(_.getName)
 
-    val results = files.map { p =>
-      val issues = scala.collection.mutable.ArrayBuffer.empty[String]
-      if (!cfg.allowXlsx && p.getName.toLowerCase.endsWith(".xlsx"))
-        issues += "XLSX uploads are disabled."
-      if (!Validation.fileSizeOk(spark, p.toString, maxFileMb))
-        issues += s"File exceeds max size ($maxFileMb MB)."
-      var parsed: Option[org.apache.spark.sql.DataFrame] = None
-      val df =
-        if (issues.nonEmpty) None
-        else try {
-          val d = Intake.read(spark, p.toString)
-          parsed = Some(d)
-          // raw header: Spark renames duplicate columns on read
-          val headers =
-            if (p.getName.toLowerCase.endsWith(".csv"))
-              graft.sources.SniffCsv.rawHeader(spark, p.toString)
-            else d.columns
-          if (headers.exists(_.trim.isEmpty)) issues += "One or more column headers are blank."
-          if (headers.distinct.length != headers.length) issues += "Duplicate column headers detected."
-          // full-file parse INSIDE the rejection scope: the CSV read
-          // is FAILFAST (reference on_bad_lines="error"), but both a
-          // limit-1 emptiness probe and a plain count() let the
-          // parser skip column materialization (CSV column pruning),
-          // silently passing ragged rows. The RDD hop forces every
-          // record through the full-width parser — intake is the one
-          // place that cost is the point (the reference parses the
-          // whole upload too), and it must happen even in offline
-          // mode where no write would otherwise touch the rows.
-          // Persisted so the canonical-CSV write below reuses the
-          // parsed rows instead of re-parsing the file.
-          d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val rows = d.rdd.count()
-          if (rows == 0L) issues += "No data rows found."
-          Some((d, rows))
-        } catch {
-          case e: Intake.UnsupportedFormat => issues += e.getMessage; None
-          case e: Exception =>
-            issues += s"Failed to parse file: ${e.getMessage}"
-            parsed.foreach(_.unpersist(blocking = false))
-            None
-        }
-      val stem = p.getName.replaceFirst("\\.[^.]+$", "")
-      val dest = session.map(s => s"$s/${stem.replaceAll("[^A-Za-z0-9._-]", "_")}")
-      val accepted = issues.isEmpty && df.isDefined
-      val (rows, cols) = df.map { case (d, r) =>
-        try {
-          if (accepted) dest.foreach(Normalize.writeCanonicalCsv(d, _))
-          (r, d.columns.length.toLong)
-        } finally d.unpersist(blocking = false)
-      }.getOrElse((0L, 0L))
-      // per-file upload timestamp (reference uploaded_at_utc,
-      // streamlit_app.py:308) — clock injectable for deterministic tests
-      FileResult(p.getName, if (accepted) dest.getOrElse("") else "",
-        rows, cols, issues.toSeq, accepted, clock())
-    }
+    // Files whose names sanitize to one destination share a task and
+    // run in name order, so the last one's write wins as it would in
+    // a loop, and two writes never race on one directory.
+    val tasks = files.toSeq.groupBy(destName).values.toSeq
+      .map(group => (() => group.map(ingestFile(spark, _, cfg, session, clock))): Callable[Seq[FileResult]])
+    // A pool per call: its threads are created by the caller, so they
+    // inherit the caller's Spark local properties (job group,
+    // description, scheduler pool) — a long-lived pool would carry
+    // whatever its threads were created under.
+    val threads = new AtomicInteger()
+    val pool = Executors.newFixedThreadPool(tasks.size.min(GraftSession.cores).max(1), { (r: Runnable) =>
+      val t = new Thread(r, s"$IngestThreadName-${threads.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+    val results =
+      try pool.invokeAll(tasks.asJava).asScala.toSeq.flatMap { f =>
+        try f.get() catch { case e: ExecutionException => throw e.getCause }
+      }
+      finally {
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
 
-    val manifest = results.toSeq.toDF()
+    val manifest = results.sortBy(_.file).toDF()
     session.foreach { s =>
       Manifest.writeJson(
         manifest.select($"file", $"dest", $"rows", $"cols", $"accepted", $"uploaded_at_utc"),
         s"$s/manifest")
     }
     manifest
+  }
+
+  /** Name prefix of the threads [[ingestWith]] runs files on. */
+  private[graft] val IngestThreadName = "graft-ingest"
+
+  private def destName(p: Path): String =
+    p.getName.replaceFirst("\\.[^.]+$", "").replaceAll("[^A-Za-z0-9._-]", "_")
+
+  /** One upload end to end: size check → read → header checks →
+    * persisted full-width FAILFAST count → canonical write.
+    */
+  private def ingestFile(spark: SparkSession, p: Path, cfg: GraftConfig,
+                         session: Option[String], clock: () => String): FileResult = {
+    val issues = scala.collection.mutable.ArrayBuffer.empty[String]
+    val csv = p.getName.toLowerCase.endsWith(".csv")
+    if (!cfg.allowXlsx && !csv)
+      issues += "XLSX uploads are disabled."
+    if (!Validation.fileSizeOk(spark, p.toString, cfg.maxFileMb))
+      issues += s"File exceeds max size (${cfg.maxFileMb} MB)."
+    var parsed: Option[DataFrame] = None
+    val df =
+      if (issues.nonEmpty) None
+      else try {
+        // one sniff per CSV gives the dialect, the schema and the raw
+        // header: Spark's reader renames duplicate columns on read
+        val (d, headers) =
+          if (csv) {
+            val s = SniffCsv.sniff(spark, p.toString)
+            (SniffCsv.read(spark, p.toString, s), s.rawHeader)
+          } else {
+            val d = Intake.read(spark, p.toString)
+            (d, d.columns)
+          }
+        parsed = Some(d)
+        if (headers.exists(_.trim.isEmpty)) issues += "One or more column headers are blank."
+        if (headers.distinct.length != headers.length) issues += "Duplicate column headers detected."
+        // full-file parse INSIDE the rejection scope: the CSV read
+        // is FAILFAST (reference on_bad_lines="error"), but both a
+        // limit-1 emptiness probe and a plain count() let the
+        // parser skip column materialization (CSV column pruning),
+        // silently passing ragged rows. The RDD hop forces every
+        // record through the full-width parser — intake is the one
+        // place that cost is the point (the reference parses the
+        // whole upload too), and it must happen even in offline
+        // mode where no write would otherwise touch the rows.
+        // Persisted so the canonical-CSV write below reuses the
+        // parsed rows instead of re-parsing the file.
+        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val rows = d.rdd.count()
+        if (rows == 0L) issues += "No data rows found."
+        Some((d, rows))
+      } catch {
+        case e: Intake.UnsupportedFormat => issues += e.getMessage; None
+        case e: Exception =>
+          issues += s"Failed to parse file: ${e.getMessage}"
+          parsed.foreach(_.unpersist(blocking = false))
+          None
+      }
+    val dest = session.map(s => s"$s/${destName(p)}")
+    val accepted = issues.isEmpty && df.isDefined
+    val (rows, cols) = df.map { case (d, r) =>
+      try {
+        if (accepted) dest.foreach(Normalize.writeCanonicalCsv(d, _))
+        (r, d.columns.length.toLong)
+      } finally d.unpersist(blocking = false)
+    }.getOrElse((0L, 0L))
+    // per-file upload timestamp (reference uploaded_at_utc,
+    // streamlit_app.py:308) — clock injectable for deterministic tests
+    FileResult(p.getName, if (accepted) dest.getOrElse("") else "",
+      rows, cols, issues.toSeq, accepted, clock())
   }
 }

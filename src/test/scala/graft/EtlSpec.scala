@@ -40,6 +40,70 @@ class EtlSpec extends GraftSuite {
     assert(df.columns.toSeq == Seq("h1", "h2"))
   }
 
+  test("SniffCsv header names match Spark's header inference, canonical CSV included") {
+    val bom = Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte)
+    val latin1 = java.nio.charset.StandardCharsets.ISO_8859_1
+    val cases: Seq[(String, Array[Byte])] = Seq(
+      "quoted delimiter" -> "\"last, first\",age\nsmith,1\n".getBytes("UTF-8"),
+      "doubled quote" -> "\"she said \"\"hi\"\"\",x\n1,2\n".getBytes("UTF-8"),
+      "backslash escape" -> "\"a\\\"b\",c\n1,2\n".getBytes("UTF-8"),
+      "utf-8 bom" -> (bom ++ "h1,h2\nx,y\n".getBytes("UTF-8")),
+      "bom, quoted first name" -> (bom ++ "\"h,1\",h2\nx,y\n".getBytes("UTF-8")),
+      "latin-1 names" -> "José;Müller;Ærø\n1;2;3\n".getBytes(latin1),
+      "bom before latin-1" -> (bom ++ "nom,ville\nJosé,París\n".getBytes(latin1)),
+      "blank name" -> "a,,c\n1,2,3\n".getBytes("UTF-8"),
+      "case-insensitive duplicates" -> "A,a,b\n1,2,3\n".getBytes("UTF-8"),
+      "exact duplicates" -> "h|h|h\n1|2|3\n".getBytes("UTF-8"),
+      "leading blank lines" -> "\n  \r\nx\ty\n1\t2\n".getBytes("UTF-8"),
+      "crlf" -> "p,q\r\n1,2\r\n".getBytes("UTF-8"),
+      "no trailing newline" -> "only,header".getBytes("UTF-8"))
+    def firstLine(dir: String): String = {
+      val part = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-")).head
+      scala.io.Source.fromFile(part, "UTF-8").getLines().next()
+    }
+    def check(label: String, p: String): Unit = {
+      val d = SniffCsv.sniff(spark, p)
+      // Spark's own header inference with the same dialect, then the
+      // BOM strip the reader has always applied
+      val inferred = spark.read.option("header", "true")
+        .option("delimiter", d.delimiter.toString).option("encoding", d.charset)
+        .option("mode", "FAILFAST").csv(p)
+      val expected = inferred.columns.headOption match {
+        case Some(first) if first.startsWith("\uFEFF") =>
+          inferred.withColumnRenamed(first, first.stripPrefix("\uFEFF"))
+        case _ => inferred
+      }
+      val got = SniffCsv.read(spark, p)
+      assert(got.columns.toSeq == expected.columns.toSeq, label)
+      assert(got.collect().toSeq == expected.collect().toSeq, label)
+      val out = Files.createTempDirectory("graft_parity").toString
+      Normalize.writeCanonicalCsv(expected, s"$out/expected")
+      Normalize.writeCanonicalCsv(got, s"$out/got")
+      assert(firstLine(s"$out/got") == firstLine(s"$out/expected"), label)
+    }
+    cases.foreach { case (label, bytes) => check(label, writeTemp("t.csv", bytes)) }
+    // a directory of part files: the etl_csv_roundtrip shape, with the
+    // writer's _SUCCESS and .crc files beside the parts
+    val dir = Files.createTempDirectory("graft_parts").toString + "/nation"
+    Seq((0, "ALGERIA; NORTH", 0), (1, "ARGENTINA", 1), (2, "BRAZIL", 1))
+      .toDF("n_nationkey", "n_name", "n_regionkey").repartition(2)
+      .write.option("header", "true").option("delimiter", ";").csv(dir)
+    assert(new java.io.File(dir).listFiles().exists(_.getName.endsWith(".crc")))
+    check("part files", dir)
+  }
+
+  test("SniffCsv reads a header wider than the 4 KiB sample whole") {
+    val names = (1 to 600).map(i => f"column_$i%04d")
+    val header = names.mkString(",")
+    assert(header.length > 4096)
+    val p = writeTemp("wide.csv", (header + "\n" + names.indices.mkString(",") + "\n").getBytes("UTF-8"))
+    val d = SniffCsv.sniff(spark, p)
+    assert(d.delimiter == ',' && d.rawHeader.length == 600 && d.rawHeader.sameElements(names))
+    val df = SniffCsv.read(spark, p)
+    assert(df.columns.toSeq == names)
+    assert(df.collect().head.getString(599) == "599")
+  }
+
   test("Intake dispatches by extension; unknown formats are typed errors") {
     val p = writeTemp("a.csv", "x,y\n1,2\n".getBytes("UTF-8"))
     assert(Intake.read(spark, p).count() == 1)

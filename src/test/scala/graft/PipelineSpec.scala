@@ -1,7 +1,10 @@
 package graft
 
-import graft.etl.Pipeline
+import graft.etl.{GraftConfig, Pipeline}
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, atomic}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end reference-workflow parity: mixed-quality upload batch →
   * validated, normalized outputs + manifest under an isolated session
@@ -59,7 +62,6 @@ class PipelineSpec extends GraftSuite {
   }
 
   test("sink preflight: typed ok/unavailable instead of raw stack traces") {
-    import graft.etl.GraftConfig
     val tmp = Files.createTempDirectory("graft_sink").toString
     val ok = Pipeline.checkSink(spark, GraftConfig(Some(tmp), 50))
     assert(ok.ok, ok.detail)
@@ -73,7 +75,6 @@ class PipelineSpec extends GraftSuite {
   }
 
   test("tolerant config: offline mode validates without writing; allowXlsx gates uploads") {
-    import graft.etl.GraftConfig
     // missing / blank / malformed settings degrade, never throw
     assert(GraftConfig.load(Map.empty) == GraftConfig(None, 50, allowXlsx = true))
     assert(GraftConfig.load(Map(
@@ -124,5 +125,154 @@ class PipelineSpec extends GraftSuite {
     assert(new java.io.File(a).exists() && new java.io.File(b).exists())
     assert(spark.read.option("header", "true").csv(a).count() == 1)
     assert(spark.read.option("header", "true").csv(b).count() == 1)
+  }
+
+  private def dropOf(files: (String, Array[Byte])*): String = {
+    val in = Files.createTempDirectory("graft_drop").toFile
+    files.foreach { case (name, b) => Files.write(new java.io.File(in, name).toPath, b) }
+    in.getAbsolutePath
+  }
+
+  private def xlsx(header: Seq[String], rows: Seq[Seq[String]]): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    graft.sources.Xlsx.write(header, rows, bos)
+    bos.toByteArray
+  }
+
+  /** No ingest pool thread outlives its call (a finished thread may
+    * take a moment to leave the live set).
+    */
+  private def assertNoIngestThreads(): Unit = {
+    def live = Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(t => t.isAlive && t.getName.startsWith(Pipeline.IngestThreadName))
+    val deadline = System.nanoTime() + 10L * 1000000000L
+    while (live.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(live.isEmpty, live.map(_.getName))
+  }
+
+  test("concurrent ingest: manifest in file order, every malformed class keeps its issue") {
+    // the largest file sorts first, so files finish out of name order
+    val big = ("id,v\n" + (1 to 30000).map(i => s"$i,value_$i").mkString("\n") + "\n").getBytes("UTF-8")
+    val in = dropOf(
+      "a_large.csv" -> big,
+      "b_empty.csv" -> Array.emptyByteArray,
+      "c_header_only.csv" -> "a,b\n".getBytes("UTF-8"),
+      "d_blank_header.csv" -> "a,,c\n1,2,3\n".getBytes("UTF-8"),
+      "e_dup_header.csv" -> "h;h\n1;2\n".getBytes("UTF-8"),
+      "f_ragged.csv" -> "a,b\n1,2\n3,4,5\n".getBytes("UTF-8"),
+      "g_over_cap.csv" -> ("x,y\n" + "1,2\n" * 300000).getBytes("UTF-8"),
+      "h_sheet.xlsx" -> xlsx(Seq("x"), Seq(Seq("1"))),
+      "i_good.csv" -> "k|v\n1|a\n2|b\n".getBytes("UTF-8"))
+    val out = Files.createTempDirectory("graft_conc").toString
+    val finished = new atomic.AtomicInteger()
+    val raw = Pipeline.ingestWith(spark, in, GraftConfig(Some(out), 1, allowXlsx = false),
+      sessionTs = Some("20260101_000000"), sessionId = Some("c0ffee00"),
+      clock = () => finished.incrementAndGet().toString).collect()
+    val names = raw.map(_.getAs[String]("file")).toSeq
+    assert(names == names.sorted && names.length == 9)
+    // the clock runs once per file, as each finishes
+    assert(raw.map(_.getAs[String]("uploaded_at_utc").toInt).sorted.toSeq == (1 to 9))
+    val byFile = raw.map(r => r.getAs[String]("file") ->
+      (r.getAs[Boolean]("accepted"), r.getAs[Long]("rows"), r.getAs[Long]("cols"),
+        r.getAs[Seq[String]]("issues"))).toMap
+    val blank = "One or more column headers are blank."
+    val noRows = "No data rows found."
+    assert(byFile("a_large.csv") == ((true, 30000L, 2L, Nil)))
+    assert(byFile("b_empty.csv") == ((false, 0L, 0L, Seq(blank, noRows))))
+    assert(byFile("c_header_only.csv") == ((false, 0L, 2L, Seq(noRows))))
+    assert(byFile("d_blank_header.csv") == ((false, 1L, 3L, Seq(blank))))
+    assert(byFile("e_dup_header.csv") == ((false, 1L, 2L, Seq("Duplicate column headers detected."))))
+    assert(byFile("f_ragged.csv") == ((false, 0L, 0L, Seq(
+      s"Failed to parse file: [FAILED_READ_FILE.NO_HINT] Encountered error while reading file " +
+        s"file://$in/f_ragged.csv.  SQLSTATE: KD001"))))
+    assert(byFile("g_over_cap.csv") == ((false, 0L, 0L, Seq("File exceeds max size (1 MB)."))))
+    assert(byFile("h_sheet.xlsx") == ((false, 0L, 0L, Seq("XLSX uploads are disabled."))))
+    assert(byFile("i_good.csv") == ((true, 2L, 2L, Nil)))
+    // the sink's manifest is in file order too
+    val session = s"$out/uploads/20260101_000000_c0ffee00"
+    val sunk = spark.read.json(s"$session/manifest").collect().map(_.getAs[String]("file")).toSeq
+    assert(sunk == names)
+    assert(spark.read.option("header", "true").csv(s"$session/a_large").count() == 30000)
+    assertNoIngestThreads()
+  }
+
+  test("files sharing a sanitized destination write in name order, never at once") {
+    val in = dropOf(
+      "same name.csv" -> "a\n1\n".getBytes("UTF-8"),
+      "same_name.csv" -> "b\n2\n3\n".getBytes("UTF-8"),
+      "same_name.xlsx" -> xlsx(Seq("c"), Seq(Seq("4"), Seq("5"), Seq("6"))))
+    val out = Files.createTempDirectory("graft_same").toString
+    val raw = Pipeline.ingestWith(spark, in, GraftConfig(Some(out), 50),
+      sessionTs = Some("20260101_000000"), sessionId = Some("5a5e5a5e")).collect()
+    assert(raw.forall(_.getAs[Boolean]("accepted")))
+    val dest = s"$out/uploads/20260101_000000_5a5e5a5e/same_name"
+    assert(raw.map(_.getAs[String]("dest")).toSet == Set(dest))
+    // the last file by name wins, as a serial loop leaves it
+    val back = spark.read.option("header", "true").csv(dest)
+    assert(back.columns.toSeq == Seq("c") && back.count() == 3)
+  }
+
+  test("a caller's job group tags every job the ingest runs") {
+    val in = dropOf(
+      "a.csv" -> "a,b\n1,2\n".getBytes("UTF-8"),
+      "b.csv" -> "c;d\n3;4\n".getBytes("UTF-8"),
+      "c.csv" -> "e,e\n5,6\n".getBytes("UTF-8"),
+      "d.xlsx" -> xlsx(Seq("x"), Seq(Seq("1"))))
+    val out = Files.createTempDirectory("graft_tag").toString
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("graft-ingest-tag", "ingest under a caller's group")
+      try Pipeline.ingestWith(spark, in, GraftConfig(Some(out), 50)).collect()
+      finally sc.clearJobGroup()
+      // listener events arrive in order: once this job is seen, every
+      // ingest job before it has been seen too
+      sc.setJobGroup("graft-ingest-sentinel", "sentinel")
+      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("graft-ingest-sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    val seen = groups.asScala.toSeq
+    assert(seen.lastOption.contains("graft-ingest-sentinel"), seen)
+    val ingest = seen.dropRight(1)
+    // per file: at least the full-width count; plus the manifest write
+    assert(ingest.length > 4, seen)
+    assert(ingest.forall(_ == "graft-ingest-tag"), seen)
+  }
+
+  test("an exception escaping a file's body reaches the caller as itself") {
+    graft.testfs.UnreadableSimFileSystem.register(spark)
+    val in = dropOf(
+      "good.csv" -> "a,b\n1,2\n".getBytes("UTF-8"),
+      "unreadable.csv" -> "a,b\n1,2\n".getBytes("UTF-8"),
+      "zz.csv" -> "c,d\n3,4\n".getBytes("UTF-8"))
+    val out = Files.createTempDirectory("graft_fail").toString
+    val e = intercept[java.nio.file.AccessDeniedException] {
+      Pipeline.ingestWith(spark, "unreadsim://" + in, GraftConfig(Some(out), 50))
+    }
+    assert(e.getMessage.endsWith("unreadable.csv"))
+    assertNoIngestThreads()
+  }
+
+  test("a header wider than the 4 KiB sample is checked whole") {
+    // 584 names of 6 bytes and a 7-byte first name put a delimiter at
+    // byte 4095: a header cut at 4 KiB would end in a blank name
+    val names = "xc00001" +: (2 to 600).map(i => f"c$i%05d")
+    assert(names.mkString(",").charAt(4095) == ',')
+    val row = names.indices.mkString(",")
+    val dup = names.init :+ "xc00001"
+    val in = dropOf(
+      "wide.csv" -> s"${names.mkString(",")}\n$row\n".getBytes("UTF-8"),
+      "wide_dup.csv" -> s"${dup.mkString(",")}\n$row\n".getBytes("UTF-8"))
+    val m = Pipeline.ingestWith(spark, in, GraftConfig(None, 50)).collect()
+      .map(r => r.getAs[String]("file") ->
+        (r.getAs[Boolean]("accepted"), r.getAs[Long]("cols"), r.getAs[Seq[String]]("issues"))).toMap
+    assert(m("wide.csv") == ((true, 600L, Nil)))
+    assert(m("wide_dup.csv") == ((false, 600L, Seq("Duplicate column headers detected."))))
   }
 }

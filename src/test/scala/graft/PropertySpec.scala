@@ -109,16 +109,6 @@ class PropertySpec extends GraftSuite {
     assert(native == 128512L, s"astral fold wrong: $native")
   }
 
-  test("splitQuoted parses RFC-4180 headers a naive split would break") {
-    import graft.sources.SniffCsv.splitQuoted
-    assert(splitQuoted("a,b,c", ',').toSeq == Seq("a", "b", "c"))
-    assert(splitQuoted("\"last, first\",age", ',').toSeq == Seq("last, first", "age"))
-    assert(splitQuoted("\"she said \"\"hi\"\"\",x", ',').toSeq == Seq("she said \"hi\"", "x"))
-    assert(splitQuoted("a;;c", ';').toSeq == Seq("a", "", "c"))
-    assert(splitQuoted("", ',').toSeq == Seq(""))
-    assert(splitQuoted("\"unterminated, field", ',').toSeq == Seq("unterminated, field"))
-  }
-
   test("native GroupTopK equals window top-k on arbitrary grouped data") {
     val rowsGen = Gen.listOfN(60,
       Gen.zip(Gen.oneOf("g1", "g2", "g3"), Gen.choose(0, 20)))
