@@ -5,7 +5,8 @@ import graft.sources.{Intake, SniffCsv}
 import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import scala.jdk.CollectionConverters._
 
 /** The reference's whole intake workflow as one callable (SURVEY.md
@@ -15,11 +16,12 @@ import scala.jdk.CollectionConverters._
   *
   * Files run concurrently on a bounded driver pool of
   * `min(files, GraftSession.cores)` threads, so a session's intake
-  * time tracks its slowest file rather than the sum of its files; each
-  * file's parse, validation and rewrite is still a distributed Spark
-  * job, so a 100-file × 1 TB-each drop ingests with full cluster
-  * parallelism per file. The manifest lists files in name order
-  * whatever order they finish in.
+  * time tracks its slowest file rather than the sum of its files. Each
+  * parsed file costs one distributed Spark job, which parses it in
+  * full, counts its rows and writes its canonical CSV, so a 100-file ×
+  * 1 TB-each drop ingests with full cluster parallelism per file. The
+  * manifest is written from the driver, with no job, and lists files in
+  * name order whatever order they finish in.
   */
 object Pipeline {
 
@@ -114,11 +116,18 @@ object Pipeline {
         p.getName.toLowerCase.endsWith(".xlsx"))
       .sortBy(_.getName)
 
-    // Files whose names sanitize to one destination share a task and
-    // run in name order, so the last one's write wins as it would in
-    // a loop, and two writes never race on one directory.
-    val tasks = files.toSeq.groupBy(destName).values.toSeq
-      .map(group => (() => group.map(ingestFile(spark, _, cfg, session, clock))): Callable[Seq[FileResult]])
+    // Files whose names sanitize to one destination share a task, so
+    // two writes never race on one directory. An overwrite clears its
+    // destination before its job runs, so the group runs from its last
+    // name back and only files until the first accepted one write: the
+    // last accepted file by name owns the destination, as a loop in
+    // name order would leave it, and no earlier file can clear it.
+    val tasks = files.toSeq.groupBy(destName).values.toSeq.map { group =>
+      (() => group.reverse.foldLeft(List.empty[FileResult]) { (later, p) =>
+        val dest = session.map(s => s"$s/${destName(p)}")
+        ingestFile(spark, p, cfg, dest, write = !later.exists(_.accepted), clock) :: later
+      }): Callable[Seq[FileResult]]
+    }
     // A pool per call: its threads are created by the caller, so they
     // inherit the caller's Spark local properties (job group,
     // description, scheduler pool) — a long-lived pool would carry
@@ -138,13 +147,13 @@ object Pipeline {
         pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
       }
 
-    val manifest = results.sortBy(_.file).toDF()
+    val sorted = results.sortBy(_.file)
     session.foreach { s =>
-      Manifest.writeJson(
-        manifest.select($"file", $"dest", $"rows", $"cols", $"accepted", $"uploaded_at_utc"),
-        s"$s/manifest")
+      Manifest.writeJsonLines(spark.sparkContext.hadoopConfiguration, s"$s/manifest",
+        sorted.map(r => Seq("file" -> r.file, "dest" -> r.dest, "rows" -> r.rows, "cols" -> r.cols,
+          "accepted" -> r.accepted, "uploaded_at_utc" -> r.uploaded_at_utc)))
     }
-    manifest
+    sorted.toDF()
   }
 
   /** Name prefix of the threads [[ingestWith]] runs files on. */
@@ -153,20 +162,24 @@ object Pipeline {
   private def destName(p: Path): String =
     p.getName.replaceFirst("\\.[^.]+$", "").replaceAll("[^A-Za-z0-9._-]", "_")
 
-  /** One upload end to end: size check → read → header checks →
-    * persisted full-width FAILFAST count → canonical write.
+  /** One upload end to end: size check → read → header checks → one
+    * job that parses the file in full (FAILFAST) and counts its rows as
+    * it goes. The job writes the canonical CSV to `dest` when `write` is
+    * set and the file passed every check before it; otherwise it writes
+    * to the `noop` sink, which still reports rows for offline mode and
+    * for files rejected on their headers. A destination left by a
+    * failed or empty file is deleted.
     */
   private def ingestFile(spark: SparkSession, p: Path, cfg: GraftConfig,
-                         session: Option[String], clock: () => String): FileResult = {
+                         dest: Option[String], write: Boolean, clock: () => String): FileResult = {
     val issues = scala.collection.mutable.ArrayBuffer.empty[String]
     val csv = p.getName.toLowerCase.endsWith(".csv")
     if (!cfg.allowXlsx && !csv)
       issues += "XLSX uploads are disabled."
     if (!Validation.fileSizeOk(spark, p.toString, cfg.maxFileMb))
       issues += s"File exceeds max size (${cfg.maxFileMb} MB)."
-    var parsed: Option[DataFrame] = None
-    val df =
-      if (issues.nonEmpty) None
+    val (rows, cols) =
+      if (issues.nonEmpty) (0L, 0L)
       else try {
         // one sniff per CSV gives the dialect, the schema and the raw
         // header: Spark's reader renames duplicate columns on read
@@ -178,42 +191,45 @@ object Pipeline {
             val d = Intake.read(spark, p.toString)
             (d, d.columns)
           }
-        parsed = Some(d)
         if (headers.exists(_.trim.isEmpty)) issues += "One or more column headers are blank."
         if (headers.distinct.length != headers.length) issues += "Duplicate column headers detected."
-        // full-file parse INSIDE the rejection scope: the CSV read
-        // is FAILFAST (reference on_bad_lines="error"), but both a
-        // limit-1 emptiness probe and a plain count() let the
-        // parser skip column materialization (CSV column pruning),
-        // silently passing ragged rows. The RDD hop forces every
-        // record through the full-width parser — intake is the one
-        // place that cost is the point (the reference parses the
-        // whole upload too), and it must happen even in offline
-        // mode where no write would otherwise touch the rows.
-        // Persisted so the canonical-CSV write below reuses the
-        // parsed rows instead of re-parsing the file.
-        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val rows = d.rdd.count()
-        if (rows == 0L) issues += "No data rows found."
-        Some((d, rows))
+        // The whole-file parse happens even in offline mode: the read
+        // is FAILFAST (reference on_bad_lines="error"), and the
+        // all-string projection both sinks apply references every
+        // column, so CSV column pruning cannot skip the fields that
+        // would expose a ragged row. The row count rides on the same
+        // job as an observed metric.
+        val seen = new Observation()
+        val observed = d.observe(seen, count(lit(1)).as("rows"))
+        val target = dest.filter(_ => write && issues.isEmpty)
+        val n =
+          try {
+            target match {
+              case Some(t) => Normalize.writeCanonicalCsv(observed, t)
+              case None => Normalize.allString(observed).write.format("noop").mode("overwrite").save()
+            }
+            seen.get("rows").asInstanceOf[Long]
+          } catch { case e: Exception => target.foreach(delete(spark, _)); throw e }
+        if (n == 0L) {
+          issues += "No data rows found."
+          target.foreach(delete(spark, _))
+        }
+        (n, d.columns.length.toLong)
       } catch {
-        case e: Intake.UnsupportedFormat => issues += e.getMessage; None
-        case e: Exception =>
-          issues += s"Failed to parse file: ${e.getMessage}"
-          parsed.foreach(_.unpersist(blocking = false))
-          None
+        case e: Intake.UnsupportedFormat => issues += e.getMessage; (0L, 0L)
+        // a failed write job surfaces the reader's FAILED_READ_FILE
+        // error itself, so the issue reads the same with or without a sink
+        case e: Exception => issues += s"Failed to parse file: ${e.getMessage}"; (0L, 0L)
       }
-    val dest = session.map(s => s"$s/${destName(p)}")
-    val accepted = issues.isEmpty && df.isDefined
-    val (rows, cols) = df.map { case (d, r) =>
-      try {
-        if (accepted) dest.foreach(Normalize.writeCanonicalCsv(d, _))
-        (r, d.columns.length.toLong)
-      } finally d.unpersist(blocking = false)
-    }.getOrElse((0L, 0L))
+    val accepted = issues.isEmpty
     // per-file upload timestamp (reference uploaded_at_utc,
     // streamlit_app.py:308) — clock injectable for deterministic tests
     FileResult(p.getName, if (accepted) dest.getOrElse("") else "",
       rows, cols, issues.toSeq, accepted, clock())
+  }
+
+  private def delete(spark: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import graft.etl.{GraftConfig, Pipeline}
 import java.nio.file.Files
 import java.util.concurrent.{ConcurrentLinkedQueue, atomic}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import scala.jdk.CollectionConverters._
 
 /** End-to-end reference-workflow parity: mixed-quality upload batch →
@@ -212,6 +212,35 @@ class PipelineSpec extends GraftSuite {
     assert(back.columns.toSeq == Seq("c") && back.count() == 3)
   }
 
+  /** `body`'s result, the job group of every job it starts, in start
+    * order, and the bytes its tasks wrote. Listener events arrive in
+    * order: once a sentinel job run after `body` is seen, so is every
+    * job of `body`.
+    */
+  private def jobsOf[A](body: => A): (A, Seq[String], Long) = {
+    val groups = new ConcurrentLinkedQueue[String]()
+    val written = new atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => written.addAndGet(m.outputMetrics.bytesWritten))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val result = try {
+      val r = body
+      sc.setJobGroup("graft-ingest-sentinel", "sentinel")
+      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("graft-ingest-sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
+      r
+    } finally sc.removeSparkListener(listener)
+    val seen = groups.asScala.toSeq
+    assert(seen.lastOption.contains("graft-ingest-sentinel"), seen)
+    (result, seen.dropRight(1), written.get())
+  }
+
   test("a caller's job group tags every job the ingest runs") {
     val in = dropOf(
       "a.csv" -> "a,b\n1,2\n".getBytes("UTF-8"),
@@ -219,30 +248,121 @@ class PipelineSpec extends GraftSuite {
       "c.csv" -> "e,e\n5,6\n".getBytes("UTF-8"),
       "d.xlsx" -> xlsx(Seq("x"), Seq(Seq("1"))))
     val out = Files.createTempDirectory("graft_tag").toString
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
     val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
+    val (_, ingest, _) = jobsOf {
       sc.setJobGroup("graft-ingest-tag", "ingest under a caller's group")
       try Pipeline.ingestWith(spark, in, GraftConfig(Some(out), 50)).collect()
       finally sc.clearJobGroup()
-      // listener events arrive in order: once this job is seen, every
-      // ingest job before it has been seen too
-      sc.setJobGroup("graft-ingest-sentinel", "sentinel")
-      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains("graft-ingest-sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
-    } finally sc.removeSparkListener(listener)
-    val seen = groups.asScala.toSeq
-    assert(seen.lastOption.contains("graft-ingest-sentinel"), seen)
-    val ingest = seen.dropRight(1)
-    // per file: at least the full-width count; plus the manifest write
-    assert(ingest.length > 4, seen)
-    assert(ingest.forall(_ == "graft-ingest-tag"), seen)
+    }
+    // one job per parsed file, the rejected c.csv included; none for
+    // the manifest
+    assert(ingest == Seq.fill(4)("graft-ingest-tag"), ingest)
+  }
+
+  test("a rejected later file never clears the shared destination of an accepted earlier one") {
+    Seq("ragged" -> "x,y\n1,2\n3,4,5\n", "header-only" -> "x,y\n").foreach { case (kind, later) =>
+      val in = dropOf(
+        "same name.csv" -> "a\n1\n".getBytes("UTF-8"),
+        "same_name.csv" -> later.getBytes("UTF-8"))
+      val out = Files.createTempDirectory("graft_keep").toString
+      val raw = Pipeline.ingestWith(spark, in, GraftConfig(Some(out), 50),
+        sessionTs = Some("20260101_000000"), sessionId = Some("4ee94ee9")).collect()
+      val session = s"$out/uploads/20260101_000000_4ee94ee9"
+      val dest = s"$session/same_name"
+      val m = raw.map(r => r.getAs[String]("file") -> (r.getAs[Boolean]("accepted"), r.getAs[String]("dest"))).toMap
+      assert(m == Map("same name.csv" -> (true, dest), "same_name.csv" -> (false, "")), kind)
+      val back = spark.read.option("header", "true").csv(dest)
+      assert(back.columns.toSeq == Seq("a") && back.as[String].collect().toSeq == Seq("1"), kind)
+      val sunk = spark.read.json(s"$session/manifest").collect()
+        .map(r => r.getAs[String]("file") -> (r.getAs[Boolean]("accepted"), r.getAs[String]("dest"))).toMap
+      assert(sunk == m, kind)
+    }
+  }
+
+  test("the driver-written manifest matches Spark's JSON writer byte for byte") {
+    // non-ASCII rides in the clock's value: a JVM under the C locale
+    // cannot name a file outside ASCII
+    val in = dropOf(
+      "Zurich \"q\".csv" -> "a,b\n1,2\n".getBytes("UTF-8"),
+      "back\\slash.csv" -> "c\n3\n".getBytes("UTF-8"),
+      "dup.csv" -> "h,h\n1,2\n".getBytes("UTF-8"))
+    val out = Files.createTempDirectory("graft_json").toString
+    // the first file to finish gets a null stamp, which Spark's writer
+    // leaves out of its line
+    val stamps = new atomic.AtomicInteger()
+    val m = Pipeline.ingestWith(spark, in, GraftConfig(Some(out), 50),
+      sessionTs = Some("20260101_000000"), sessionId = Some("15015015"),
+      clock = () => if (stamps.getAndIncrement() == 0) null else "Z\u00fcrich \u6771\u4eac \ud83d\ude00 \"q\" \\ \t")
+    val ours = s"$out/uploads/20260101_000000_15015015/manifest"
+    val theirs = s"$out/spark_manifest"
+    graft.etl.Manifest.writeJson(
+      m.select("file", "dest", "rows", "cols", "accepted", "uploaded_at_utc"), theirs)
+    def part(dir: String): Array[Byte] = {
+      val parts = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      assert(parts.length == 1, parts.toSeq)
+      Files.readAllBytes(parts.head.toPath)
+    }
+    val text = new String(part(ours), "UTF-8")
+    assert(part(ours).sameElements(part(theirs)), (text, new String(part(theirs), "UTF-8")))
+    // the awkward values are really in it: raw UTF-8, escaped quote,
+    // backslash and tab, and the rejected file's empty dest
+    assert(text.contains("\"file\":\"Zurich \\\"q\\\".csv\""), text)
+    assert(text.contains("\"file\":\"back\\\\slash.csv\""), text)
+    assert(text.contains("\"uploaded_at_utc\":\"Z\u00fcrich \u6771\u4eac \ud83d\ude00 \\\"q\\\" \\\\ \\t\""), text)
+    assert(text.contains("\"file\":\"dup.csv\",\"dest\":\"\""), text)
+    assert(text.split('\n').count(!_.contains("uploaded_at_utc")) == 1, text)
+    assert(new java.io.File(ours, "_SUCCESS").isFile)
+    val (a, b) = (spark.read.json(ours), spark.read.json(theirs))
+    assert(a.columns.toSeq == b.columns.toSeq)
+    assert(a.collect().toSeq == b.collect().toSeq && a.count() == 3)
+  }
+
+  test("offline mode parses, counts and rejects as with a sink, one job per parsed file") {
+    val in = dropOf(
+      "good.csv" -> "a,b\n1,2\n".getBytes("UTF-8"),
+      "header_only.csv" -> "a,b\n".getBytes("UTF-8"),
+      "ragged.csv" -> "a,b\n1,2\n3,4,5\n".getBytes("UTF-8"),
+      "dup_ragged.csv" -> ("h,h\n" + "1,2\n" * 3 + "3,4,5\n").getBytes("UTF-8"),
+      "empty_sheet.xlsx" -> xlsx(Seq("x"), Nil))
+    def run(cfg: GraftConfig) = Pipeline.ingestWith(spark, in, cfg,
+        sessionTs = Some("20260101_000000"), sessionId = Some("0ff11e00")).collect()
+      .map(r => r.getAs[String]("file") ->
+        (r.getAs[Boolean]("accepted"), r.getAs[Long]("rows"), r.getAs[Long]("cols"), r.getAs[Seq[String]]("issues")))
+      .toMap
+    val (offline, offlineJobs, offlineBytes) = jobsOf(run(GraftConfig(None, 50)))
+    val out = Files.createTempDirectory("graft_offline").toString
+    val (online, onlineJobs, onlineBytes) = jobsOf(run(GraftConfig(Some(out), 50)))
+    assert(offlineJobs.length == 5 && onlineJobs.length == 5, (offlineJobs, onlineJobs))
+    assert(offlineBytes == 0L && onlineBytes > 0L, (offlineBytes, onlineBytes))
+    assert(new java.io.File(in).list().length == 5)
+    assert(offline == online)
+    val failed = s"Failed to parse file: [FAILED_READ_FILE.NO_HINT] Encountered error while reading file "
+    assert(offline("ragged.csv") == ((false, 0L, 0L, Seq(s"${failed}file://$in/ragged.csv.  SQLSTATE: KD001"))))
+    assert(offline("dup_ragged.csv") == ((false, 0L, 0L, Seq("Duplicate column headers detected.",
+      s"${failed}file://$in/dup_ragged.csv.  SQLSTATE: KD001"))))
+    assert(offline("header_only.csv") == ((false, 0L, 2L, Seq("No data rows found."))))
+    assert(offline("empty_sheet.xlsx") == ((false, 0L, 1L, Seq("No data rows found."))))
+    assert(offline("good.csv") == ((true, 1L, 2L, Nil)))
+  }
+
+  test("an ingest leaves nothing persisted, no rejected destination and no manifest temp file") {
+    val in = dropOf(
+      "good.csv" -> "a,b\n1,2\n".getBytes("UTF-8"),
+      "ragged.csv" -> "a,b\n1,2\n3,4,5\n".getBytes("UTF-8"),
+      "header_only.csv" -> "a,b\n".getBytes("UTF-8"),
+      "blank_header.csv" -> "a,,c\n1,2,3\n".getBytes("UTF-8"))
+    val out = Files.createTempDirectory("graft_clean").toString
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet
+    val raw = Pipeline.ingestWith(spark, in, GraftConfig(Some(out), 50),
+      sessionTs = Some("20260101_000000"), sessionId = Some("c1ea0c1e")).collect()
+    assert(raw.map(r => r.getAs[String]("file") -> r.getAs[Boolean]("accepted")).toMap ==
+      Map("good.csv" -> true, "ragged.csv" -> false, "header_only.csv" -> false, "blank_header.csv" -> false))
+    assert(sc.getPersistentRDDs.keySet == persisted, sc.getPersistentRDDs)
+    val session = new java.io.File(s"$out/uploads/20260101_000000_c1ea0c1e")
+    assert(session.list().sorted.toSeq == Seq("good", "manifest"))
+    val manifest = new java.io.File(session, "manifest").list().filterNot(_.startsWith(".")).sorted.toSeq
+    assert(manifest == Seq("_SUCCESS", "part-00000.json"), manifest)
   }
 
   test("an exception escaping a file's body reaches the caller as itself") {
