@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // wall-clock budget (r17, judge ask #1): the driver killed the r16
@@ -15,37 +14,13 @@ object Bench {
     def remaining(): Double = budgetSec - (System.nanoTime() - benchT0) / 1e9
     val trimmed = scala.collection.mutable.ListBuffer.empty[String]
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().min(32).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // micros-lake variant: naive parquet timestamps read as TIMESTAMP
-      // (session is UTC, so instants are identical) — keeps filter
-      // pushdown on date columns instead of a plan-side NTZ cast
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // byte-based post-shuffle coalescing (r17 A/B knobs — see the
-      // r16 note below for why the 64m variant was rejected; the r17
-      // experiment re-runs it with a SMALL advisory so KB-sized
-      // iterative-loop shuffles coalesce while CPU-dense tens-of-MB
-      // stages keep their width)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64m"))
-      // A/B'd r16 (guide §2.2): parallelismFirst=false + 64m advisory
-      // (Spark's documented production recommendation) measured 96.2 s
-      // -> 113.3 s on a 30-gate subset — byte-based coalescing
-      // serializes CPU-dense small-byte stages on local[32]
-      // (ts_theil_sen 4.6 -> 8.0 s). Default (parallelism-first)
-      // retained; see OPTIMIZATION_r16.md.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // post-shuffle coalescing stays on Spark's parallelism-first
+    // default: A/B'd r16, parallelismFirst=false + 64m advisory (Spark's
+    // documented production recommendation) measured 96.2 s -> 113.3 s
+    // on a 30-gate subset — byte-based coalescing serializes CPU-dense
+    // small-byte stages on local[32] (ts_theil_sen 4.6 -> 8.0 s); see
+    // OPTIMIZATION_r16.md.
+    val spark = GraftSession.get("bench")
     // min of `iters` runs per query: the first run pays one-time
     // codegen/JIT compilation that a long-lived 100 TB job amortizes
     // away; min-of-N reports the steady-state cost.
@@ -53,8 +28,8 @@ object Bench {
     // optional comma-separated subset for iterating on one operator
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val candidates = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val candidates = SparkEntry.queries.keys.toSeq.sorted
+      .filter(name => only.forall(_.contains(name)))
     // JIT/codegen warmup OUTSIDE the timed region: run every query once
     // at the smallest SF so whole-stage-codegen classes compile before
     // timing starts — a cold JVM otherwise charges one-time compilation
@@ -62,29 +37,13 @@ object Bench {
     // long-lived 100 TB job never sees. Set SPARK_GRAFT_WARMUP_DIR=""
     // to measure cold-start instead.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    if (warmDir.nonEmpty) {
-      candidates.foreach { case (_, fn) =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
-      spark.catalog.clearCache()
-    }
-    // full inter-gate cleanup (the ScaleCurve releaseAll recipe): two
-    // rounds mis-read battery interference as regressions that
-    // re-measured fine isolated (r8: q_confusion_metrics/text_bm25;
-    // r9: etl_bucketed_join 8.6 vs 2.6 s). clearCache alone leaves
-    // localCheckpoint blocks (the CC/pointer-jump gates') pinned —
-    // unpersisting every tracked RDD drops those too. System.gc is the
-    // expensive part, so it runs every gcEvery gates rather than per
-    // gate; the isolated tier below gc's before every re-time and is
-    // the authoritative per-gate number.
-    def releaseAll(gc: Boolean): Unit = {
-      graft.operators.CacheLedger.release()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(r => try r.unpersist(blocking = true) catch { case _: Throwable => () })
-      if (gc) System.gc()
-    }
+    if (warmDir.nonEmpty) Gates.warm(spark, candidates, warmDir)
+    // full inter-gate cleanup (Gates.release): two rounds mis-read
+    // battery interference as regressions that re-measured fine
+    // isolated (r8: q_confusion_metrics/text_bm25; r9: etl_bucketed_join
+    // 8.6 vs 2.6 s). System.gc is the expensive part, so it runs every
+    // gcEvery gates rather than per gate; the isolated tier below gc's
+    // before every re-time and is the authoritative per-gate number.
     val gcEvery = 25
     var gateIdx = 0
     // 0.1 ms precision in every emitted map: full-precision doubles made
@@ -96,33 +55,19 @@ object Bench {
     def jmap(m: Iterable[(String, Double)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + f4(v) }.mkString("{", ",", "}")
     val allTimes = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    val results = candidates
-      .map { case (name, fn) =>
-      val times = (1 to iters).map { _ =>
-        val t0 = System.nanoTime()
-        try {
-          // noop sink fully evaluates every output column — a bare
-          // count() lets Catalyst prune projection work (md5/regexp
-          // scans would be measured as near-free)
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          // a broken query must read as broken, not as a fast run
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          -1.0
-        }
-      }
+    val results = candidates.map { name =>
+      val times = Seq.fill(iters)(Gates.run(spark, "bench", name, sfDir))
       // release this query's persisted intermediates AFTER all its
       // iterations (iteration 2 deliberately measures the cache-hit
       // steady state), so queries don't memory-pressure each other
       gateIdx += 1
-      releaseAll(gc = gateIdx % gcEvery == 0)
+      Gates.release(spark, gc = gateIdx % gcEvery == 0)
       allTimes(name) = times
-      name -> (if (times.contains(-1.0)) -1.0 else times.min)
+      name -> Gates.best(times)
     }.toMap
     val qs = jmap(results.toSeq.sortBy(_._1))
     // contention self-diagnosis: re-time the 20 slowest queries ALONE
-    // after the whole suite, each behind a full releaseAll + gc. In
+    // after the whole suite, each behind a full Gates.release + gc. In
     // the main pass a query shares the JVM with its neighbors'
     // GC/codegen debris, and a busy driver box inflates everything
     // 2-6× (round-2 postmortem: the driver's bench read as a
@@ -159,23 +104,10 @@ object Bench {
       // gates' battery cells remain authoritative for them
       if (remaining() < 120) { trimmed += s"isolated:$name"; None }
       else {
-        val fn = SparkEntry.queries(name)
-        releaseAll(gc = true)
-        // same failure armor as the main loop: a transient re-run
-        // failure must not discard the whole suite's JSON
-        val times = (1 to iters).map { _ =>
-          val t0 = System.nanoTime()
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          } catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[bench] isolated $name FAILED: ${e.getMessage}")
-              -1.0
-          }
-        }
-        releaseAll(gc = false)
-        Some(name -> (if (times.contains(-1.0)) -1.0 else times.min))
+        Gates.release(spark, gc = true)
+        val times = Seq.fill(iters)(Gates.run(spark, "bench isolated", name, sfDir))
+        Gates.release(spark, gc = false)
+        Some(name -> Gates.best(times))
       }
     }
     val iso = jmap(isolated)
@@ -221,7 +153,7 @@ object Bench {
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().put("SPARK_GRAFT_BENCH_ONLY", name)
       pb.environment().put("SPARK_GRAFT_SF_DIR", dir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+      pb.environment().put("SPARK_GRAFT_CPUS", GraftSession.cores.toString)
       pb.environment().put("SPARK_GRAFT_BENCH_ITERS", childIters.toString)
       // the child must warm up where the parent did (a custom or
       // disabled warmup dir would otherwise silently revert to the
@@ -286,8 +218,12 @@ object Bench {
     // rows = sf1) — the "within 2× at the same scale factor" bar one
     // tier up, recorded machine-readably with the round. Replication
     // shifts order keys so join fan-out per key stays realistic
-    // (the ScaleProbe construction); dims are reused, as in a real
-    // lake where facts outgrow dims. SPARK_GRAFT_BENCH_SF1=0 disables.
+    // (Sf1Lakes.buildFlat); dims are reused, as in a real lake where
+    // facts outgrow dims. SPARK_GRAFT_BENCH_SF1=0 disables.
+    // The same seven headliners run in the sf1_bucketed tier below.
+    val headliners = Seq("q1_pricing_summary", "q3_top_orders",
+      "q5_region_revenue", "q6_forecast_revenue", "q12_ship_mode",
+      "q18_large_orders", "q21_waiting_orders")
     val sf1Budget = remaining() > 300
     if (only.isEmpty && sfDir.endsWith("sf0.1") && !sf1Budget) trimmed += "sf1_tier"
     val sf1On = only.isEmpty && sfDir.endsWith("sf0.1") && sf1Budget &&
@@ -300,22 +236,10 @@ object Bench {
         // session drives (review r14: the inline copy was a drift
         // channel)
         graft.tools.Sf1Lakes.buildFlat(spark, sfDir, out)
-        val headliners = Seq("q1_pricing_summary", "q3_top_orders",
-          "q5_region_revenue", "q6_forecast_revenue", "q12_ship_mode",
-          "q18_large_orders", "q21_waiting_orders")
         headliners.map { name =>
-          val fn = SparkEntry.queries(name)
-          val times = (1 to iters).map { _ =>
-            val t0 = System.nanoTime()
-            try {
-              fn(spark, out).write.format("noop").mode("overwrite").save()
-              (System.nanoTime() - t0) / 1e9
-            } catch { case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[bench] sf1 $name FAILED: ${e.getMessage}"); -1.0
-            }
-          }
+          val times = Seq.fill(iters)(Gates.run(spark, "bench sf1", name, out))
           spark.catalog.clearCache()
-          name -> (if (times.contains(-1.0)) -1.0 else times.min)
+          name -> Gates.best(times)
         }
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] sf1 tier build FAILED: ${e.getMessage}")
@@ -333,7 +257,7 @@ object Bench {
     // 1.79× bucketed ratio read 3.0× under the driver's own re-run):
     // per gate, SPARK_GRAFT_SF1_CHILDREN child JVMs (default 2), each
     // timing max(iters, SPARK_GRAFT_SF1_ITERS=5) iterations under the
-    // pinned childHeap, behind a parent releaseAll+gc and a lake
+    // pinned childHeap, behind a parent Gates.release + gc and a lake
     // page-cache prewarm. The published cell is the pooled min (both
     // engines are min-of-iters warm); the pooled MEDIAN rides along in
     // a *_median sibling so a noisy campaign is visible inside the
@@ -346,7 +270,7 @@ object Bench {
     }
     // per gate: (pooled min, pooled median) across all children × iters
     def freshTier(gates: Seq[String], dir: String): Seq[(String, Double, Double)] = {
-      releaseAll(gc = true)
+      Gates.release(spark, gc = true)
       prewarm(dir)
       gates.flatMap { name =>
         // budget, checked per gate just before spending the time: drop
@@ -478,9 +402,6 @@ object Bench {
     // four fact⋈fact gates, so the aggregate "within 2×" claim rested
     // on the warm tier for q1/q5/q6 — q1/q6 are single-scan shapes the
     // layout can't speed up, which is itself worth recording)
-    val bucketGates = Seq("q1_pricing_summary", "q3_top_orders",
-      "q5_region_revenue", "q6_forecast_revenue", "q12_ship_mode",
-      "q18_large_orders", "q21_waiting_orders")
     val sf1BDir = "/tmp/graft_bench_sf1b"
     var sf1BucketBuild = -1.0
     val sf1BucketedSkip = sf1.nonEmpty && remaining() < 300
@@ -490,19 +411,10 @@ object Bench {
       graft.tools.Sf1Lakes.buildBucketed(spark, "/tmp/graft_bench_sf1", sf1BDir,
         graft.tools.Sf1Lakes.defaultBuckets)
       sf1BucketBuild = (System.nanoTime() - tb0) / 1e9
-      bucketGates.map { name =>
-        val fn = SparkEntry.queries(name)
-        val times = (1 to iters).map { _ =>
-          val t0 = System.nanoTime()
-          try {
-            fn(spark, sf1BDir).write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          } catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] sf1_bucketed $name FAILED: ${e.getMessage}"); -1.0
-          }
-        }
+      headliners.map { name =>
+        val times = Seq.fill(iters)(Gates.run(spark, "bench sf1_bucketed", name, sf1BDir))
         spark.catalog.clearCache()
-        name -> (if (times.contains(-1.0)) -1.0 else times.min)
+        name -> Gates.best(times)
       }
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] sf1 bucketed tier build FAILED: ${e.getMessage}")
@@ -530,8 +442,8 @@ object Bench {
         (math.round(100.0 * pairs.map(_._1).sum / pairs.map(_._2).sum) / 100.0).toString
       else "null"
     }
-    val sf1BucketedRatio = tierRatio(sf1BucketedFresh, bucketGates.size)
-    val sf1BucketedRatioMed = tierRatio(sf1BucketedFreshMed, bucketGates.size)
+    val sf1BucketedRatio = tierRatio(sf1BucketedFresh, headliners.size)
+    val sf1BucketedRatioMed = tierRatio(sf1BucketedFreshMed, headliners.size)
     val sf1RatioMed = tierRatio(sf1FreshMed, sf1FreshMed.size.max(1))
     val ok = results.values.filter(_ >= 0.0)
     val total = if (results.values.exists(_ < 0.0)) -1.0 else ok.sum

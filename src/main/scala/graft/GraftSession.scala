@@ -10,15 +10,26 @@ import org.apache.spark.sql.SparkSession
   * actual parallelism instead of Spark's default 200.
   */
 object GraftSession {
-  def cores: Int = Runtime.getRuntime.availableProcessors().min(32)
+  /** Local parallelism: `SPARK_GRAFT_CPUS` when set, else the machine's
+    * cores capped at 32. A value that is not a positive integer throws
+    * rather than silently falling back to the core count.
+    */
+  def cores: Int = coresFrom(sys.env.get("SPARK_GRAFT_CPUS"))
 
-  def builder(appName: String = "graft", master: String = s"local[$cores]"): SparkSession.Builder =
-    SparkSession
+  private[graft] def coresFrom(env: Option[String]): Int = env match {
+    case None => Runtime.getRuntime.availableProcessors().min(32)
+    case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
+
+  def get(appName: String = "graft"): SparkSession = {
+    val n = cores
+    val spark = SparkSession
       .builder()
       .withExtensions(new GraftExtensions)
       .appName(appName)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cores.toString)
+      .master(s"local[$n]")
+      .config("spark.sql.shuffle.partitions", n.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -32,9 +43,7 @@ object GraftSession {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.ui.enabled", "false")
-
-  def get(appName: String = "graft"): SparkSession = {
-    val spark = builder(appName).getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

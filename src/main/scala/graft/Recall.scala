@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.VecFns
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ANN recall artifact (`runMain graft.Recall [sfDir] [nQueries]`):
@@ -43,19 +43,7 @@ object Recall {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val ivfC = sys.env.getOrElse("SPARK_GRAFT_RECALL_IVF_C", "10").toInt
     val knnPlanes = sys.env.getOrElse("SPARK_GRAFT_RECALL_KNN_PLANES", "4").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().min(32).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get("recall")
     import spark.implicits._
 
     val k = 10

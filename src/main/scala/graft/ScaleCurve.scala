@@ -38,8 +38,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleCurve {
 
-  /** Replicated-lake builder shared by the curve and the diagnosis
-    * probes (tools.CcProbe) so every tier measurement reads the SAME
+  /** Replicated-lake builder: every tier measurement reads the SAME
     * lake recipe. See the class doc for why each table replicates the
     * way it does. One KNOWN wrinkle, deliberate and bounded: the doc
     * Caesar key is (r mod 26, (r div 26) mod 10), so a document with
@@ -188,19 +187,7 @@ object ScaleCurve {
         "ann_ivf_sq8_persisted", // expands to _build/_query split cells
         "ann_ivf_sq8_append", // fixed-size delta onto the tier's built index
         "ann_knn_join_scaled", "emb_knn_components_scaled"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().min(32).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get("scalecurve")
     val base = "/root/testdata/sf0.1"
     val t = Tables(spark, base)
     // SPARK_GRAFT_CURVE_FRESH=1 selects the GROWING-CARDINALITY lake
@@ -212,33 +199,17 @@ object ScaleCurve {
     def buildLake(replicas: Int, out: String): Unit =
       ScaleCurve.buildLake(spark, t, replicas, out, freshAttrs)
 
-    // release EVERYTHING a gate pinned: persisted frames, the cache
-    // ledger, and localCheckpoint blocks (which clearCache does NOT
-    // drop — round-9 lesson: 74 GB of checkpoint debris accumulated
-    // and inflated every later tier's timing, a systematic bias toward
-    // phantom superlinearity since higher tiers time later)
-    def releaseAll(): Unit = {
-      graft.operators.CacheLedger.release()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(r => try r.unpersist(blocking = true) catch { case _: Throwable => () })
-      System.gc()
-    }
+    // release EVERYTHING a gate pinned, with a gc, before every timed
+    // run — localCheckpoint blocks included (round-9 lesson: 74 GB of
+    // checkpoint debris accumulated and inflated every later tier's
+    // timing, a systematic bias toward phantom superlinearity since
+    // higher tiers time later)
+    def releaseAll(): Unit = Gates.release(spark, gc = true)
 
     def time(name: String, dir: String): Double = {
-      val fn = SparkEntry.queries(name)
-      val times = (1 to iters).map { _ =>
-        releaseAll()
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[curve] $name @ $dir FAILED: ${e.getMessage}"); -1.0
-        }
-      }
+      val times = Seq.fill(iters) { releaseAll(); Gates.run(spark, s"curve $dir", name, dir) }
       releaseAll()
-      if (times.contains(-1.0)) -1.0 else times.min
+      Gates.best(times)
     }
 
     val dirs: Seq[(String, String)] = ("sf0.1" -> base) +: tiers.map { r =>
@@ -255,12 +226,7 @@ object ScaleCurve {
       s"x$r" -> out
     }
     // warm codegen once per gate at the smallest SF
-    gates.foreach { g =>
-      try SparkEntry.queries(g)(spark, "/root/testdata/sf0.001")
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    spark.catalog.clearCache()
+    Gates.warm(spark, gates, "/root/testdata/sf0.001")
     // declared tier policy. dedup_minhash_lsh's ≤10× cap is LIFTED in
     // r15 (judge ask #7): the exact-set collapse runs banding + verify
     // over one representative per distinct token set, so the plan's

@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().min(32).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // micros-lake variant: naive parquet timestamps read as TIMESTAMP
-      // (session is UTC, so instants are identical) — keeps filter
-      // pushdown on date columns instead of a plan-side NTZ cast
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get("verify")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=q1,q2 restricts the dump (iteration aid,
     // mirrors Bench's SPARK_GRAFT_BENCH_ONLY); unset = all queries.
@@ -41,8 +26,7 @@ object Verify {
       // and cannot unpersist their own intermediates) — and sweep the
       // gate's scratch dirs (index artifacts, stream sinks): the
       // result is already on disk, so nothing still reads them
-      graft.operators.CacheLedger.release()
-      spark.catalog.clearCache()
+      Gates.release(spark, gc = false)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -106,15 +106,6 @@ object BlockedMatch {
     * provably already connected, so the component structure — and any
     * gate output built from it — is unchanged.
     */
-  /** Probe-loop tallies (read by tools.LevProbe): total inner-loop
-    * iterations and verifier calls across a stage. LongAdder — a
-    * couple of ns per striped increment, noise against the find()+
-    * verify work each iteration already does, and the observability
-    * is what adjudicated the r16 loop rebuild.
-    */
-  private[graft] val iterCount = new java.util.concurrent.atomic.LongAdder
-  private[graft] val levCount = new java.util.concurrent.atomic.LongAdder
-
   /** Members-per-block threshold above which a block leaves the
     * sequential union-find loop for the chunked distributed verify
     * ([[levBigBlockPairs]]). 4096²/2 ≈ 8.4M probes is a comfortable
@@ -201,12 +192,8 @@ object BlockedMatch {
           val sj = strs(j)
           var i = j - 1
           while (i >= 0 && comps > 1 && lj - lens(i) <= maxDist) {
-            BlockedMatch.iterCount.increment()
             val ri = find(i)
-            if (ri != j && {
-              BlockedMatch.levCount.increment()
-              levWithin(strs(i), sj, maxDist)
-            }) {
+            if (ri != j && levWithin(strs(i), sj, maxDist)) {
               parent(ri) = j
               comps -= 1
             }

@@ -444,7 +444,7 @@ object Dedup {
     * fractional part r/10⁶ stays ≥ one ulp away from 1 — true for all
     * n < ~10⁹ tokens/doc, far past any real document.
     */
-  private[graft] def ceilTau(n: Column, tau: Double): Column = {
+  private def ceilTau(n: Column, tau: Double): Column = {
     val num = math.round(tau * 1e6)
     floor((n.cast("long") * lit(num) + lit(999999L)) / lit(1000000L)).cast("long")
   }
@@ -558,7 +558,7 @@ object Dedup {
     * post-materialization call; Spark's ContextCleaner reclaims the
     * blocks once the DataFrame is GC'd.
     */
-  private[graft] def bandSignatures(df: DataFrame, idCol: String, textCol: String,
+  private def bandSignatures(df: DataFrame, idCol: String, textCol: String,
                                     perms: Int, bands: Int): DataFrame = {
     require(perms % bands == 0,
       s"perms ($perms) must be divisible by bands ($bands) — trailing permutations would be paid for but never banded")

@@ -10,10 +10,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val gates = args(1).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().min(32).toString)
-    val spark = graft.GraftSession.builder("plandump", s"local[$cpus]").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.get("plandump")
     gates.foreach { g =>
       println(s"===== $g @ $dir =====")
       val df = graft.SparkEntry.queries(g)(spark, dir)

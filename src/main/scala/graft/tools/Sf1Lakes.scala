@@ -69,10 +69,7 @@ object Sf1Lakes {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val flat = args.lift(1).getOrElse("/tmp/graft_bench_sf1")
     val bucketed = args.lift(2).getOrElse("/tmp/graft_bench_sf1b")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().min(32).toString)
-    val spark = graft.GraftSession.builder("sf1lakes", s"local[$cpus]").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.get("sf1lakes")
     buildFlat(spark, sfDir, flat)
     buildBucketed(spark, flat, bucketed, defaultBuckets)
     println(s"[sf1lakes] flat=$flat bucketed=$bucketed")

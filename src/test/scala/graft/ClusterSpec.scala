@@ -44,7 +44,7 @@ class ClusterSpec extends GraftSuite {
       (for (a <- 100L to 107L; b <- (a + 1) to 107L) yield (a, b)) ++
       (for (a <- 900L to 905L; b <- (a + 1) to 905L) yield (a, b)) ++
       Seq((5000L, 7000L), (7000L, 7001L), (42000L, 42001L))
-    val pairs = scala.util.Random.shuffle(es).toDF("id_a", "id_b")
+    val pairs = new scala.util.Random(17).shuffle(es).toDF("id_a", "id_b")
     val fast = ClusterDedup.connectedComponents(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq
     spark.conf.set("spark.graft.cc.localMaxPairs", "0")

@@ -89,13 +89,17 @@ class GraphSpec extends GraftSuite {
   test("label-prop single-task fast path is bit-identical to the distributed loop") {
     // community structure with genuine tie-breaks: two triangles
     // bridged by one edge (border nodes see 1-vs-1 label ties every
-    // round), a star, and a 4-cycle (bipartite oscillation)
+    // round), a star, and a 4-cycle (bipartite oscillation). In round 1
+    // "m" ties "Ａ" (U+FF21) against "😀" (U+1F600): UTF-16 orders the
+    // surrogate pair first, unsigned UTF-8 (Spark's string order) orders
+    // "Ａ" first, so the single-task tie-break must compare UTF-8 bytes
     val es = Seq(
       ("a", "b"), ("b", "c"), ("a", "c"),
       ("x", "y"), ("y", "z"), ("x", "z"), ("c", "x"),
       ("h", "h1"), ("h", "h2"), ("h", "h3"), ("h", "h4"),
-      ("p", "q"), ("q", "r"), ("r", "s"), ("s", "p"))
-    val edges = scala.util.Random.shuffle(es).toDF("src", "dst")
+      ("p", "q"), ("q", "r"), ("r", "s"), ("s", "p"),
+      ("m", "Ａ"), ("m", "😀"))
+    val edges = new scala.util.Random(17).shuffle(es).toDF("src", "dst")
     def run(rounds: Int) = LabelProp.run(edges, rounds)
       .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
     for (rounds <- Seq(1, 3)) {
