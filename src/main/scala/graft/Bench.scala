@@ -403,14 +403,16 @@ object Bench {
     // on the warm tier for q1/q5/q6 — q1/q6 are single-scan shapes the
     // layout can't speed up, which is itself worth recording)
     val sf1BDir = "/tmp/graft_bench_sf1b"
-    var sf1BucketBuild = -1.0
+    // None: the tier did not run (written as null); -1.0: its build failed
+    var sf1BucketBuild: Option[Double] = None
     val sf1BucketedSkip = sf1.nonEmpty && remaining() < 300
     if (sf1BucketedSkip) trimmed += "sf1_bucketed_tier"
     val sf1Bucketed: Seq[(String, Double)] = if (sf1.isEmpty || sf1BucketedSkip) Seq.empty else try {
       val tb0 = System.nanoTime()
+      sf1BucketBuild = Some(-1.0) // until the build returns
       graft.tools.Sf1Lakes.buildBucketed(spark, "/tmp/graft_bench_sf1", sf1BDir,
         graft.tools.Sf1Lakes.defaultBuckets)
-      sf1BucketBuild = (System.nanoTime() - tb0) / 1e9
+      sf1BucketBuild = Some((System.nanoTime() - tb0) / 1e9)
       headliners.map { name =>
         val times = Seq.fill(iters)(Gates.run(spark, "bench sf1_bucketed", name, sf1BDir))
         spark.catalog.clearCache()
@@ -476,7 +478,7 @@ object Bench {
         .mkString(""","alltimes":{""", ",", "}")
     else ""
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$allJ,"isolated":$iso,"battery_vs_isolated":$agreeJ,"notes":"$notes","fresh":$fr,"sf1_headliners":$sf1J,"sf1_headliners_fresh":$sf1FreshJ,"sf1_headliners_fresh_median":${jmap(sf1FreshMed)},"sf1_oracle":$sf1OracleJ,"sf1_spark_fresh_over_oracle":$sf1Ratio,"sf1_spark_fresh_over_oracle_median":$sf1RatioMed,""" +
-      s""""sf1_bucketed":${jmap(sf1Bucketed)},"sf1_bucketed_fresh":${jmap(sf1BucketedFresh)},"sf1_bucketed_fresh_median":${jmap(sf1BucketedFreshMed)},"sf1_bucketed_build_sec":${f4(sf1BucketBuild)},"sf1_layout_dividend_fresh":${sf1Dividend.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")},"sf1_bucketed_fresh_over_oracle":$sf1BucketedRatio,"sf1_bucketed_fresh_over_oracle_median":$sf1BucketedRatioMed,""" +
+      s""""sf1_bucketed":${jmap(sf1Bucketed)},"sf1_bucketed_fresh":${jmap(sf1BucketedFresh)},"sf1_bucketed_fresh_median":${jmap(sf1BucketedFreshMed)},"sf1_bucketed_build_sec":${sf1BucketBuild.fold("null")(f4)},"sf1_layout_dividend_fresh":${sf1Dividend.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")},"sf1_bucketed_fresh_over_oracle":$sf1BucketedRatio,"sf1_bucketed_fresh_over_oracle_median":$sf1BucketedRatioMed,""" +
       s""""sf1_fresh_protocol":"$sf1Children child JVMs x $sf1ChildIters iters per gate, child heap pinned -Xmx$childHeap (parent flags stripped), parent releaseAll+gc then lake prewarmed into page cache before each tier; cell = pooled min (warm discipline, same as oracle), median published alongside; oracle min-of-$oracleIters warm",""" +
       s""""authoritative":"per-gate: isolated where present (top-20 + watchlist, each behind releaseAll+gc), else queries; sf1 tier: sf1_headliners_fresh (child JVM); sf1_bucketed tier: sf1_bucketed_fresh (child JVM, orderkey-bucketed layout, same query code); sf1_oracle: DuckDB min-of-$oracleIters warm on the same lake + same SQL","sf":"$sfDir","iters":$iters,"warmup":"$warmDir"}"""
     println(json)

@@ -1,7 +1,8 @@
 package graft
 
 import graft.functions.VecFns
-import graft.operators.Similarity
+import graft.operators.{AnnSpec, Similarity}
+import graft.operators.AnnSpec.{Exact, Flat, Ivf, IvfScaled, Pq, Sq8}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -96,65 +97,65 @@ object Recall {
           pairs(Similarity.lshTopK(emb, qs, "vec_id", "embedding", k, planes = 2)), cosTruth))),
       "ivf" -> Seq(
         s"c=$ivfC,nprobe=2" -> (() => recallOf(
-          pairs(Similarity.ivfTopK(emb, qs, "vec_id", "embedding", k, ivfC, 2)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 2), Exact, 0))), cosTruth)),
         s"c=$ivfC,nprobe=4" -> (() => recallOf(
-          pairs(Similarity.ivfTopK(emb, qs, "vec_id", "embedding", k, ivfC, 4)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 4), Exact, 0))), cosTruth)),
         s"c=$ivfC,nprobe=8" -> (() => recallOf(
-          pairs(Similarity.ivfTopK(emb, qs, "vec_id", "embedding", k, ivfC, 8)), cosTruth))),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Exact, 0))), cosTruth))),
       "pq" -> Seq(
         "sub=4,cb=8" -> (() => recallOf(
-          pairs(Similarity.pqTopK(emb, qs, "vec_id", "embedding", k, 4, 8)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(4, 8, 0), 0))), cosTruth)),
         "sub=8,cb=16" -> (() => recallOf(
-          pairs(Similarity.pqTopK(emb, qs, "vec_id", "embedding", k, 8, 16)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(8, 16, 0), 0))), cosTruth)),
         "sub=8,cb=32" -> (() => recallOf(
-          pairs(Similarity.pqTopK(emb, qs, "vec_id", "embedding", k, 8, 32)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(8, 32, 0), 0))), cosTruth)),
         "sub=16,cb=32" -> (() => recallOf(
-          pairs(Similarity.pqTopK(emb, qs, "vec_id", "embedding", k, 16, 32)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 32, 0), 0))), cosTruth)),
         "sub=16,cb=64" -> (() => recallOf(
-          pairs(Similarity.pqTopK(emb, qs, "vec_id", "embedding", k, 16, 64)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 64, 0), 0))), cosTruth)),
         // the r11 production tier: ADC shortlist + exact re-rank
         "sub=16,cb=32,rerank=2x" -> (() => recallOf(
-          pairs(Similarity.pqRerankTopK(emb, qs, "vec_id", "embedding", k, 16, 32, 2)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 32, 0), 2))), cosTruth)),
         "sub=16,cb=32,rerank=4x" -> (() => recallOf(
-          pairs(Similarity.pqRerankTopK(emb, qs, "vec_id", "embedding", k, 16, 32, 4)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 32, 0), 4))), cosTruth)),
         "sub=16,cb=32,rerank=8x" -> (() => recallOf(
-          pairs(Similarity.pqRerankTopK(emb, qs, "vec_id", "embedding", k, 16, 32, 8)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 32, 0), 8))), cosTruth)),
         // trained codebooks (2 Lloyd rounds per subspace) — the
         // quantization-quality half of the production recovery
         "sub=16,cb=32,trained=2it" -> (() => recallOf(
-          pairs(Similarity.pqTrainedTopK(emb, qs, "vec_id", "embedding", k, 16, 32, 2)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 32, 2), 0))), cosTruth)),
         "sub=16,cb=32,trained=2it,rerank=4x" -> (() => recallOf(
-          pairs(Similarity.pqTrainedRerankTopK(emb, qs, "vec_id", "embedding", k, 16, 32, 2, 4)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 32, 2), 4))), cosTruth)),
         // the SCALED operating points (r12): at 200k vectors the sf-tier
         // default (cb=32, 4x over-fetch) collapses to 0.44 — corpus
         // density shrinks the ADC rank margin, so codebook size and the
         // exact-re-rank fetch factor must grow with n. The re-rank cost
         // stays fetch·k exact rows per query — noise next to the code scan.
         "sub=16,cb=64,trained=2it,rerank=8x" -> (() => recallOf(
-          pairs(Similarity.pqTrainedRerankTopK(emb, qs, "vec_id", "embedding", k, 16, 64, 2, 8)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 64, 2), 8))), cosTruth)),
         "sub=16,cb=64,trained=2it,rerank=16x" -> (() => recallOf(
-          pairs(Similarity.pqTrainedRerankTopK(emb, qs, "vec_id", "embedding", k, 16, 64, 2, 16)), cosTruth))),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 64, 2), 16))), cosTruth))),
       "ivf_pq" -> Seq(
         s"c=$ivfC,np=4,sub=4,cb=8" -> (() => recallOf(
-          pairs(Similarity.ivfPqTopK(emb, qs, "vec_id", "embedding", k, ivfC, 4, 4, 8)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 4), Pq(4, 8, 0), 0))), cosTruth)),
         s"c=$ivfC,np=8,sub=8,cb=16" -> (() => recallOf(
-          pairs(Similarity.ivfPqTopK(emb, qs, "vec_id", "embedding", k, ivfC, 8, 8, 16)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(8, 16, 0), 0))), cosTruth)),
         s"c=$ivfC,np=8,sub=16,cb=32" -> (() => recallOf(
-          pairs(Similarity.ivfPqTopK(emb, qs, "vec_id", "embedding", k, ivfC, 8, 16, 32)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 0), 0))), cosTruth)),
         s"c=$ivfC,np=8,sub=16,cb=64" -> (() => recallOf(
-          pairs(Similarity.ivfPqTopK(emb, qs, "vec_id", "embedding", k, ivfC, 8, 16, 64)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(16, 64, 0), 0))), cosTruth)),
         s"c=$ivfC,np=8,sub=16,cb=32,rerank=2x" -> (() => recallOf(
-          pairs(Similarity.ivfPqRerankTopK(emb, qs, "vec_id", "embedding", k, ivfC, 8, 16, 32, 2)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 0), 2))), cosTruth)),
         s"c=$ivfC,np=8,sub=16,cb=32,rerank=4x" -> (() => recallOf(
-          pairs(Similarity.ivfPqRerankTopK(emb, qs, "vec_id", "embedding", k, ivfC, 8, 16, 32, 4)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 0), 4))), cosTruth)),
         s"c=$ivfC,np=8,sub=16,cb=32,rerank=8x" -> (() => recallOf(
-          pairs(Similarity.ivfPqRerankTopK(emb, qs, "vec_id", "embedding", k, ivfC, 8, 16, 32, 8)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 0), 8))), cosTruth)),
         s"c=$ivfC,np=8,sub=16,cb=32,trained=2it,rerank=4x" -> (() => recallOf(
-          pairs(Similarity.ivfPqTrainedRerankTopK(emb, qs, "vec_id", "embedding", k, ivfC, 8, 16, 32, 2, 4)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 2), 4))), cosTruth)),
         s"c=$ivfC,np=8,sub=16,cb=64,trained=2it,rerank=8x" -> (() => recallOf(
-          pairs(Similarity.ivfPqTrainedRerankTopK(emb, qs, "vec_id", "embedding", k, ivfC, 8, 16, 64, 2, 8)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(16, 64, 2), 8))), cosTruth)),
         s"c=$ivfC,np=8,sub=16,cb=64,trained=2it,rerank=16x" -> (() => recallOf(
-          pairs(Similarity.ivfPqTrainedRerankTopK(emb, qs, "vec_id", "embedding", k, ivfC, 8, 16, 64, 2, 16)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(16, 64, 2), 16))), cosTruth)),
         // the r13 SCALED gate's operating point: every knob derived
         // from the corpus count (c = ceil-isqrt ≥ 10, np = max(8, c/16))
         // or pinned at its measured big-corpus value (cb=64, 16× fetch)
@@ -163,8 +164,7 @@ object Recall {
         "scaled:c=isqrt(n),np=c/16,sub=16,cb=64,trained=2it,rerank=16x" -> (() => {
           val c = Similarity.scaledCentroids(nVec)
           val np = Similarity.scaledNprobe(c)
-          recallOf(pairs(Similarity.ivfPqTrainedRerankScaledTopK(
-            emb, qs, "vec_id", "embedding", k, c, np, 16, 64, 2, 16)), cosTruth)
+          recallOf(pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(IvfScaled(c, np), Pq(16, 64, 2), 16))), cosTruth)
         })),
       // SQ8 (r13): codebook-free scalar quantization — like PQ it
       // scans every code (memory tier, not candidate pruning), but at
@@ -172,9 +172,9 @@ object Recall {
       // recall should sit near 1.0 at any corpus density
       "sq8" -> Seq(
         "raw" -> (() => recallOf(
-          pairs(Similarity.sq8TopK(emb, qs, "vec_id", "embedding", k)), cosTruth)),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Sq8, 0))), cosTruth)),
         "rerank=8x" -> (() => recallOf(
-          pairs(Similarity.sq8RerankTopK(emb, qs, "vec_id", "embedding", k, 8)), cosTruth))),
+          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Sq8, 8))), cosTruth))),
       // IVF+SQ8 (r14): the FAISS IVFSQ composition — coarse lists
       // prune to the scaled ~1/16 scan fraction, SQ8 codes score only
       // the probed lists; recall should track flat SQ8 (the per-dim
@@ -183,13 +183,11 @@ object Recall {
       "ivf_sq8" -> Seq(
         "scaled:c=isqrt(n),np=c/16,rerank=4x" -> (() => {
           val c = Similarity.scaledCentroids(nVec)
-          recallOf(pairs(Similarity.ivfSq8RerankScaledTopK(
-            emb, qs, "vec_id", "embedding", k, c, Similarity.scaledNprobe(c), 4)), cosTruth)
+          recallOf(pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(IvfScaled(c, Similarity.scaledNprobe(c)), Sq8, 4))), cosTruth)
         }),
         "scaled:c=isqrt(n),np=c/16,rerank=8x" -> (() => {
           val c = Similarity.scaledCentroids(nVec)
-          recallOf(pairs(Similarity.ivfSq8RerankScaledTopK(
-            emb, qs, "vec_id", "embedding", k, c, Similarity.scaledNprobe(c), 8)), cosTruth)
+          recallOf(pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(IvfScaled(c, Similarity.scaledNprobe(c)), Sq8, 8))), cosTruth)
         }),
         // persisted-index A/B (r16, judge r15 ask #3): seeded
         // (first-N-by-id, the gate recipe) vs trained (2 Lloyd rounds
@@ -246,20 +244,22 @@ object Recall {
     val costThunks: Map[String, () => Long] = Map(
       "brute" -> (() => nq * (nVec - 1)),
       "lsh" -> (() => Similarity.lshCandidateCount(emb, qs, "vec_id", "embedding", planes = 2)),
-      "ivf" -> (() => Similarity.ivfCandidateCount(emb, qs, "vec_id", "embedding", ivfC, 8)),
+      "ivf" -> (() => Similarity.candidateCount(emb, qs, "vec_id", "embedding",
+        AnnSpec(Ivf(ivfC, 8), Exact, 0))),
       "pq" -> (() => nq * (nVec - 1)),
       "sq8" -> (() => nq * (nVec - 1)),
-      "ivf_pq" -> (() => Similarity.ivfCandidateCount(emb, qs, "vec_id", "embedding", ivfC, 8)),
+      "ivf_pq" -> (() => Similarity.candidateCount(emb, qs, "vec_id", "embedding",
+        AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 2), 4))),
       "ivf_pq_scaled" -> (() => {
         val c = Similarity.scaledCentroids(nVec)
-        Similarity.ivfCandidateCount(emb, qs, "vec_id", "embedding", c,
-          Similarity.scaledNprobe(c))
+        Similarity.candidateCount(emb, qs, "vec_id", "embedding",
+          AnnSpec(IvfScaled(c, Similarity.scaledNprobe(c)), Pq(16, 64, 2), 16))
       }),
       // IVF+SQ8 scores every probed-list row once (1 byte/dim codes)
       "ivf_sq8" -> (() => {
         val c = Similarity.scaledCentroids(nVec)
-        Similarity.ivfCandidateCount(emb, qs, "vec_id", "embedding", c,
-          Similarity.scaledNprobe(c))
+        Similarity.candidateCount(emb, qs, "vec_id", "embedding",
+          AnnSpec(IvfScaled(c, Similarity.scaledNprobe(c)), Sq8, 8))
       }),
       "mips" -> (() => Similarity.mipsCandidateCount(emb, qs, "vec_id", "embedding", planes = 2)),
       "graph" -> (() => Similarity.graphVisited(emb, qs, edges10, "vec_id", "embedding", 32, 6).count()))

@@ -1,7 +1,6 @@
 package graft.etl
 
 import graft.Tables
-import org.apache.spark.sql.SparkSession
 
 /** Offline bundle export (SURVEY.md §2.1) — the reference's ZIP
   * download (normalized CSV per file + manifest.json,
@@ -13,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Bundle {
 
-  def write(spark: SparkSession, tables: Tables, names: Seq[String], outDir: String): Unit = {
+  def write(tables: Tables, names: Seq[String], outDir: String): Unit = {
     names.foreach { n =>
       Normalize.writeCanonicalCsv(
         Normalize.sanitizeHeaders(tables.byName(n)), s"$outDir/$n")

@@ -6,7 +6,7 @@ import java.io.{ByteArrayOutputStream, IOException, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Ingestion manifest (SURVEY.md §2.1) — the reference's

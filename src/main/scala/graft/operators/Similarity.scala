@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VecFns
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (SURVEY.md §2.4).
@@ -153,47 +153,160 @@ object Similarity {
         round(col("ip"), 4).as("ip"), col("rk").cast("long").as("rk"))
   }
 
-  /** IVF-style coarse quantization: a deterministic seed set acts as
-    * the coarse centroids (production would run k-means; seeding keeps
-    * plans reproducible). Vectors join their nearest centroid's list;
-    * queries probe the `nprobe` nearest lists.
+  /** Approximate top-k for each query vector (self excluded), composed
+    * from the three stages `spec` names (see [[AnnSpec]]):
+    *
+    *  - coarse tier: Flat scores every vector; the IVF tiers score only
+    *    the vectors in each query's `nprobe` nearest seed lists
+    *    ([[probedPairs]]) — O(n·nprobe/c) candidates instead of n;
+    *  - code: Exact scores raw cosine; Pq scores the asymmetric-distance
+    *    sum over `numSub` one-byte codes per vector ([[pqScores]]), Sq8
+    *    the dot of 8-bit per-dim reconstructions ([[sq8Scores]]) — at
+    *    100 TB the scan reads the code table, never the vectors;
+    *  - rerank: `rerank > 0` keeps rerank·k code-ranked rows per query
+    *    and ranks them by exact cosine ([[exactRerank]]) — the recall
+    *    recovery of every production quantized index.
+    *
+    * Every stage is deterministic (first-N-by-id seeds, ties by id,
+    * 2²⁰-integer partial sums), so the DuckDB oracle replays each
+    * composition bit-for-bit. Every tier ends in the same per-partition
+    * bounded top-k plus global merge (the GroupTopK tier). Output
+    * (q_id, neighbor_id, score, rk), the score named by the last
+    * ranking stage: `cosine` (Exact or re-ranked), `adc` (Pq) or `sq8`.
     */
-  def ivfTopK(vectors: DataFrame, queries: DataFrame,
-              idCol: String, vecCol: String, k: Int,
-              numCentroids: Int = 10, nprobe: Int = 8): DataFrame = {
-    val v = vectors.select(col(idCol).as("id"), col(vecCol).as("v"),
-      VecFns.norm(col(vecCol)).as("nrm"))
-    // first-N-by-id seed set: non-empty for any id distribution
-    // (id % N == 0 selected nothing when ids are sparse/offset)
-    val cents = vectors.orderBy(col(idCol)).limit(numCentroids)
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_v"))
-    // assign each vector to its nearest centroid (max cosine, tie by c_id)
-    val assigned = TopK(
-      v.crossJoin(broadcast(cents))
-        .withColumn("c_cos", VecFns.cosine(col("v"), col("c_v"))),
-      Seq(col("id")), Seq(col("c_cos").desc, col("c_id")), 1)
-      .select(col("id"), col("v"), col("nrm"), col("c_id").as("cluster"))
-    // queries probe nprobe nearest clusters
-    val probes = TopK(
-      queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"),
-          VecFns.norm(col(vecCol)).as("q_nrm"))
-        .crossJoin(broadcast(cents))
-        .withColumn("c_cos", VecFns.cosine(col("q_v"), col("c_v"))),
-      Seq(col("q_id")), Seq(col("c_cos").desc, col("c_id")), nprobe)
-      .select(col("q_id"), col("q_v"), col("q_nrm"), col("c_id").as("cluster"))
-    val scored = assigned.join(broadcast(probes), "cluster")
-      .filter(col("id") =!= col("q_id"))
-      .withColumn("cos", VecFns.cosinePrenormed(
-        VecFns.dot(col("v"), col("q_v")), col("nrm"), col("q_nrm")))
-    TopK(scored, Seq(col("q_id")), Seq(col("cos").desc, col("id")), k)
-      .select(col("q_id"), col("id").as("neighbor_id"),
-        round(col("cos"), 4).as("cosine"), col("rk").cast("long").as("rk"))
+  def annTopK(vectors: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+              k: Int, spec: AnnSpec): DataFrame = {
+    val (v, q, lists) = coarseTier(vectors, queries, idCol, vecCol, spec)
+    val (scored, out) = spec.code match {
+      case AnnSpec.Exact =>
+        // the candidate pairs carry both vectors: scoring needs no join back
+        val vx = v.withColumn("nrm", VecFns.norm(col("v")))
+        val qx = q.withColumn("q_nrm", VecFns.norm(col("q_v")))
+        (lists.fold(vx.crossJoin(broadcast(qx)).filter(notSelf))(_(vx, qx))
+          .withColumn("score", VecFns.cosinePrenormed(
+            VecFns.dot(col("v"), col("q_v")), col("nrm"), col("q_nrm"))),
+          round(col("score"), 4).as("cosine"))
+      case pq: AnnSpec.Pq => (pqScores(v, q, lists, pq), unquantized.as("adc"))
+      case AnnSpec.Sq8 => (sq8Scores(v, q, lists), unquantized.as("sq8"))
+    }
+    if (spec.rerank <= 0) ranked(scored, k, out)
+    else exactRerank(vectors, queries, idCol, vecCol, k, ranked(scored, k * spec.rerank, out))
   }
+
+  /** Scored-candidate count of [[annTopK]] at `spec` — the COST side of
+    * the recall/cost trade `RECALL_r{N}.json` records: the pairs its
+    * coarse tier hands the code stage, counted instead of scored.
+    */
+  private[graft] def candidateCount(vectors: DataFrame, queries: DataFrame,
+                                    idCol: String, vecCol: String, spec: AnnSpec): Long = {
+    val (v, q, lists) = coarseTier(vectors, queries, idCol, vecCol, spec)
+    lists.fold(v.crossJoin(broadcast(q)).filter(notSelf))(_(v, q)).count()
+  }
+
+  /** (`prefix`id, `prefix`v) projection of an input frame; SQ8 scores
+    * double vectors, every other code the column as stored.
+    */
+  private def project(df: DataFrame, idCol: String, vecCol: String, prefix: String,
+                      toDouble: Boolean): DataFrame =
+    df.select(col(idCol).as(prefix + "id"),
+      (if (toDouble) col(vecCol).cast("array<double>") else col(vecCol)).as(prefix + "v"))
+
+  private val notSelf: Column = col("id") =!= col("q_id")
+
+  /** Candidate (id, q_id) pairs of a coarse tier, carrying every column
+    * of the corpus side (id, v, …) and the query side (q_id, q_v, …).
+    */
+  private type Pairs = (DataFrame, DataFrame) => DataFrame
+
+  /** The corpus frame (id, v), the query frame (q_id, q_v) and the
+    * coarse stage: `None` for Flat. The scaled tier is sized for a c
+    * that grows with n, so its corpus frame is [[widen]]ed once and
+    * persisted: seeds, assignment, training and encoding all read it.
+    */
+  private def coarseTier(vectors: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+                         spec: AnnSpec): (DataFrame, DataFrame, Option[Pairs]) = {
+    val sq8 = spec.code == AnnSpec.Sq8
+    val v = project(vectors, idCol, vecCol, "", sq8)
+    val q = project(queries, idCol, vecCol, "q_", sq8)
+    spec.coarse match {
+      case AnnSpec.Flat => (v, q, None)
+      case AnnSpec.Ivf(c, np) => (v, q, Some(probedPairs(seeds(v, "id", "v", c), np, scaled = false)))
+      case AnnSpec.IvfScaled(c, np) =>
+        val vw = CacheLedger.persist(widen(v))
+        (vw, q, Some(probedPairs(seeds(vw, "id", "v", c), np, scaled = true)))
+    }
+  }
+
+  /** Deterministic seed set (c_id, c_v): the first `n` rows by id —
+    * non-empty for any id distribution (id % N == 0 selected nothing
+    * when ids are sparse/offset). Seeds the IVF lists, the PQ
+    * codebooks and the k-means fits alike.
+    */
+  private def seeds(df: DataFrame, idCol: String, vecCol: String, n: Int): DataFrame =
+    df.orderBy(col(idCol)).limit(n).select(col(idCol).as("c_id"), col(vecCol).as("c_v"))
+
+  /** The coarse assign/probe: each row of `df` (key `key`, vector
+    * `vec`) keeps its columns and gains `cluster`, one row for each of
+    * its `n` best lists among `cents` (c_id, c_v), ties by c_id. The
+    * score is cosine, or — `scaled` — `dot(x, c) / |c|`: the same argmax,
+    * since |x| is constant within each ranking group, for two of the
+    * three dot products per (row, centroid) pair; with c = √n lists the
+    * assign is the one n·√n stage, so its constant matters. Assignment
+    * is `n = 1`; a query's probes are `n = nprobe`.
+    */
+  private def nearestLists(df: DataFrame, key: String, vec: String, cents: DataFrame,
+                           n: Int, scaled: Boolean): DataFrame = {
+    val (c, score) =
+      if (scaled) (cents.withColumn("c_nrm", VecFns.norm(col("c_v"))),
+        VecFns.dot(col(vec), col("c_v")) / col("c_nrm"))
+      else (cents, VecFns.cosine(col(vec), col("c_v")))
+    TopK(df.crossJoin(broadcast(c)).withColumn("c_sc", score),
+      Seq(col(key)), Seq(col("c_sc").desc, col("c_id")), n)
+      .select(df.columns.map(col) :+ col("c_id").as("cluster"): _*)
+  }
+
+  /** IVF candidates: vectors join the lists their query probes. Each
+    * vector sits in exactly one list and each (query, list) probe is
+    * unique, so every (q_id, id) pair appears once — no dedup pass.
+    */
+  private def probedPairs(cents: DataFrame, nprobe: Int, scaled: Boolean): Pairs =
+    (v, q) => nearestLists(v, "id", "v", cents, 1, scaled)
+      .join(broadcast(nearestLists(q, "q_id", "q_v", cents, nprobe, scaled)), "cluster")
+      .filter(notSelf)
+
+  /** A code stage's scan: the corpus-side `codes` (keyed by id) meet
+    * the broadcast query-side `table` (keyed by q_id) on `on` — every
+    * pair under Flat, only the probed pairs under a coarse tier.
+    */
+  private def scan(lists: Option[Pairs], v: DataFrame, q: DataFrame,
+                   codes: DataFrame, table: DataFrame, on: Seq[String]): DataFrame =
+    lists match {
+      case None =>
+        (if (on.isEmpty) codes.crossJoin(broadcast(table))
+         else codes.join(broadcast(table), on)).filter(notSelf)
+      case Some(pairs) =>
+        pairs(v, q).select(col("q_id"), col("id"))
+          .join(codes, "id").join(broadcast(table), "q_id" +: on)
+    }
+
+  /** Partial products quantize to 2²⁰ integers before any sum, so the
+    * reduction is order-independent — a raw double sum would
+    * hash-diverge across partitionings. Error stays < terms·2⁻²⁰.
+    */
+  private val Scale = 1048576.0
+  private val unquantized: Column = col("score").cast("double") / lit(Scale)
+
+  /** The shared tail: per-query top-k by (score desc, id) through the
+    * bounded GroupTopK tier, as (q_id, neighbor_id, out, rk).
+    */
+  private def ranked(scored: DataFrame, k: Int, out: Column): DataFrame =
+    TopK(scored, Seq(col("q_id")), Seq(col("score").desc, col("id")), k)
+      .select(col("q_id"), col("id").as("neighbor_id"), out, col("rk").cast("long").as("rk"))
 
   /** One exact Lloyd iteration over the corpus: assign every vector
     * to its nearest seed centroid (max cosine, ties by centroid id —
-    * the [[ivfTopK]] assignment), then recompute each centroid
-    * component as the mean of its members. The 100 TB shape: the
+    * the IVF tier's [[nearestLists]] assignment), then recompute each
+    * centroid component as the mean of its members ([[clusterMeans]]). The 100 TB shape: the
     * k-vector centroid table broadcasts, assignment is map-side, and
     * the update is ONE aggregation of (cluster, dim) cells — k·d
     * cells however big the corpus. Component values quantize to
@@ -205,13 +318,15 @@ object Similarity {
   def kmeansStep(vectors: DataFrame, idCol: String, vecCol: String,
                  numCentroids: Int): DataFrame = {
     val v = vectors.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val cents = vectors.orderBy(col(idCol)).limit(numCentroids)
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_v"))
-    val assigned = TopK(
-      v.crossJoin(broadcast(cents))
-        .withColumn("c_cos", VecFns.cosine(col("v"), col("c_v"))),
-      Seq(col("id")), Seq(col("c_cos").desc, col("c_id")), 1)
-      .select(col("id"), col("v"), col("c_id").as("cluster"))
+    clusterMeans(nearestLists(v, "id", "v",
+      seeds(vectors, idCol, vecCol, numCentroids), 1, scaled = false))
+  }
+
+  /** The Lloyd update over (id, v, cluster) assignments: per (cluster,
+    * dim) the member count and the mean of e6-quantized components,
+    * as (cluster, dim, n_members, new_c).
+    */
+  private def clusterMeans(assigned: DataFrame): DataFrame =
     assigned
       .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
       .withColumn("x6", round(col("x").cast("double") * 1e6).cast("long"))
@@ -219,7 +334,6 @@ object Similarity {
       .agg(count(lit(1)).as("n_members"), sum(col("x6")).as("sum_e6"))
       .select(col("cluster"), col("dim").cast("long").as("dim"), col("n_members"),
         round(col("sum_e6") / (col("n_members") * 1e6), 6).as("new_c"))
-  }
 
   /** Full Lloyd k-means fit: [[kmeansStep]] iterated. Per iteration
     * the corpus is touched exactly twice (assign, update); the ONLY
@@ -237,25 +351,13 @@ object Similarity {
     val spark = vectors.sparkSession
     import spark.implicits._
     val v = vectors.select(col(idCol).as("id"), col(vecCol).as("v"))
-    var cents = vectors.orderBy(col(idCol)).limit(numCentroids)
-      .select(col(idCol).as("c_id"),
-        expr(s"transform($vecCol, x -> cast(round(cast(x as double) * 1e6) as long))").as("c_q"))
+    var cents = seeds(vectors, idCol, vecCol, numCentroids).select(col("c_id"),
+      expr("transform(c_v, x -> cast(round(cast(x as double) * 1e6) as long))").as("c_q"))
     var out: DataFrame = null
     for (i <- 1 to iters) {
       val cd = cents.select(col("c_id"),
         expr("transform(c_q, q -> cast(q as double) / 1e6)").as("c_v"))
-      val assigned = TopK(
-        v.crossJoin(broadcast(cd))
-          .withColumn("c_cos", VecFns.cosine(col("v"), col("c_v"))),
-        Seq(col("id")), Seq(col("c_cos").desc, col("c_id")), 1)
-        .select(col("id"), col("v"), col("c_id").as("cluster"))
-      out = assigned
-        .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
-        .withColumn("x6", round(col("x").cast("double") * 1e6).cast("long"))
-        .groupBy(col("cluster"), col("dim"))
-        .agg(count(lit(1)).as("n_members"), sum(col("x6")).as("sum_e6"))
-        .select(col("cluster"), col("dim").cast("long").as("dim"), col("n_members"),
-          round(col("sum_e6") / (col("n_members") * 1e6), 6).as("new_c"))
+      out = clusterMeans(nearestLists(v, "id", "v", cd, 1, scaled = false))
       // the final round's means are re-read by every consumer of the
       // returned frame (the trained build evaluates them for the
       // centroid broadcast AND the centroid write) — cache them so the
@@ -280,17 +382,6 @@ object Similarity {
     out
   }
 
-  /** Corpus-wide kNN JOIN — every vector's top-k neighbors (the kNN
-    * graph behind retrieval-augmented dedup, graph clustering and
-    * kNN-LM), not just a query set's. Unlike [[lshTopK]], the probe
-    * side IS the corpus, so nothing broadcasts: vectors bucket by the
-    * compiled hyperplane signature, probes explode to their own
-    * bucket plus all 1-bit flips, and candidates come from a plain
-    * (shuffled) equi-join on the bucket — per-bucket work is
-    * O(|bucket| × |probes in bucket|), never n². The exact-cosine
-    * scoring stays in whole-stage codegen and the final top-k runs
-    * through the native bounded-heap tier.
-    */
   /** Scale-adaptive hyperplane count for [[knnJoin]]: the smallest
     * `p ≥ 4` with `⌈n / targetBucket⌉ ≤ 2^p` — i.e. enough planes to
     * hold mean bucket occupancy at ~`targetBucket`, so the bucket
@@ -336,6 +427,17 @@ object Similarity {
     */
   def scaledNprobe(c: Int, floorNp: Int = 8): Int = math.max(floorNp, c / 16)
 
+  /** Corpus-wide kNN JOIN — every vector's top-k neighbors (the kNN
+    * graph behind retrieval-augmented dedup, graph clustering and
+    * kNN-LM), not just a query set's. Unlike [[lshTopK]], the probe
+    * side IS the corpus, so nothing broadcasts: vectors bucket by the
+    * compiled hyperplane signature, probes explode to their own
+    * bucket plus all 1-bit flips, and candidates come from a plain
+    * (shuffled) equi-join on the bucket — per-bucket work is
+    * O(|bucket| × |probes in bucket|), never n². The exact-cosine
+    * scoring stays in whole-stage codegen and the final top-k runs
+    * through the native bounded-heap tier.
+    */
   def knnJoin(vectors: DataFrame, idCol: String, vecCol: String, k: Int,
               planes: Int = 4): DataFrame = {
     val v = vectors.select(col(idCol).as("id"), col(vecCol).as("v"),
@@ -373,10 +475,6 @@ object Similarity {
   def graphSearch(vectors: DataFrame, queries: DataFrame, edges: DataFrame,
                   idCol: String, vecCol: String,
                   k: Int, beam: Int = 32, hops: Int = 6): DataFrame = {
-    val v = vectors.select(col(idCol).as("node"), col(vecCol).as("nv"),
-      VecFns.norm(col(vecCol)).as("nnrm"))
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"),
-      VecFns.norm(col(vecCol)).as("qnrm"))
     val scored = graphVisitedScored(vectors, queries, edges, idCol, vecCol, beam, hops)
     TopK(scored.filter(col("node") =!= col("q_id")),
       Seq(col("q_id")), Seq(col("cos").desc, col("node")), k)
@@ -467,205 +565,91 @@ object Similarity {
     v.join(broadcast(q), "bucket").filter(col("id") =!= col("q_id")).count()
   }
 
-  /** Scored-candidate count of [[ivfTopK]] (and the coarse tier of
-    * [[ivfPqTopK]]) at an operating point — same seed assignment +
-    * nprobe probing, counting instead of scoring.
-    */
-  private[graft] def ivfCandidateCount(vectors: DataFrame, queries: DataFrame,
-                                       idCol: String, vecCol: String,
-                                       numCentroids: Int, nprobe: Int): Long = {
-    val v = vectors.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val cents = vectors.orderBy(col(idCol)).limit(numCentroids)
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_v"))
-    val assigned = TopK(
-      v.crossJoin(broadcast(cents))
-        .withColumn("c_cos", VecFns.cosine(col("v"), col("c_v"))),
-      Seq(col("id")), Seq(col("c_cos").desc, col("c_id")), 1)
-      .select(col("id"), col("c_id").as("cluster"))
-    val probes = TopK(
-      queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"))
-        .crossJoin(broadcast(cents))
-        .withColumn("c_cos", VecFns.cosine(col("q_v"), col("c_v"))),
-      Seq(col("q_id")), Seq(col("c_cos").desc, col("c_id")), nprobe)
-      .select(col("q_id"), col("c_id").as("cluster"))
-    assigned.join(broadcast(probes), "cluster")
-      .filter(col("id") =!= col("q_id")).count()
-  }
-
-  /** Product-quantization ANN (inner-product PQ with asymmetric
+  /** Product-quantization scores (inner-product PQ with asymmetric
     * distance): the vector space splits into `numSub` subspaces, each
-    * with a `codebook`-entry codebook (deterministic seed set — the
-    * first `codebook` vectors by id, sliced per subspace; production
-    * would k-means per subspace, seeding keeps the plan exactly
-    * replayable by the oracle). Each vector is encoded ONCE as
-    * `numSub` small codes — at 100 TB the scoring scan reads the code
-    * table (numSub bytes/vector, a 64× compression of a 64-float
-    * embedding), never the vectors. A query scores candidates through
-    * its asymmetric-distance table: partial inner products of the
-    * query's subvectors against every codebook entry (queries ×
-    * numSub × codebook rows — bounded, broadcast), joined to the
-    * codes on (subspace, code) and summed per (query, vector).
-    * Partials are floor-quantized to 2^-20 integers before the sum so
-    * the reduction is order-independent — a raw double sum would
-    * hash-diverge across partitionings; the quantized ADC stays a
-    * faithful approximate inner product (error < numSub·2^-20).
-    * Codes/ADC shuffles: one bounded heap pass per stage via the
-    * native GroupTopK tier, the same contract as [[bruteForceTopK]].
+    * with a `codebook`-entry codebook. Each vector is encoded ONCE as
+    * `numSub` small codes — at 100 TB the scan reads the code table
+    * (numSub bytes/vector, a 64× compression of a 64-float embedding),
+    * never the vectors. A query scores candidates through its
+    * asymmetric-distance table: partial inner products of the query's
+    * subvectors against every codebook entry (queries × numSub ×
+    * codebook rows — bounded, broadcast), joined to the codes on
+    * (subspace, code) and summed per (query, vector) as 2²⁰ integers.
+    *
+    * `trainIters = 0` takes the seed set's slices as the codebook and
+    * encodes by max partial inner product over the stored floats;
+    * above 0 the codebook is [[trainedCsub]] and encoding is by min L2
+    * reconstruction over doubles — IP-ADC over an L2-trained
+    * codebook, the standard MIPS-PQ composition.
     */
-  def pqTopK(vectors: DataFrame, queries: DataFrame,
-             idCol: String, vecCol: String, k: Int,
-             numSub: Int = 16, codebook: Int = 32): DataFrame = {
-    val subIdx = sequence(lit(0), lit(numSub - 1))
-    val v = vectors.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val cents = vectors.orderBy(col(idCol)).limit(codebook)
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_v"))
-    val csub = cents.select(col("c_id"), col("c_v"), explode(subIdx).as("m"))
-      .withColumn("sd", expr(s"size(c_v) div $numSub").cast("int"))
-      .withColumn("c_sub", slice(col("c_v"), col("m") * col("sd") + 1, col("sd")))
-      .select(col("c_id"), col("m"), col("c_sub"))
-    val vsub = v.select(col("id"), col("v"), explode(subIdx).as("m"))
-      .withColumn("sd", expr(s"size(v) div $numSub").cast("int"))
-      .withColumn("v_sub", slice(col("v"), col("m") * col("sd") + 1, col("sd")))
-    // encode: nearest codebook entry per (vector, subspace) — max
-    // partial inner product, tie by c_id; bounded heap per group
-    val codes = TopK(
-      vsub.join(broadcast(csub), "m")
-        .withColumn("ip", VecFns.dot(col("v_sub"), col("c_sub"))),
-      Seq(col("id"), col("m")), Seq(col("ip").desc, col("c_id")), 1)
+  private def pqScores(v: DataFrame, q: DataFrame, lists: Option[Pairs],
+                       pq: AnnSpec.Pq): DataFrame = {
+    val trained = pq.trainIters > 0
+    val csub =
+      if (trained) CacheLedger.persist(trainedCsub(v, pq.numSub, pq.codebook, pq.trainIters))
+      else subvectors(seeds(v, "id", "v", pq.codebook), "c_v", "c_sub", pq.numSub, toDouble = false)
+        .select(col("c_id"), col("m"), col("c_sub"))
+    val codes = nearestCode(subvectors(v, "v", "v_sub", pq.numSub, trained), csub, minL2 = trained)
       .select(col("id"), col("m"), col("c_id").as("code"))
     // asymmetric-distance table: the query side of every (m, code) cell
-    val qsub = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"),
-        explode(subIdx).as("m"))
-      .withColumn("sd", expr(s"size(q_v) div $numSub").cast("int"))
-      .withColumn("q_sub", slice(col("q_v"), col("m") * col("sd") + 1, col("sd")))
-    val dt = qsub.join(broadcast(csub), "m")
-      .withColumn("pd",
-        floor(VecFns.dot(col("q_sub"), col("c_sub")) * lit(1048576.0)).cast("long"))
-      .select(col("q_id"), col("m"), col("c_id").as("code"), col("pd"))
-    val scored = codes.join(broadcast(dt), Seq("m", "code"))
-      .filter(col("id") =!= col("q_id"))
+    val dt = subvectors(q, "q_v", "q_sub", pq.numSub, trained)
+      .join(broadcast(csub), "m")
+      .select(col("q_id"), col("m"), col("c_id").as("code"),
+        floor(VecFns.dot(col("q_sub"), col("c_sub")) * lit(Scale)).cast("long").as("pd"))
+    scan(lists, v, q, codes, dt, Seq("m", "code"))
       .groupBy(col("q_id"), col("id"))
-      .agg(sum(col("pd")).as("adcq"))
-      .withColumn("adc", col("adcq").cast("double") / lit(1048576.0))
-    TopK(scored, Seq(col("q_id")), Seq(col("adcq").desc, col("id")), k)
-      .select(col("q_id"), col("id").as("neighbor_id"),
-        col("adc"), col("rk").cast("long").as("rk"))
+      .agg(sum(col("pd")).as("score"))
   }
 
-  /** IVF-PQ: the composed production ANN shape — IVF coarse
-    * clustering prunes the candidate set to the query's `nprobe`
-    * nearest lists (O(n·nprobe/numCentroids) candidates instead of
-    * n), and PQ asymmetric distance scores those candidates from the
-    * compressed code table instead of the raw vectors. At 100 TB this
-    * is the only memory-feasible layout: the index artifact is
-    * (cluster, codes) — a few bytes per vector — and a query touches
-    * `nprobe` clusters' codes plus one broadcast ADC table. Both
-    * stages reuse the deterministic seed constructions of [[ivfTopK]]
-    * and [[pqTopK]], so the whole composition stays exactly
-    * oracle-replayable.
+  /** Subvector slicing: one row per (row of `df`, subspace m) with
+    * `out` = the m-th of `numSub` equal slices of `vec` — as stored, or
+    * cast to double.
     */
-  def ivfPqTopK(vectors: DataFrame, queries: DataFrame,
-                idCol: String, vecCol: String, k: Int,
-                numCentroids: Int = 10, nprobe: Int = 8,
-                numSub: Int = 16, codebook: Int = 32): DataFrame = {
-    val v = vectors.select(col(idCol).as("id"), col(vecCol).as("v"))
-    // ---- coarse tier (as ivfTopK) ----
-    val cents = vectors.orderBy(col(idCol)).limit(numCentroids)
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_v"))
-    val assigned = TopK(
-      v.crossJoin(broadcast(cents))
-        .withColumn("c_cos", VecFns.cosine(col("v"), col("c_v"))),
-      Seq(col("id")), Seq(col("c_cos").desc, col("c_id")), 1)
-      .select(col("id"), col("c_id").as("cluster"))
-    val probes = TopK(
-      queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"))
-        .crossJoin(broadcast(cents))
-        .withColumn("c_cos", VecFns.cosine(col("q_v"), col("c_v"))),
-      Seq(col("q_id")), Seq(col("c_cos").desc, col("c_id")), nprobe)
-      .select(col("q_id"), col("c_id").as("cluster"))
-    // ---- fine tier (as pqTopK, restricted to probed clusters) ----
-    val subIdx = sequence(lit(0), lit(numSub - 1))
-    val pqCents = vectors.orderBy(col(idCol)).limit(codebook)
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_v"))
-    val csub = pqCents.select(col("c_id"), col("c_v"), explode(subIdx).as("m"))
-      .withColumn("sd", expr(s"size(c_v) div $numSub").cast("int"))
-      .withColumn("c_sub", slice(col("c_v"), col("m") * col("sd") + 1, col("sd")))
-      .select(col("c_id"), col("m"), col("c_sub"))
-    val vsub = v.select(col("id"), col("v"), explode(subIdx).as("m"))
-      .withColumn("sd", expr(s"size(v) div $numSub").cast("int"))
-      .withColumn("v_sub", slice(col("v"), col("m") * col("sd") + 1, col("sd")))
-    val codes = TopK(
-      vsub.join(broadcast(csub), "m")
-        .withColumn("ip", VecFns.dot(col("v_sub"), col("c_sub"))),
-      Seq(col("id"), col("m")), Seq(col("ip").desc, col("c_id")), 1)
-      .select(col("id"), col("m"), col("c_id").as("code"))
-    val qsub = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"),
-        explode(subIdx).as("m"))
-      .withColumn("sd", expr(s"size(q_v) div $numSub").cast("int"))
-      .withColumn("q_sub", slice(col("q_v"), col("m") * col("sd") + 1, col("sd")))
-    val dt = qsub.join(broadcast(csub), "m")
-      .withColumn("pd",
-        floor(VecFns.dot(col("q_sub"), col("c_sub")) * lit(1048576.0)).cast("long"))
-      .select(col("q_id"), col("m"), col("c_id").as("code"), col("pd"))
-    // candidates: vectors whose cluster one of the query's probes hits
-    val cand = assigned.join(broadcast(probes), "cluster")
-      .filter(col("id") =!= col("q_id"))
-      .select(col("q_id"), col("id")).distinct()
-    val scored = cand.join(codes, "id")
-      .join(broadcast(dt), Seq("q_id", "m", "code"))
-      .groupBy(col("q_id"), col("id"))
-      .agg(sum(col("pd")).as("adcq"))
-      .withColumn("adc", col("adcq").cast("double") / lit(1048576.0))
-    TopK(scored, Seq(col("q_id")), Seq(col("adcq").desc, col("id")), k)
-      .select(col("q_id"), col("id").as("neighbor_id"),
-        col("adc"), col("rk").cast("long").as("rk"))
+  private def subvectors(df: DataFrame, vec: String, out: String, numSub: Int,
+                         toDouble: Boolean): DataFrame = {
+    val sd = col("sd")
+    val s = slice(col(vec), col("m") * sd + 1, sd)
+    df.select(df.columns.map(col) :+ explode(sequence(lit(0), lit(numSub - 1))).as("m"): _*)
+      .withColumn("sd", expr(s"size($vec) div $numSub").cast("int"))
+      .withColumn(out, if (toDouble) transform(s, _.cast("double")) else s)
   }
 
-  /** Per-subspace k-means-TRAINED PQ codebooks (`iters` Lloyd rounds
-    * from the deterministic seed slices — the [[kmeansFit]] discipline
-    * applied independently in each of the `numSub` subspaces): assign
-    * every subvector to its MIN-L2-RECONSTRUCTION entry (d2 ascending,
-    * ties by c_id — the quantizer objective; max-IP assignment was
-    * evaluated and rejected, see the inline comment),
-    * recompute each entry as the e6-quantized per-dim mean of its
-    * members, empty entries keep their previous value (deterministic —
-    * no re-seeding randomness). Everything stays in-plan: the codebook
-    * state between rounds is a numSub×codebook×(d/numSub) table, never
-    * a collect. Exactly oracle-replayable: member sums are exact e6
+  /** PQ encode: each (id, m, v_sub) row of `vsub` keeps its columns and
+    * gains `c_id`, its nearest entry of `csub` (c_id, m, c_sub), ties
+    * by c_id — by min L2 reconstruction error (`minL2`; |x − c|² =
+    * |x|² − 2x·c + |c|² and |x|² is constant per subvector, so the
+    * argmin of |c|² − 2x·c), else by max partial inner product.
+    */
+  private def nearestCode(vsub: DataFrame, csub: DataFrame, minL2: Boolean): DataFrame = {
+    val ip = VecFns.dot(col("v_sub"), col("c_sub"))
+    val e = if (minL2) VecFns.dot(col("c_sub"), col("c_sub")) - lit(2.0) * ip else ip
+    TopK(vsub.join(broadcast(csub), "m").withColumn("e", e),
+      Seq(col("id"), col("m")), Seq(if (minL2) col("e").asc else col("e").desc, col("c_id")), 1)
+  }
+
+  /** Per-subspace k-means-TRAINED PQ codebooks over an (id, v) frame:
+    * `iters` Lloyd rounds from the seed slices — the [[kmeansFit]]
+    * discipline applied independently in each of the `numSub`
+    * subspaces. Each round assigns every subvector by min L2
+    * reconstruction (the quantizer objective; max-IP assignment — the
+    * seed codes' order — measured flat, 0.41 vs 0.40 seed, when used
+    * to train) and recomputes each entry as the e6-quantized per-dim
+    * mean of its members; empty entries keep their previous value (no
+    * re-seeding randomness). Everything stays in-plan: the state
+    * between rounds is a numSub×codebook×(d/numSub) table, never a
+    * collect. Exactly oracle-replayable: member sums are exact e6
     * longs and the mean's single division is IEEE-identical
     * cross-engine. At 100 TB the training input is a bounded SAMPLE by
-    * contract (k-means needs thousands of points per entry, not the
-    * corpus — the etl_stratified_sample machinery supplies it); here
+    * contract (the etl_stratified_sample machinery supplies it); here
     * the corpus is the sample. Returns (c_id, m, c_sub double[]).
     */
-  private[graft] def trainedCsub(vectors: DataFrame, idCol: String, vecCol: String,
-                                 numSub: Int, codebook: Int, iters: Int): DataFrame = {
-    val subIdx = sequence(lit(0), lit(numSub - 1))
-    val vsub = vectors.select(col(idCol).as("id"), col(vecCol).as("v"), explode(subIdx).as("m"))
-      .withColumn("sd", expr(s"size(v) div $numSub").cast("int"))
-      .withColumn("v_sub",
-        expr("transform(slice(v, m * sd + 1, sd), x -> cast(x as double))"))
+  private def trainedCsub(v: DataFrame, numSub: Int, codebook: Int, iters: Int): DataFrame = {
+    val vsub = subvectors(v, "v", "v_sub", numSub, toDouble = true)
       .select(col("id"), col("m"), col("v_sub"))
-    var cs = vectors.orderBy(col(idCol)).limit(codebook)
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_v"))
-      .select(col("c_id"), col("c_v"), explode(subIdx).as("m"))
-      .withColumn("sd", expr(s"size(c_v) div $numSub").cast("int"))
-      .withColumn("c_sub",
-        expr("transform(slice(c_v, m * sd + 1, sd), x -> cast(x as double))"))
+    var cs = subvectors(seeds(v, "id", "v", codebook), "c_v", "c_sub", numSub, toDouble = true)
       .select(col("c_id"), col("m"), col("c_sub"))
     for (_ <- 1 to iters) {
-      // PROPER PQ assignment: minimize L2 reconstruction error.
-      // |x - c|^2 = |x|^2 - 2 x.c + |c|^2 and |x|^2 is constant per
-      // subvector, so argmin(|c|^2 - 2 x.c) — max-IP assignment (the
-      // seed gates' ADC ordering) is NOT a quantizer objective and
-      // measured flat (0.41 vs 0.40 seed) when used to train.
-      val assign = TopK(
-        vsub.join(broadcast(cs), "m")
-          .withColumn("d2", VecFns.dot(col("c_sub"), col("c_sub"))
-            - lit(2.0) * VecFns.dot(col("v_sub"), col("c_sub"))),
-        Seq(col("id"), col("m")), Seq(col("d2").asc, col("c_id")), 1)
-        .select(col("m"), col("c_id"), col("v_sub"))
-      val cells = assign
+      val cells = nearestCode(vsub, cs, minL2 = true)
         .select(col("c_id"), col("m"), posexplode(col("v_sub")).as(Seq("j", "x")))
         .withColumn("x6", round(col("x") * 1e6).cast("long"))
         .groupBy(col("c_id"), col("m"), col("j"))
@@ -680,122 +664,6 @@ object Similarity {
         .select(col("c_id"), col("m"), coalesce(col("nw"), col("c_sub")).as("c_sub"))
     }
     cs
-  }
-
-  /** PQ ANN over TRAINED codebooks ([[trainedCsub]], 2 Lloyd rounds by
-    * default): the same encode → ADC-table → sum pipeline as
-    * [[pqTopK]], with codebooks that actually tile each subspace
-    * instead of the arbitrary seed slices — the quantization-quality
-    * half of the production recovery (the other half is the exact
-    * re-rank, [[pqRerankTopK]]).
-    */
-  def pqTrainedTopK(vectors: DataFrame, queries: DataFrame,
-                    idCol: String, vecCol: String, k: Int,
-                    numSub: Int = 16, codebook: Int = 32, iters: Int = 2): DataFrame = {
-    val subIdx = sequence(lit(0), lit(numSub - 1))
-    val csub = trainedCsub(vectors, idCol, vecCol, numSub, codebook, iters)
-      .transform(graft.operators.CacheLedger.persist)
-    val vsub = vectors.select(col(idCol).as("id"), col(vecCol).as("v"), explode(subIdx).as("m"))
-      .withColumn("sd", expr(s"size(v) div $numSub").cast("int"))
-      .withColumn("v_sub",
-        expr("transform(slice(v, m * sd + 1, sd), x -> cast(x as double))"))
-    // encode by min-L2 reconstruction (the training objective); the
-    // ADC query table below still scores by inner product — IP-ADC
-    // over an L2-trained codebook, the standard MIPS-PQ composition
-    val codes = TopK(
-      vsub.join(broadcast(csub), "m")
-        .withColumn("d2", VecFns.dot(col("c_sub"), col("c_sub"))
-          - lit(2.0) * VecFns.dot(col("v_sub"), col("c_sub"))),
-      Seq(col("id"), col("m")), Seq(col("d2").asc, col("c_id")), 1)
-      .select(col("id"), col("m"), col("c_id").as("code"))
-    val qsub = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"),
-        explode(subIdx).as("m"))
-      .withColumn("sd", expr(s"size(q_v) div $numSub").cast("int"))
-      .withColumn("q_sub",
-        expr("transform(slice(q_v, m * sd + 1, sd), x -> cast(x as double))"))
-    val dt = qsub.join(broadcast(csub), "m")
-      .withColumn("pd",
-        floor(VecFns.dot(col("q_sub"), col("c_sub")) * lit(1048576.0)).cast("long"))
-      .select(col("q_id"), col("m"), col("c_id").as("code"), col("pd"))
-    val scored = codes.join(broadcast(dt), Seq("m", "code"))
-      .filter(col("id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("id"))
-      .agg(sum(col("pd")).as("adcq"))
-      .withColumn("adc", col("adcq").cast("double") / lit(1048576.0))
-    TopK(scored, Seq(col("q_id")), Seq(col("adcq").desc, col("id")), k)
-      .select(col("q_id"), col("id").as("neighbor_id"),
-        col("adc"), col("rk").cast("long").as("rk"))
-  }
-
-  /** Trained-codebook PQ + exact re-rank: both halves of the
-    * production recovery composed.
-    */
-  def pqTrainedRerankTopK(vectors: DataFrame, queries: DataFrame,
-                          idCol: String, vecCol: String, k: Int,
-                          numSub: Int = 16, codebook: Int = 32,
-                          iters: Int = 2, fetch: Int = 4): DataFrame =
-    exactRerank(vectors, queries, idCol, vecCol, k,
-      pqTrainedTopK(vectors, queries, idCol, vecCol, k * fetch, numSub, codebook, iters))
-
-  /** IVF coarse pruning over TRAINED PQ codes: the [[ivfPqTopK]]
-    * composition with the fine tier's codebooks trained ([[
-    * trainedCsub]]) and encoding by min-L2 reconstruction — the full
-    * production index artifact (cluster id + trained codes per
-    * vector).
-    */
-  def ivfPqTrainedTopK(vectors: DataFrame, queries: DataFrame,
-                       idCol: String, vecCol: String, k: Int,
-                       numCentroids: Int = 10, nprobe: Int = 8,
-                       numSub: Int = 16, codebook: Int = 32, iters: Int = 2): DataFrame = {
-    val v = vectors.select(col(idCol).as("id"), col(vecCol).as("v"))
-    // coarse tier — identical to ivfPqTopK
-    val cents = vectors.orderBy(col(idCol)).limit(numCentroids)
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_v"))
-    val assigned = TopK(
-      v.crossJoin(broadcast(cents))
-        .withColumn("c_cos", VecFns.cosine(col("v"), col("c_v"))),
-      Seq(col("id")), Seq(col("c_cos").desc, col("c_id")), 1)
-      .select(col("id"), col("c_id").as("cluster"))
-    val probes = TopK(
-      queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"))
-        .crossJoin(broadcast(cents))
-        .withColumn("c_cos", VecFns.cosine(col("q_v"), col("c_v"))),
-      Seq(col("q_id")), Seq(col("c_cos").desc, col("c_id")), nprobe)
-      .select(col("q_id"), col("c_id").as("cluster"))
-    // fine tier — trained codebooks, min-L2 encode (as pqTrainedTopK)
-    val subIdx = sequence(lit(0), lit(numSub - 1))
-    val csub = trainedCsub(vectors, idCol, vecCol, numSub, codebook, iters)
-      .transform(graft.operators.CacheLedger.persist)
-    val vsub = v.select(col("id"), col("v"), explode(subIdx).as("m"))
-      .withColumn("sd", expr(s"size(v) div $numSub").cast("int"))
-      .withColumn("v_sub",
-        expr("transform(slice(v, m * sd + 1, sd), x -> cast(x as double))"))
-    val codes = TopK(
-      vsub.join(broadcast(csub), "m")
-        .withColumn("d2", VecFns.dot(col("c_sub"), col("c_sub"))
-          - lit(2.0) * VecFns.dot(col("v_sub"), col("c_sub"))),
-      Seq(col("id"), col("m")), Seq(col("d2").asc, col("c_id")), 1)
-      .select(col("id"), col("m"), col("c_id").as("code"))
-    val qsub = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"),
-        explode(subIdx).as("m"))
-      .withColumn("sd", expr(s"size(q_v) div $numSub").cast("int"))
-      .withColumn("q_sub",
-        expr("transform(slice(q_v, m * sd + 1, sd), x -> cast(x as double))"))
-    val dt = qsub.join(broadcast(csub), "m")
-      .withColumn("pd",
-        floor(VecFns.dot(col("q_sub"), col("c_sub")) * lit(1048576.0)).cast("long"))
-      .select(col("q_id"), col("m"), col("c_id").as("code"), col("pd"))
-    val cand = assigned.join(broadcast(probes), "cluster")
-      .filter(col("id") =!= col("q_id"))
-      .select(col("q_id"), col("id")).distinct()
-    val scored = cand.join(codes, "id")
-      .join(broadcast(dt), Seq("q_id", "m", "code"))
-      .groupBy(col("q_id"), col("id"))
-      .agg(sum(col("pd")).as("adcq"))
-      .withColumn("adc", col("adcq").cast("double") / lit(1048576.0))
-    TopK(scored, Seq(col("q_id")), Seq(col("adcq").desc, col("id")), k)
-      .select(col("q_id"), col("id").as("neighbor_id"),
-        col("adc"), col("rk").cast("long").as("rk"))
   }
 
   /** Restore task parallelism for compute-heavy map stages: a small
@@ -814,161 +682,24 @@ object Similarity {
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
-  /** The SCALE-ADAPTIVE IVF + trained-PQ shortlist
-    * ([[ivfPqTrainedTopK]] with the coarse tier sized by
-    * [[scaledCentroids]]/[[scaledNprobe]] and re-costed for a c that
-    * GROWS): assignment ranks by `dot(v, c) / |c|` — the same argmax
-    * as cosine since `|v|` is constant within each vector's ranking
-    * group — which drops two of the three dot products the full
-    * cosine formula spends per (vector, centroid) pair; with c = √n
-    * pairs the assign is the one n·√n stage, so its constant matters.
-    * The corpus frame is [[widen]]ed once and persisted: cents,
-    * assign, training and encode all read the widened frame. The
-    * oracle replays the identical `dot/|c|` expression, so the
-    * cheaper scoring stays hash-matched.
-    */
-  /** The scale-adaptive coarse tier shared by the IVF compositions
-    * (trained-PQ and SQ8): first-c-by-id seed centroids, prenormalized
-    * dot/|c| assignment (the argmax equals cosine since |v| is
-    * constant within each vector's ranking group — two of the three
-    * dots saved on the one n·√n stage), nprobe nearest lists per
-    * query. Inputs: vw(id, v), q(q_id, q_v). Returns
-    * (assigned(id, cluster), probes(q_id, cluster)).
-    */
-  private def scaledCoarseTier(vw: DataFrame, q: DataFrame,
-                               numCentroids: Int, nprobe: Int): (DataFrame, DataFrame) = {
-    val cents = vw.orderBy(col("id")).limit(numCentroids)
-      .select(col("id").as("c_id"), col("v").as("c_v"),
-        VecFns.norm(col("v")).as("c_nrm"))
-    val assigned = TopK(
-      vw.crossJoin(broadcast(cents))
-        .withColumn("c_sc", VecFns.dot(col("v"), col("c_v")) / col("c_nrm")),
-      Seq(col("id")), Seq(col("c_sc").desc, col("c_id")), 1)
-      .select(col("id"), col("c_id").as("cluster"))
-    val probes = TopK(
-      q.crossJoin(broadcast(cents))
-        .withColumn("c_sc", VecFns.dot(col("q_v"), col("c_v")) / col("c_nrm")),
-      Seq(col("q_id")), Seq(col("c_sc").desc, col("c_id")), nprobe)
-      .select(col("q_id"), col("c_id").as("cluster"))
-    (assigned, probes)
-  }
-
-  def ivfPqTrainedScaledTopK(vectors: DataFrame, queries: DataFrame,
-                             idCol: String, vecCol: String, k: Int,
-                             numCentroids: Int, nprobe: Int,
-                             numSub: Int = 16, codebook: Int = 64,
-                             iters: Int = 2): DataFrame = {
-    val vw = CacheLedger.persist(widen(
-      vectors.select(col(idCol).as("id"), col(vecCol).as("v"))))
-    val (assigned, probes) = scaledCoarseTier(vw,
-      queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v")),
-      numCentroids, nprobe)
-    // fine tier — trained codebooks, min-L2 encode (as ivfPqTrainedTopK),
-    // everything derived from the widened frame
-    val subIdx = sequence(lit(0), lit(numSub - 1))
-    val csub = trainedCsub(vw, "id", "v", numSub, codebook, iters)
-      .transform(CacheLedger.persist)
-    val vsub = vw.select(col("id"), col("v"), explode(subIdx).as("m"))
-      .withColumn("sd", expr(s"size(v) div $numSub").cast("int"))
-      .withColumn("v_sub",
-        expr("transform(slice(v, m * sd + 1, sd), x -> cast(x as double))"))
-    val codes = TopK(
-      vsub.join(broadcast(csub), "m")
-        .withColumn("d2", VecFns.dot(col("c_sub"), col("c_sub"))
-          - lit(2.0) * VecFns.dot(col("v_sub"), col("c_sub"))),
-      Seq(col("id"), col("m")), Seq(col("d2").asc, col("c_id")), 1)
-      .select(col("id"), col("m"), col("c_id").as("code"))
-    val qsub = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"),
-        explode(subIdx).as("m"))
-      .withColumn("sd", expr(s"size(q_v) div $numSub").cast("int"))
-      .withColumn("q_sub",
-        expr("transform(slice(q_v, m * sd + 1, sd), x -> cast(x as double))"))
-    val dt = qsub.join(broadcast(csub), "m")
-      .withColumn("pd",
-        floor(VecFns.dot(col("q_sub"), col("c_sub")) * lit(1048576.0)).cast("long"))
-      .select(col("q_id"), col("m"), col("c_id").as("code"), col("pd"))
-    val cand = assigned.join(broadcast(probes), "cluster")
-      .filter(col("id") =!= col("q_id"))
-      .select(col("q_id"), col("id")).distinct()
-    val scored = cand.join(codes, "id")
-      .join(broadcast(dt), Seq("q_id", "m", "code"))
-      .groupBy(col("q_id"), col("id"))
-      .agg(sum(col("pd")).as("adcq"))
-      .withColumn("adc", col("adcq").cast("double") / lit(1048576.0))
-    TopK(scored, Seq(col("q_id")), Seq(col("adcq").desc, col("id")), k)
-      .select(col("q_id"), col("id").as("neighbor_id"),
-        col("adc"), col("rk").cast("long").as("rk"))
-  }
-
-  /** Scale-adaptive IVF + trained PQ + exact re-rank — the
-    * [[ivfPqTrainedScaledTopK]] shortlist under the exact cosine
-    * re-rank. */
-  def ivfPqTrainedRerankScaledTopK(vectors: DataFrame, queries: DataFrame,
-                                   idCol: String, vecCol: String, k: Int,
-                                   numCentroids: Int, nprobe: Int,
-                                   numSub: Int = 16, codebook: Int = 64,
-                                   iters: Int = 2, fetch: Int = 16): DataFrame =
-    exactRerank(vectors, queries, idCol, vecCol, k,
-      ivfPqTrainedScaledTopK(vectors, queries, idCol, vecCol, k * fetch,
-        numCentroids, nprobe, numSub, codebook, iters))
-
-  /** IVF + trained PQ + exact re-rank: the complete production stack. */
-  def ivfPqTrainedRerankTopK(vectors: DataFrame, queries: DataFrame,
-                             idCol: String, vecCol: String, k: Int,
-                             numCentroids: Int = 10, nprobe: Int = 8,
-                             numSub: Int = 16, codebook: Int = 32,
-                             iters: Int = 2, fetch: Int = 4): DataFrame =
-    exactRerank(vectors, queries, idCol, vecCol, k,
-      ivfPqTrainedTopK(vectors, queries, idCol, vecCol, k * fetch,
-        numCentroids, nprobe, numSub, codebook, iters))
-
-  /** PQ + exact re-rank — the production recall recovery the PQ
-    * scaladoc names: the ADC code scan prunes the corpus to a
-    * `fetch·k` shortlist per query (PQ's memory role — numSub bytes
-    * per scanned vector), then the shortlist ids join back to the raw
-    * vectors ONCE and exact cosine ranks the final k. At 100 TB the
-    * exact pass touches fetch·k rows per query — the compressed scan
-    * did the work; recall comes from the re-rank (RECALL_r10 measured
-    * the raw ADC tier topping out at 0.40 recall@10 with seed
-    * codebooks; the 8× over-fetch + exact re-rank is the documented
-    * recovery — RECALL_r11 measures 0.86 recall@10 at the default,
-    * 80 exact rows per query).
-    */
-  def pqRerankTopK(vectors: DataFrame, queries: DataFrame,
-                   idCol: String, vecCol: String, k: Int,
-                   numSub: Int = 16, codebook: Int = 32, fetch: Int = 8): DataFrame =
-    exactRerank(vectors, queries, idCol, vecCol, k,
-      pqTopK(vectors, queries, idCol, vecCol, k * fetch, numSub, codebook))
-
-  /** IVF-PQ + exact re-rank: coarse lists prune, codes score, the
-    * exact pass ranks the `fetch·k` ADC shortlist — all three tiers of
-    * the production composition, each deterministic and
-    * oracle-replayable.
-    */
-  def ivfPqRerankTopK(vectors: DataFrame, queries: DataFrame,
-                      idCol: String, vecCol: String, k: Int,
-                      numCentroids: Int = 10, nprobe: Int = 8,
-                      numSub: Int = 16, codebook: Int = 32, fetch: Int = 8): DataFrame =
-    exactRerank(vectors, queries, idCol, vecCol, k,
-      ivfPqTopK(vectors, queries, idCol, vecCol, k * fetch,
-        numCentroids, nprobe, numSub, codebook))
-
-  /** SQ8 scalar-quantized scan: each dimension affinely maps to an
+  /** SQ8 scalar-quantized scores: each dimension affinely maps to an
     * 8-bit code against per-dim corpus [min, max] bounds (the FAISS
     * ScalarQuantizer layout — 1 byte/dim, 4× the memory-bandwidth
     * headroom of float32 at 100 TB, and unlike PQ no codebook
-    * training). Scoring reconstructs x̂ = mn + code·Δ and sums
-    * per-dim products quantized to ×2²⁰ integers — the PQ-ADC
-    * discipline that makes the reduction order-independent, so the
-    * oracle replays it bit-for-bit. Bounds ride one exploded
-    * min/max aggregate (map-side combinable) re-assembled into two
-    * d-length arrays and broadcast — no driver collect.
+    * training). Scoring reconstructs x̂ = mn + code·Δ on both sides and
+    * sums per-dim products as 2²⁰ integers. The quantizer trains on
+    * the full corpus even when a coarse tier restricts the scan.
     */
+  private def sq8Scores(v: DataFrame, q: DataFrame, lists: Option[Pairs]): DataFrame = {
+    val bounds = sq8Bounds(v)
+    scan(lists, v, q, sq8Encode(v, bounds, "v", "vr"), sq8Encode(q, bounds, "q_v", "qr"), Nil)
+      .withColumn("score", sq8Dot)
+  }
+
   /** Per-dim [min, max] SQ8 quantizer bounds over an (id, v:
-    * array<double>) frame — one exploded min/max aggregate re-assembled
-    * into two broadcast-able d-arrays (mns, dls). Shared by the flat
-    * SQ8 scan and the IVF+SQ8 composition so the quantizer can never
-    * drift between them (the r13 clamp fix had to land twice).
+    * array<double>) frame — one exploded min/max aggregate (map-side
+    * combinable) re-assembled into two broadcast-able d-arrays (mns,
+    * dls) — no driver collect.
     */
   private def sq8Bounds(v: DataFrame): DataFrame =
     v.select(posexplode(col("v")).as(Seq("dim", "x")))
@@ -979,111 +710,32 @@ object Similarity {
       .select(col("mns"),
         expr("zip_with(mns, mxs, (a, b) -> (b - a) / 255.0D)").as("dls"))
 
-  /** SQ8 reconstruction of column `vc` against in-scope mns/dls; op
-    * order pinned to the oracle's: floor((x - mn) / dl + 0.5) CLAMPED
-    * to [0, 255], then mn + code·dl (dl = 0 collapses the dim to its
-    * constant). The clamp is what FAISS's ScalarQuantizer does: a
-    * QUERY value outside the corpus per-dim [mn, mx] must land on the
-    * nearest representable code, not extrapolate past the 8-bit
-    * domain (ADVICE r13 — corpus rows are always in-bounds, so this
-    * only changes external-query behavior).
+  /** SQ8 reconstruction: `df` with column `from` replaced by `to`, its
+    * reconstruction against the one-row `bounds`. Op order pinned to
+    * the oracle's: floor((x - mn) / dl + 0.5) CLAMPED to [0, 255], then
+    * mn + code·dl (dl = 0 collapses the dim to its constant). The clamp
+    * is what FAISS's ScalarQuantizer does: a QUERY value outside the
+    * corpus per-dim [mn, mx] lands on the nearest representable code
+    * instead of extrapolating past the 8-bit domain (corpus rows are
+    * always in-bounds; appended rows encode through the frozen bounds).
     */
-  private def sq8Recon(vc: String) = expr(
-    s"""transform($vc, (x, i) -> IF(element_at(dls, i + 1) = 0D,
-       |  element_at(mns, i + 1),
-       |  element_at(mns, i + 1) +
-       |    greatest(0D, least(255D,
-       |      floor((x - element_at(mns, i + 1)) / element_at(dls, i + 1) + 0.5D))) *
-       |    element_at(dls, i + 1)))""".stripMargin)
+  private def sq8Encode(df: DataFrame, bounds: DataFrame, from: String, to: String): DataFrame =
+    df.crossJoin(broadcast(bounds))
+      .select(df.columns.filter(_ != from).map(col) :+ expr(
+        s"""transform($from, (x, i) -> IF(element_at(dls, i + 1) = 0D,
+           |  element_at(mns, i + 1),
+           |  element_at(mns, i + 1) +
+           |    greatest(0D, least(255D,
+           |      floor((x - element_at(mns, i + 1)) / element_at(dls, i + 1) + 0.5D))) *
+           |    element_at(dls, i + 1)))""".stripMargin).as(to): _*)
 
-  def sq8TopK(vectors: DataFrame, queries: DataFrame,
-              idCol: String, vecCol: String, k: Int): DataFrame = {
-    val v = vectors.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v"))
-    val bounds = sq8Bounds(v)
-    val vr = v.crossJoin(broadcast(bounds))
-      .withColumn("vr", sq8Recon("v")).select(col("id"), col("vr"))
-    val qr = queries.select(col(idCol).as("q_id"),
-        col(vecCol).cast("array<double>").as("q_v"))
-      .crossJoin(broadcast(bounds))
-      .withColumn("qr", sq8Recon("q_v")).select(col("q_id"), col("qr"))
-    val scored = vr.crossJoin(broadcast(qr))
-      .filter(col("id") =!= col("q_id"))
-      .withColumn("dotq", expr(
-        "aggregate(zip_with(qr, vr, (a, b) -> CAST(floor(a * b * 1048576.0D) AS BIGINT)), 0L, (s, p) -> s + p)"))
-    TopK(scored, Seq(col("q_id")), Seq(col("dotq").desc, col("id")), k)
-      .select(col("q_id"), col("id").as("neighbor_id"),
-        (col("dotq").cast("double") / lit(1048576.0)).as("sq8"),
-        col("rk").cast("long").as("rk"))
-  }
-
-  /** SQ8 + exact re-rank: the code scan over-fetches `fetch`·k, the
-    * exact cosine pass ranks the final k — the uncompressed-recall
-    * tier over the 1-byte/dim scan (RECALL probe: the 8×k shortlist
-    * recovers brute-force-grade top-10 at the sf tiers).
-    */
-  def sq8RerankTopK(vectors: DataFrame, queries: DataFrame,
-                    idCol: String, vecCol: String, k: Int,
-                    fetch: Int = 8): DataFrame =
-    exactRerank(vectors, queries, idCol, vecCol, k,
-      sq8TopK(vectors, queries, idCol, vecCol, k * fetch))
-
-  /** Scale-adaptive IVF + SQ8 + exact re-rank — the FAISS
-    * IndexIVFScalarQuantizer layout, completing the r13 SQ8 tier
-    * (whose declared ceiling was the full 1-byte/dim code scan):
-    * coarse lists sized by [[scaledCentroids]]/[[scaledNprobe]] prune
-    * the corpus to the probed ~1/16 fraction, the SQ8 codes score
-    * ONLY those lists, and the shared exact-cosine tail ranks the
-    * `fetch·k` shortlist. The per-dim [min, max] quantizer trains on
-    * the FULL corpus (one map-side-combinable aggregate, bounds
-    * broadcast as two d-arrays — density-independent, the property
-    * RECALL_r13 measured for the flat SQ8 tier), while the probed-list
-    * restriction removes the full-scan cost: scored code rows per
-    * query batch drop from n to ~n·np/c. Assignment ranks by
-    * `dot(v, c)/|c|` — the [[ivfPqTrainedScaledTopK]] prenormalized
-    * argmax, identical in the oracle. Corpus reconstruction is the
-    * one remaining n-sized pass — at 100 TB it is the write-once
-    * index BUILD; the per-query work is list-bounded.
-    */
-  def ivfSq8RerankScaledTopK(vectors: DataFrame, queries: DataFrame,
-                             idCol: String, vecCol: String, k: Int,
-                             numCentroids: Int, nprobe: Int,
-                             fetch: Int = 8): DataFrame = {
-    val vw = CacheLedger.persist(widen(
-      vectors.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("v"))))
-    val q = queries.select(col(idCol).as("q_id"),
-      col(vecCol).cast("array<double>").as("q_v"))
-    // coarse tier: the shared prenormalized assign (dot / |centroid|)
-    val (assigned, probes) = scaledCoarseTier(vw, q, numCentroids, nprobe)
-    // SQ8 tier: the shared corpus-trained quantizer (bounds + clamped
-    // reconstruction — one definition with sq8TopK, no drift channel)
-    val bounds = sq8Bounds(vw)
-    val vr = vw.crossJoin(broadcast(bounds))
-      .withColumn("vr", sq8Recon("v")).select(col("id"), col("vr"))
-    val qr = q.crossJoin(broadcast(bounds))
-      .withColumn("qr", sq8Recon("q_v")).select(col("q_id"), col("qr"))
-    // candidates: each corpus row sits in exactly one list and each
-    // (query, list) probe is unique, so the join multiplicity is 1 —
-    // no dedup pass needed (the oracle joins the same two one-row-per
-    // -key sets)
-    val cand = assigned.join(broadcast(probes), "cluster")
-      .filter(col("id") =!= col("q_id"))
-      .select(col("q_id"), col("id"))
-    val scored = cand.join(vr, "id").join(broadcast(qr), "q_id")
-      .withColumn("dotq", expr(
-        "aggregate(zip_with(qr, vr, (a, b) -> CAST(floor(a * b * 1048576.0D) AS BIGINT)), 0L, (s, p) -> s + p)"))
-    val shortlist = TopK(scored, Seq(col("q_id")), Seq(col("dotq").desc, col("id")), k * fetch)
-      .select(col("q_id"), col("id").as("neighbor_id"),
-        (col("dotq").cast("double") / lit(1048576.0)).as("sq8"),
-        col("rk").cast("long").as("rk"))
-    exactRerank(vectors, queries, idCol, vecCol, k, shortlist)
-  }
+  /** The SQ8 score of a (qr, vr) pair of reconstructions. */
+  private val sq8Dot: Column = expr(
+    s"aggregate(zip_with(qr, vr, (a, b) -> CAST(floor(a * b * ${Scale}D) AS BIGINT)), 0L, (s, p) -> s + p)")
 
   /** PERSISTED IVF+SQ8 index — build once, query many (the FAISS
     * index-file role, re-expressed as a self-describing parquet
-    * artifact; judge r14 ask #4). Writes the three tables a query
-    * needs under `path`:
+    * artifact). Writes the three tables a query needs under `path`:
     *
     *  - `codes/`     (id, vr, cluster) — the SQ8-reconstructed corpus,
     *                 PARTITIONED BY coarse list, so the probe join's
@@ -1096,116 +748,111 @@ object Similarity {
     * .BucketedLake]] discipline: underscore-prefixed so plain parquet
     * readers ignore it; any later session/JVM picks the index back up
     * from the marker alone). Every number the query path consumes is
-    * a parquet DOUBLE round-trip — bit-exact — and the assign /
-    * reconstruct expressions are the shared [[ivfSq8RerankScaledTopK]]
-    * definitions, so build-once/query-many answers hash-match the
-    * build-inline gate at any scale. At 100 TB this split is the
-    * whole point: the n-sized passes (assign + reconstruct) run once
-    * at write time; a query pays only centroid scoring + probed-list
-    * code scans + the shortlist re-rank.
+    * a parquet DOUBLE round-trip — bit-exact — and assignment,
+    * reconstruction and scoring are the [[annTopK]] stages of
+    * `AnnSpec(IvfScaled(c, np), Sq8, fetch)`, so build-once/query-many
+    * answers hash-match the build-inline pipeline at any scale. At
+    * 100 TB this split is the whole point: the n-sized passes (assign +
+    * reconstruct) run once at write time; a query pays only centroid
+    * scoring + probed-list code scans + the shortlist re-rank.
+    *
+    * The coarse quantizer is the first-N-by-id seed set by default,
+    * or `trainRounds` Lloyd iterations of the shared deterministic
+    * [[kmeansFit]]; trained centroid ids are the SEED ids that kept
+    * members — a subset of the first-N corpus ids, which is all the
+    * probe join keys on.
     */
   def ivfSq8IndexBuild(vectors: DataFrame, idCol: String, vecCol: String,
                        numCentroids: Int, nprobe: Int, path: String,
                        trainRounds: Int = 0): Unit = {
-    val spark = vectors.sparkSession
-    val vw = CacheLedger.persist(widen(
-      vectors.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("v"))))
-    // one metadata pass instead of two (r17): n and dims ride the same
-    // aggregate job — the build is fixed-cost-bound at small corpora
-    // (AnnIndexProbe: 3.2 s seeded build for 2 000 rows, all structure)
+    val vw = CacheLedger.persist(widen(project(vectors, idCol, vecCol, "", toDouble = true)))
+    // n and dims ride one aggregate job — the build is fixed-cost-bound
+    // at small corpora
     val meta = vw.agg(count(lit(1)).as("n"), first(size(col("v"))).as("dims")).head()
     val n = meta.getLong(0)
     val dims = meta.getInt(1)
-    // right-size the build's shuffle parallelism to the corpus (r17,
-    // guide §2.2 — scale-adaptive, never a constant): every stage here
-    // is node-bounded (≤ n rows of ≤ dims doubles), and the whole build
-    // EXECUTES inside this call (writes/collects), so a scoped conf
-    // reaches every plan. ~500k rows (≈256 MB of 64-dim doubles) per
-    // partition; at gate scale that is 1 task instead of 32 per stage
-    // (the probe's seconds were task-scheduling overhead), at 100 TB
-    // the computed count exceeds any session default and the session
-    // value is kept.
-    val priorParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val scaled = math.max(1L, math.min(priorParts.toLong, (n + 499999) / 500000))
-    spark.conf.set("spark.sql.shuffle.partitions", scaled.toString)
-    try {
-    // coarse quantizer: first-N-by-id seeds by default (the gate's
-    // oracle-replayable recipe), or `trainRounds` Lloyd iterations of
-    // the shared deterministic [[kmeansFit]] (r16, judge r15 ask #3 —
-    // the PQ tier's trained path reused for the coarse tier; the
-    // micro-quantized means keep the build replayable, and RECALL_r16
-    // measures seeded vs trained at matched nprobe). Trained centroid
-    // ids are the SEED vec_ids that kept members — a subset of the
-    // first-N corpus ids, which is all the probe join keys on.
-    // persisted (r17): cents feeds the assignment broadcast AND the
-    // centroids/ parquet write — one evaluation instead of two
+    // cents and bounds each feed a broadcast AND their own parquet
+    // write: persisted, so each is evaluated once
     val cents = CacheLedger.persist(
-      if (trainRounds <= 0)
-        vw.orderBy(col("id")).limit(numCentroids)
-          .select(col("id").as("c_id"), col("v").as("c_v"))
+      if (trainRounds <= 0) seeds(vw, "id", "v", numCentroids)
       else
         kmeansFit(vw, "id", "v", numCentroids, trainRounds)
           .groupBy(col("cluster"))
           .agg(expr("transform(array_sort(collect_list(struct(dim, new_c))), s -> s.new_c)")
             .as("c_v"))
           .select(col("cluster").as("c_id"), col("c_v")))
-    val centsN = cents.withColumn("c_nrm", VecFns.norm(col("c_v")))
-    val assigned = TopK(
-      vw.crossJoin(broadcast(centsN))
-        .withColumn("c_sc", VecFns.dot(col("v"), col("c_v")) / col("c_nrm")),
-      Seq(col("id")), Seq(col("c_sc").desc, col("c_id")), 1)
-      .select(col("id"), col("c_id").as("cluster"))
-    // persisted (r17): bounds feeds the encode broadcast AND the
-    // bounds/ parquet write — one aggregate pass instead of two
     val bounds = CacheLedger.persist(sq8Bounds(vw))
-    val vr = vw.crossJoin(broadcast(bounds))
-      .withColumn("vr", sq8Recon("v")).select(col("id"), col("vr"))
-    // ONE file per coarse list (r17, guide §6): without the repartition
-    // every write task holds rows of every cluster, so partitionBy
-    // fans out to (tasks × clusters) tiny parquet files — ~1.4k files
-    // for 45 lists at sf0.1, and the query side pays the listing +
-    // per-file open cost on every probe. Hash-repartitioning by the
-    // partition column lands each list in exactly one task → one file,
-    // which IS the on-disk IVF layout (FAISS: one code block per list).
-    // the three artifact writes are independent output paths — overlap
-    // them (guide §2.6): the tiny centroids/bounds jobs back-fill while
-    // the codes write runs, instead of paying three sequential
-    // job-latency cycles
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val sideWrites = Future.sequence(Seq(
-      Future(cents.write.mode("overwrite").parquet(s"$path/centroids")),
-      Future(bounds.write.mode("overwrite").parquet(s"$path/bounds"))))
-    assigned.join(vr, "id")
-      .repartition(col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/codes")
-    Await.result(sideWrites, Duration.Inf)
-    val marker = new org.apache.hadoop.fs.Path(path, AnnIndexMarker)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(marker, true)
-    try out.write(
-      (s"""{"version":1,"kind":"ivf_sq8","numCentroids":$numCentroids,""" +
+    val codes = sq8Encode(nearestLists(vw, "id", "v", cents, 1, scaled = true), bounds, "v", "vr")
+    // The three artifact writes are independent output paths: the tiny
+    // centroids/bounds jobs back-fill while the codes write runs. They
+    // run on threads made here, which inherit the caller's Spark local
+    // properties (job group, description, scheduler pool) — a shared
+    // pool's threads keep whatever they were created under.
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val side = Seq(cents -> "centroids", bounds -> "bounds").map { case (df, dir) =>
+        pool.submit(new Runnable {
+          def run(): Unit = df.write.mode("overwrite").parquet(s"$path/$dir")
+        })
+      }
+      // ONE file per coarse list: hash-repartitioning by the partition
+      // column lands each list in exactly one task — the on-disk IVF
+      // layout (FAISS: one code block per list) — where tasks × lists
+      // tiny files would cost every probe a listing and file opens
+      codes.repartition(writeWidth(vw.sparkSession, n), col("cluster"))
+        .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/codes")
+      side.foreach { f =>
+        try f.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+    }
+    writeMarker(vw.sparkSession, path,
+      s"""{"version":1,"kind":"ivf_sq8","numCentroids":$numCentroids,""" +
         s""""nprobe":$nprobe,"n":$n,"dims":$dims,""" +
-        s""""idCol":"$idCol","vecCol":"$vecCol"}""").getBytes("UTF-8"))
-    finally out.close()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", priorParts)
+        s""""idCol":"$idCol","vecCol":"$vecCol"}""")
   }
+
+  /** Write tasks of an index write of `n` rows: one per ~500k rows
+    * (≈256 MB of 64-dim doubles), at most the session's shuffle width
+    * — one task at gate scale, the session width at 100 TB.
+    */
+  private def writeWidth(spark: SparkSession, n: Long): Int =
+    math.max(1L, math.min(spark.conf.get("spark.sql.shuffle.partitions").toLong,
+      (n + 499999) / 500000)).toInt
 
   val AnnIndexMarker = "_graft_ann_index.json"
 
-  /** Incremental index APPEND (r16, judge r15 ask #6 — a 100 TB corpus
-    * grows; a daily batch must not cost a full rebuild): assigns the
-    * new vectors to the EXISTING persisted centroids, encodes them
-    * with the EXISTING persisted quantizer bounds (out-of-range values
-    * CLAMP to the 8-bit domain — the FAISS ScalarQuantizer add()
-    * contract: the quantizer is frozen at train time), appends the new
-    * rows into the per-list `codes/` partitions, and bumps the
-    * marker's `n`. Cost is delta-sized: one assign pass (|delta| × c
-    * centroid scores), one encode pass, one partitioned append write —
-    * the corpus-sized codes are never read or rewritten (the SCALE
-    * battery's `ann_ivf_sq8_append` cell measures exactly this).
+  private def readMarker(spark: SparkSession, path: String): String = {
+    val marker = new org.apache.hadoop.fs.Path(path, AnnIndexMarker)
+    val in = marker.getFileSystem(spark.sparkContext.hadoopConfiguration).open(marker)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  private def writeMarker(spark: SparkSession, path: String, txt: String): Unit = {
+    val marker = new org.apache.hadoop.fs.Path(path, AnnIndexMarker)
+    val out = marker.getFileSystem(spark.sparkContext.hadoopConfiguration).create(marker, true)
+    try out.write(txt.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def markerField(field: String) = s""""$field"\\s*:\\s*(\\d+)""".r
+
+  /** An integer field of the marker text read from `path`. */
+  private def markerLong(txt: String, field: String, path: String): Long =
+    markerField(field).findFirstMatchIn(txt).map(_.group(1).toLong).getOrElse(
+      throw new IllegalStateException(s"no $field in $path/$AnnIndexMarker"))
+
+  /** Incremental index APPEND (a 100 TB corpus grows; a daily batch
+    * must not cost a full rebuild): assigns the new vectors to the
+    * EXISTING persisted centroids, encodes them with the EXISTING
+    * persisted quantizer bounds (out-of-range values CLAMP to the
+    * 8-bit domain — the FAISS ScalarQuantizer add() contract: the
+    * quantizer is frozen at train time), appends the new rows into the
+    * per-list `codes/` partitions, and bumps the marker's `n`. Cost is
+    * delta-sized: one assign pass (|delta| × c centroid scores), one
+    * encode pass, one partitioned append write — the corpus-sized
+    * codes are never read or rewritten.
     *
     * Exactness contract: append(base, delta) is BIT-IDENTICAL to
     * build(base ∪ delta) queried at the same nprobe whenever (a) the
@@ -1220,91 +867,46 @@ object Similarity {
   def ivfSq8IndexAppend(path: String, delta: DataFrame,
                         idCol: String, vecCol: String): Unit = {
     val spark = delta.sparkSession
-    val dw = CacheLedger.persist(widen(delta.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v"))))
+    val dw = CacheLedger.persist(widen(project(delta, idCol, vecCol, "", toDouble = true)))
     val nNew = dw.count()
-    // delta-scaled shuffle parallelism, same rationale as the build's
-    // (r17, §2.2): the append executes entirely inside this call
-    val priorParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val scaled = math.max(1L, math.min(priorParts.toLong, (nNew + 499999) / 500000))
-    spark.conf.set("spark.sql.shuffle.partitions", scaled.toString)
-    try {
     val cents = spark.read.parquet(s"$path/centroids")
-      .withColumn("c_nrm", VecFns.norm(col("c_v")))
     val bounds = spark.read.parquet(s"$path/bounds")
-    val assigned = TopK(
-      dw.crossJoin(broadcast(cents))
-        .withColumn("c_sc", VecFns.dot(col("v"), col("c_v")) / col("c_nrm")),
-      Seq(col("id")), Seq(col("c_sc").desc, col("c_id")), 1)
-      .select(col("id"), col("v"), col("c_id").as("cluster"))
-    assigned.crossJoin(broadcast(bounds))
-      .withColumn("vr", sq8Recon("v"))
-      .select(col("id"), col("vr"), col("cluster"))
-      // one appended file per touched list (the build-side §6 rule)
-      .repartition(col("cluster"))
+    sq8Encode(nearestLists(dw, "id", "v", cents, 1, scaled = true), bounds, "v", "vr")
+      // one appended file per touched list (the build's layout rule)
+      .repartition(writeWidth(spark, nNew), col("cluster"))
       .write.mode("append").partitionBy("cluster").parquet(s"$path/codes")
-    val marker = new org.apache.hadoop.fs.Path(path, AnnIndexMarker)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(marker)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val nRe = """"n"\s*:\s*(\d+)""".r
-    val nOld = nRe.findFirstMatchIn(txt).map(_.group(1).toLong).getOrElse(
-      throw new IllegalStateException(s"no n field in $marker"))
-    val bumped = nRe.replaceFirstIn(txt,
-      java.util.regex.Matcher.quoteReplacement(s""""n":${nOld + nNew}"""))
-    val out = fs.create(marker, true)
-    try out.write(bumped.getBytes("UTF-8")) finally out.close()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", priorParts)
+    val txt = readMarker(spark, path)
+    val nOld = markerLong(txt, "n", path)
+    writeMarker(spark, path, markerField("n").replaceFirstIn(txt,
+      java.util.regex.Matcher.quoteReplacement(s""""n":${nOld + nNew}""")))
   }
 
   /** Query-only half of the persisted index: probes from the persisted
     * centroids, SQ8 scoring over ONLY the probed lists (a broadcast
     * join on the partition column — dynamic partition pruning skips
-    * unprobed lists' files), exact re-rank against the raw lake
-    * vectors (an id equi-join on the shortlist, never a corpus scan).
-    * `nprobe <= 0` resolves from the marker — the artifact is
+    * unprobed lists' files), exact re-rank of the fetch·k shortlist
+    * against the raw lake vectors (an id equi-join, never a corpus
+    * scan). `nprobe <= 0` resolves from the marker — the artifact is
     * self-describing.
     */
   def ivfSq8IndexQuery(path: String, vectors: DataFrame, queries: DataFrame,
                        idCol: String, vecCol: String, k: Int,
                        nprobe: Int = -1, fetch: Int = 8): DataFrame = {
     val spark = vectors.sparkSession
-    val np = if (nprobe > 0) nprobe else {
-      val marker = new org.apache.hadoop.fs.Path(path, AnnIndexMarker)
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val in = fs.open(marker)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      """"nprobe"\s*:\s*(\d+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toInt)
-        .getOrElse(throw new IllegalStateException(
-          s"no nprobe in $path/$AnnIndexMarker"))
-    }
+    val np = if (nprobe > 0) nprobe
+      else markerLong(readMarker(spark, path), "nprobe", path).toInt
     val cents = spark.read.parquet(s"$path/centroids")
-      .withColumn("c_nrm", VecFns.norm(col("c_v")))
     val bounds = spark.read.parquet(s"$path/bounds")
-    val q = queries.select(col(idCol).as("q_id"),
-      col(vecCol).cast("array<double>").as("q_v"))
-    val probes = TopK(
-      q.crossJoin(broadcast(cents))
-        .withColumn("c_sc", VecFns.dot(col("q_v"), col("c_v")) / col("c_nrm")),
-      Seq(col("q_id")), Seq(col("c_sc").desc, col("c_id")), np)
-      .select(col("q_id"), col("c_id").as("cluster"))
-    val qr = q.crossJoin(broadcast(bounds))
-      .withColumn("qr", sq8Recon("q_v")).select(col("q_id"), col("qr"))
+    val q = project(queries, idCol, vecCol, "q_", toDouble = true)
+    val probes = nearestLists(q, "q_id", "q_v", cents, np, scaled = true)
+      .select(col("q_id"), col("cluster"))
     val codes = spark.read.parquet(s"$path/codes")
       .select(col("id"), col("vr"), col("cluster").cast("long").as("cluster"))
-    val scored = codes.join(broadcast(probes), "cluster")
-      .filter(col("id") =!= col("q_id"))
-      .join(broadcast(qr), "q_id")
-      .withColumn("dotq", expr(
-        "aggregate(zip_with(qr, vr, (a, b) -> CAST(floor(a * b * 1048576.0D) AS BIGINT)), 0L, (s, p) -> s + p)"))
-    val shortlist = TopK(scored, Seq(col("q_id")), Seq(col("dotq").desc, col("id")), k * fetch)
-      .select(col("q_id"), col("id").as("neighbor_id"),
-        (col("dotq").cast("double") / lit(1048576.0)).as("sq8"),
-        col("rk").cast("long").as("rk"))
-    exactRerank(vectors, queries, idCol, vecCol, k, shortlist)
+    val scored = codes.join(broadcast(probes), "cluster").filter(notSelf)
+      .join(broadcast(sq8Encode(q, bounds, "q_v", "qr")), "q_id")
+      .withColumn("score", sq8Dot)
+    exactRerank(vectors, queries, idCol, vecCol, k,
+      ranked(scored, k * fetch, unquantized.as("sq8")))
   }
 
   /** Exact cosine re-rank of an ANN shortlist: shortlist ids join the
@@ -1323,11 +925,9 @@ object Similarity {
     val scored = shortlist.select(col("q_id"), col("neighbor_id").as("id"))
       .join(v, "id")
       .join(broadcast(q), "q_id")
-      .withColumn("cos", VecFns.cosinePrenormed(
+      .withColumn("score", VecFns.cosinePrenormed(
         VecFns.dot(col("v"), col("q_v")), col("nrm"), col("q_nrm")))
-      .select(col("q_id"), col("id"), col("cos"))
-    TopK(scored, Seq(col("q_id")), Seq(col("cos").desc, col("id")), k)
-      .select(col("q_id"), col("id").as("neighbor_id"),
-        round(col("cos"), 4).as("cosine"), col("rk").cast("long").as("rk"))
+      .select(col("q_id"), col("id"), col("score"))
+    ranked(scored, k, round(col("score"), 4).as("cosine"))
   }
 }

@@ -51,7 +51,7 @@ object RewriteTopK extends Rule[LogicalPlan] {
     case f @ Filter(cond, w: Window) =>
       rewrite(cond, w).getOrElse(f)
     // the analyzer usually leaves Project(outputs, Window) between
-    case f @ Filter(cond, p @ Project(projList, w: Window))
+    case f @ Filter(cond, Project(projList, w: Window))
         if projList.forall(_.isInstanceOf[AttributeReference]) =>
       rewrite(cond, w).map(g => Project(projList, g)).getOrElse(f)
   }

@@ -2,9 +2,8 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.VecFns
-import graft.operators.{Dbscan, Similarity, TopK}
+import graft.operators.{Dbscan, TopK}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-7 continuation wave — distributed unsupervised ML over the

@@ -2,7 +2,8 @@ package graft.queries
 
 import graft.Tables
 import graft.multimodal.BinaryOps
-import graft.operators.Similarity
+import graft.operators.{AnnSpec, Similarity}
+import graft.operators.AnnSpec.{Exact, Flat, Ivf, IvfScaled, Pq, Sq8}
 import graft.streaming.EventStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -185,7 +186,8 @@ object SimilarityQ {
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables(spark, dir).embeddings
-    Similarity.ivfTopK(e, queriesOf(spark, dir), "vec_id", "embedding", k = 10)
+    Similarity.annTopK(e, queriesOf(spark, dir), "vec_id", "embedding", 10,
+      AnnSpec(Ivf(10, 8), Exact, rerank = 0))
       .orderBy($"q_id", $"rk")
   }
 
@@ -265,7 +267,8 @@ object SimilarityQ {
   def annPq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables(spark, dir).embeddings
-    Similarity.pqTopK(e, queriesOf(spark, dir), "vec_id", "embedding", k = 10)
+    Similarity.annTopK(e, queriesOf(spark, dir), "vec_id", "embedding", 10,
+      AnnSpec(Flat, Pq(16, 32, 0), rerank = 0))
       .orderBy($"q_id", $"rk")
   }
 
@@ -298,7 +301,7 @@ object SimilarityQ {
 
   private val annPqSql = annPqSqlK(10)
 
-  /** PQ + exact re-rank ([[Similarity.pqRerankTopK]]): the ADC code
+  /** PQ + exact re-rank (`AnnSpec(Flat, Pq(16, 32, 0), 8)`): the ADC code
     * scan over-fetches 8×k, the exact cosine pass ranks the final 10 —
     * the production recall recovery (RECALL_r10: raw ADC tops out at
     * 0.40 recall@10 on seed codebooks; the re-rank tier restores
@@ -309,7 +312,8 @@ object SimilarityQ {
   def annPqRerank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables(spark, dir).embeddings
-    Similarity.pqRerankTopK(e, queriesOf(spark, dir), "vec_id", "embedding", k = 10)
+    Similarity.annTopK(e, queriesOf(spark, dir), "vec_id", "embedding", 10,
+      AnnSpec(Flat, Pq(16, 32, 0), rerank = 8))
       .orderBy($"q_id", $"rk")
   }
 
@@ -332,7 +336,7 @@ object SimilarityQ {
 
   private val annPqRerankSql = rerankSqlOver(annPqSqlK(80))
 
-  /** SQ8 scalar-quantized scan ([[Similarity.sq8TopK]]): per-dim
+  /** SQ8 scalar-quantized scan (`AnnSpec(Flat, Sq8, 0)`): per-dim
     * [min, max] bounds → 8-bit codes → reconstructed-value scoring
     * with ×2²⁰-integer partials (the PQ-ADC order-independence
     * discipline). The codebook-free quantized tier: 1 byte/dim, no
@@ -341,7 +345,8 @@ object SimilarityQ {
   def annSq8(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables(spark, dir).embeddings
-    Similarity.sq8TopK(e, queriesOf(spark, dir), "vec_id", "embedding", k = 10)
+    Similarity.annTopK(e, queriesOf(spark, dir), "vec_id", "embedding", 10,
+      AnnSpec(Flat, Sq8, rerank = 0))
       .orderBy($"q_id", $"rk")
   }
 
@@ -368,7 +373,7 @@ object SimilarityQ {
 
   private val annSq8Sql = annSq8SqlK(10)
 
-  /** SQ8 + exact re-rank ([[Similarity.sq8RerankTopK]]): the 8×k code
+  /** SQ8 + exact re-rank (`AnnSpec(Flat, Sq8, 8)`): the 8×k code
     * shortlist re-ranks through the shared exact-cosine tail — the
     * production pairing (quantized scan for bandwidth, raw-vector
     * equi-join for final order).
@@ -376,14 +381,15 @@ object SimilarityQ {
   def annSq8Rerank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables(spark, dir).embeddings
-    Similarity.sq8RerankTopK(e, queriesOf(spark, dir), "vec_id", "embedding", k = 10)
+    Similarity.annTopK(e, queriesOf(spark, dir), "vec_id", "embedding", 10,
+      AnnSpec(Flat, Sq8, rerank = 8))
       .orderBy($"q_id", $"rk")
   }
 
   private val annSq8RerankSql = rerankSqlOver(annSq8SqlK(80))
 
   /** Scale-adaptive IVF + SQ8 + exact re-rank
-    * ([[Similarity.ivfSq8RerankScaledTopK]] — the FAISS IVFSQ layout,
+    * (`AnnSpec(IvfScaled(c, np), Sq8, 8)` — the FAISS IVFSQ layout,
     * r13 judge ask #6): coarse lists with corpus-derived c/nprobe
     * prune, the 1-byte/dim SQ8 codes score only the probed lists
     * (where `ann_sq8_rerank` scans every code), the shared exact tail
@@ -397,8 +403,8 @@ object SimilarityQ {
     val e = Tables(spark, dir).embeddings
     val c = Similarity.scaledCentroids(e.count())
     val np = Similarity.scaledNprobe(c)
-    Similarity.ivfSq8RerankScaledTopK(e, queriesOf(spark, dir), "vec_id", "embedding",
-      k = 10, numCentroids = c, nprobe = np, fetch = 8)
+    Similarity.annTopK(e, queriesOf(spark, dir), "vec_id", "embedding", 10,
+      AnnSpec(IvfScaled(c, np), Sq8, rerank = 8))
       .orderBy($"q_id", $"rk")
   }
 
@@ -652,7 +658,7 @@ object SimilarityQ {
        |        FROM sc)
        |SELECT q_id, neighbor_id, sq8, rk FROM srt WHERE rk <= 80 ORDER BY q_id, rk""".stripMargin)
 
-  /** Trained-codebook PQ ([[Similarity.pqTrainedTopK]], 2 Lloyd rounds
+  /** Trained-codebook PQ (`AnnSpec(Flat, Pq(16, 32, 2), 0)`, 2 Lloyd rounds
     * per subspace from the seed slices): the quantization-quality half
     * of the production recovery — codebooks that tile each subspace
     * instead of arbitrary seed vectors. The oracle unrolls both
@@ -665,17 +671,19 @@ object SimilarityQ {
   def annPqTrained(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables(spark, dir).embeddings
-    Similarity.pqTrainedTopK(e, queriesOf(spark, dir), "vec_id", "embedding", k = 10)
+    Similarity.annTopK(e, queriesOf(spark, dir), "vec_id", "embedding", 10,
+      AnnSpec(Flat, Pq(16, 32, 2), rerank = 0))
       .orderBy($"q_id", $"rk")
   }
 
   /** Trained-codebook PQ + exact re-rank — both halves of the recovery
-    * composed ([[Similarity.pqTrainedRerankTopK]]).
+    * composed (`AnnSpec(Flat, Pq(16, 32, 2), 4)`).
     */
   def annPqTrainedRerank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables(spark, dir).embeddings
-    Similarity.pqTrainedRerankTopK(e, queriesOf(spark, dir), "vec_id", "embedding", k = 10)
+    Similarity.annTopK(e, queriesOf(spark, dir), "vec_id", "embedding", 10,
+      AnnSpec(Flat, Pq(16, 32, 2), rerank = 4))
       .orderBy($"q_id", $"rk")
   }
 
@@ -739,7 +747,8 @@ object SimilarityQ {
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables(spark, dir).embeddings
-    Similarity.ivfPqTopK(e, queriesOf(spark, dir), "vec_id", "embedding", k = 10)
+    Similarity.annTopK(e, queriesOf(spark, dir), "vec_id", "embedding", 10,
+      AnnSpec(Ivf(10, 8), Pq(16, 32, 0), rerank = 0))
       .orderBy($"q_id", $"rk")
   }
 
@@ -783,7 +792,7 @@ object SimilarityQ {
 
   private val annIvfPqSql = annIvfPqSqlK(10)
 
-  /** IVF-PQ + exact re-rank ([[Similarity.ivfPqRerankTopK]]): the full
+  /** IVF-PQ + exact re-rank (`AnnSpec(Ivf(10, 8), Pq(16, 32, 0), 8)`): the full
     * three-tier production shape — coarse lists prune, codes score,
     * exact cosine ranks the 8×k ADC shortlist. The 100 TB operating
     * point: (cluster, codes) artifact + nprobe list probes + fetch·k
@@ -792,21 +801,23 @@ object SimilarityQ {
   def annIvfPqRerank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables(spark, dir).embeddings
-    Similarity.ivfPqRerankTopK(e, queriesOf(spark, dir), "vec_id", "embedding", k = 10)
+    Similarity.annTopK(e, queriesOf(spark, dir), "vec_id", "embedding", 10,
+      AnnSpec(Ivf(10, 8), Pq(16, 32, 0), rerank = 8))
       .orderBy($"q_id", $"rk")
   }
 
   private val annIvfPqRerankSql = rerankSqlOver(annIvfPqSqlK(80))
 
-  /** IVF + trained PQ + exact re-rank ([[Similarity
-    * .ivfPqTrainedRerankTopK]]): the complete production stack —
+  /** IVF + trained PQ + exact re-rank (`AnnSpec(Ivf(10, 8), Pq(16,
+    * 32, 2), 4)`): the complete production stack —
     * coarse lists prune, TRAINED codes (min-L2, 2 Lloyd rounds) score,
     * exact cosine ranks the 4×k shortlist.
     */
   def annIvfPqTrainedRerank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables(spark, dir).embeddings
-    Similarity.ivfPqTrainedRerankTopK(e, queriesOf(spark, dir), "vec_id", "embedding", k = 10)
+    Similarity.annTopK(e, queriesOf(spark, dir), "vec_id", "embedding", 10,
+      AnnSpec(Ivf(10, 8), Pq(16, 32, 2), rerank = 4))
       .orderBy($"q_id", $"rk")
   }
 
@@ -876,9 +887,8 @@ object SimilarityQ {
     val e = Tables(spark, dir).embeddings
     val c = Similarity.scaledCentroids(e.count())
     val np = Similarity.scaledNprobe(c)
-    Similarity.ivfPqTrainedRerankScaledTopK(e, queriesOf(spark, dir), "vec_id", "embedding",
-      k = 10, numCentroids = c, nprobe = np, numSub = 16, codebook = 64,
-      iters = 2, fetch = 16)
+    Similarity.annTopK(e, queriesOf(spark, dir), "vec_id", "embedding", 10,
+      AnnSpec(IvfScaled(c, np), Pq(16, 64, 2), rerank = 16))
       .orderBy($"q_id", $"rk")
   }
 
@@ -2226,7 +2236,8 @@ object SimilarityQ {
     val q = queriesOf(spark, dir)
     val bf = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 10)
       .select($"q_id", $"neighbor_id")
-    val iv = Similarity.ivfTopK(e, q, "vec_id", "embedding", k = 10)
+    val iv = Similarity.annTopK(e, q, "vec_id", "embedding", 10,
+      AnnSpec(Ivf(10, 8), Exact, rerank = 0))
       .select($"q_id", $"neighbor_id")
     val hits = bf.join(iv, Seq("q_id", "neighbor_id"))
       .groupBy($"q_id").agg(count(lit(1)).as("n_hit"))

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.TextFns
 import graft.operators.{PrefixSum, Sessionize}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window

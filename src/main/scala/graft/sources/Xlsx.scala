@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream, OutputStream}
 import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
-import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
+import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}

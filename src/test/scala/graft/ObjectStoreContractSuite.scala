@@ -145,7 +145,7 @@ abstract class ObjectStoreContractSuite extends GraftSuite {
   test("bundle export lands on the object store") {
     val out = tmpUri(s"graft_${schemeName}_bundle") + "/bundle"
     val t = Tables(spark, sf0001)
-    Bundle.write(spark, t, Seq("region", "nation"), out)
+    Bundle.write(t, Seq("region", "nation"), out)
     val region = spark.read.option("header", "true").csv(s"$out/region")
     assert(region.count() === 5)
     val manifest = spark.read.json(s"$out/manifest")

@@ -573,9 +573,10 @@ class PlanSpec extends GraftSuite {
 
   test("sq8 scan: bounds and queries broadcast, corpus never reshuffles for scoring") {
     val emb = Tables(spark, sf001).embeddings
-    val p = plan(graft.operators.Similarity.sq8TopK(
+    val p = plan(graft.operators.Similarity.annTopK(
       emb, emb.filter(org.apache.spark.sql.functions.col("vec_id") < 10),
-      "vec_id", "embedding", 10))
+      "vec_id", "embedding", 10,
+      graft.operators.AnnSpec(graft.operators.AnnSpec.Flat, graft.operators.AnnSpec.Sq8, 0)))
     // the d-length bounds row and the 10-query side both arrive by
     // broadcast (1-row and k-row nested loops are the degenerate,
     // correct broadcast forms); the corpus side must not sort-merge

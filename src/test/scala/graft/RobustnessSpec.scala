@@ -58,8 +58,9 @@ class RobustnessSpec extends GraftSuite {
     // PQ with fewer vectors than the codebook: seed set is just smaller
     val tiny = Seq((1L, Array.fill(8)(0.5f)), (2L, Array.fill(8)(0.25f)))
       .toDF("vec_id", "embedding")
-    val pq = graft.operators.Similarity.pqTopK(tiny, tiny, "vec_id", "embedding",
-      k = 5, numSub = 2, codebook = 8).collect()
+    val pq = graft.operators.Similarity.annTopK(tiny, tiny, "vec_id", "embedding", 5,
+      graft.operators.AnnSpec(graft.operators.AnnSpec.Flat,
+        graft.operators.AnnSpec.Pq(numSub = 2, codebook = 8, trainIters = 0), 0)).collect()
     assert(pq.length == 2) // each vector's only neighbor is the other
   }
 
@@ -152,7 +153,7 @@ class RobustnessSpec extends GraftSuite {
   test("bundle export writes normalized CSVs + manifest for all tables") {
     val out = Files.createTempDirectory("graft_bundle").toString + "/bundle"
     val t = Tables(spark, sf0001)
-    Bundle.write(spark, t, Seq("region", "nation"), out)
+    Bundle.write(t, Seq("region", "nation"), out)
     val region = spark.read.option("header", "true").csv(s"$out/region")
     assert(region.count() == 5)
     val manifest = spark.read.json(s"$out/manifest")

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.Similarity
+import graft.operators.{AnnSpec, Similarity}
+import graft.operators.AnnSpec.{Exact, Flat, Ivf, IvfScaled, Pq, Sq8}
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends GraftSuite {
@@ -37,7 +38,7 @@ class SimilaritySpec extends GraftSuite {
 
   test("IVF ANN recall@10 >= 0.7 vs brute force at the shipped default") {
     // floor backs the r10 default (nprobe=8 of 10 lists, measured 0.98)
-    val got = pairs(Similarity.ivfTopK(emb, qs, "vec_id", "embedding", 10))
+    val got = pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", 10, AnnSpec(Ivf(10, 8), Exact, 0)))
     val recall = (got & truth).size.toDouble / truth.size
     info(s"ivf recall@10 = $recall")
     assert(recall >= 0.7)
@@ -79,7 +80,7 @@ class SimilaritySpec extends GraftSuite {
   }
 
   test("PQ ANN returns k ADC-ranked rows per query with recall floor") {
-    val r = Similarity.pqTopK(emb, qs, "vec_id", "embedding", 10)
+    val r = Similarity.annTopK(emb, qs, "vec_id", "embedding", 10, AnnSpec(Flat, Pq(16, 32, 0), 0))
     val rows = r.collect()
     assert(rows.length == qs.count() * 10)
     // ADC descends within each query
@@ -94,12 +95,12 @@ class SimilaritySpec extends GraftSuite {
   }
 
   test("IVF-PQ composes coarse pruning with ADC scoring") {
-    val r = Similarity.ivfPqTopK(emb, qs, "vec_id", "embedding", 10)
+    val r = Similarity.annTopK(emb, qs, "vec_id", "embedding", 10, AnnSpec(Ivf(10, 8), Pq(16, 32, 0), 0))
     val rows = r.collect()
     assert(rows.nonEmpty)
     // every neighbor must come from a probed cluster: cross-check that
     // IVF-PQ's candidate set is a subset of plain IVF's k=huge output
-    val ivfAll = pairs(Similarity.ivfTopK(emb, qs, "vec_id", "embedding", k = 10000))
+    val ivfAll = pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", 10000, AnnSpec(Ivf(10, 8), Exact, 0)))
     val got = pairs(r)
     assert(got.subsetOf(ivfAll), s"candidates escaped the probed clusters: ${(got -- ivfAll).take(3)}")
     val recall = (got & truth).size.toDouble / truth.size
@@ -108,7 +109,7 @@ class SimilaritySpec extends GraftSuite {
   }
 
   test("PQ + exact re-rank recovers brute-force-grade recall (the production tier)") {
-    val r = Similarity.pqRerankTopK(emb, qs, "vec_id", "embedding", 10)
+    val r = Similarity.annTopK(emb, qs, "vec_id", "embedding", 10, AnnSpec(Flat, Pq(16, 32, 0), 8))
     val rows = r.collect()
     assert(rows.length == qs.count() * 10)
     // cosine descends within each query (exact re-rank output contract)
@@ -120,12 +121,12 @@ class SimilaritySpec extends GraftSuite {
     info(s"pq+rerank recall@10 = $recall")
     assert(recall >= 0.8, s"rerank tier must clear 0.8 (raw ADC floor is 0.2): $recall")
     // the re-rank can only surface ids the ADC shortlist contained
-    val shortlist = pairs(Similarity.pqTopK(emb, qs, "vec_id", "embedding", 80))
+    val shortlist = pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", 80, AnnSpec(Flat, Pq(16, 32, 0), 0)))
     assert(pairs(r).subsetOf(shortlist))
   }
 
   test("IVF-PQ + exact re-rank clears the same 0.8 recall floor") {
-    val r = Similarity.ivfPqRerankTopK(emb, qs, "vec_id", "embedding", 10)
+    val r = Similarity.annTopK(emb, qs, "vec_id", "embedding", 10, AnnSpec(Ivf(10, 8), Pq(16, 32, 0), 8))
     val recall = (pairs(r) & truth).size.toDouble / truth.size
     info(s"ivf-pq+rerank recall@10 = $recall")
     assert(recall >= 0.8, s"rerank tier must clear 0.8: $recall")
@@ -135,19 +136,19 @@ class SimilaritySpec extends GraftSuite {
     // min-L2 Lloyd training (the quantizer objective; max-IP assignment
     // measured FLAT vs the seed slices) lifts the 4x-fetch composition
     // past what the untrained 8x fetch reaches (0.93 vs 0.86 at sf0.01)
-    val r = Similarity.pqTrainedRerankTopK(emb, qs, "vec_id", "embedding", 10)
+    val r = Similarity.annTopK(emb, qs, "vec_id", "embedding", 10, AnnSpec(Flat, Pq(16, 32, 2), 4))
     val recall = (pairs(r) & truth).size.toDouble / truth.size
     info(s"pq trained+rerank recall@10 = $recall")
     assert(recall >= 0.8, s"trained rerank tier must clear 0.8: $recall")
     // trained raw ADC should not be WORSE than the seed-codebook ADC
-    val seed = (pairs(Similarity.pqTopK(emb, qs, "vec_id", "embedding", 10)) & truth).size
-    val trained = (pairs(Similarity.pqTrainedTopK(emb, qs, "vec_id", "embedding", 10)) & truth).size
+    val seed = (pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", 10, AnnSpec(Flat, Pq(16, 32, 0), 0))) & truth).size
+    val trained = (pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", 10, AnnSpec(Flat, Pq(16, 32, 2), 0))) & truth).size
     info(s"raw ADC: seed=$seed trained=$trained (of ${truth.size})")
     assert(trained >= seed - 2, "training should not degrade the raw ADC tier")
   }
 
   test("IVF + trained PQ + re-rank (the shipped ivf_pq default) clears 0.8") {
-    val r = Similarity.ivfPqTrainedRerankTopK(emb, qs, "vec_id", "embedding", 10)
+    val r = Similarity.annTopK(emb, qs, "vec_id", "embedding", 10, AnnSpec(Ivf(10, 8), Pq(16, 32, 2), 4))
     val recall = (pairs(r) & truth).size.toDouble / truth.size
     info(s"ivf-pq trained+rerank recall@10 = $recall")
     assert(recall >= 0.8, s"the shipped ivf_pq default must clear 0.8: $recall")
@@ -310,7 +311,7 @@ class SimilaritySpec extends GraftSuite {
     // brute-force contract (same cosine rounding, same tie order)
     val bf = Similarity.bruteForceTopK(emb, qs, "vec_id", "embedding", 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    val sq = Similarity.sq8RerankTopK(emb, qs, "vec_id", "embedding", 10)
+    val sq = Similarity.annTopK(emb, qs, "vec_id", "embedding", 10, AnnSpec(Flat, Sq8, 8))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     assert(sq == bf, "full-coverage shortlist must reproduce brute force exactly")
   }
@@ -334,7 +335,7 @@ class SimilaritySpec extends GraftSuite {
     }
     // and the shortlist ordering the codes induce carries real signal:
     // raw SQ8 top-10 already overlaps brute force heavily at this SF
-    val got = pairs(Similarity.sq8TopK(emb, qs, "vec_id", "embedding", 10))
+    val got = pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", 10, AnnSpec(Flat, Sq8, 0)))
     val recall = (got & truth).size.toDouble / truth.size
     info(s"sq8 raw recall@10 = $recall")
     assert(recall >= 0.9, "8-bit reconstruction must be near-exact at 64 dims")
@@ -349,8 +350,8 @@ class SimilaritySpec extends GraftSuite {
     val n = emb.count()
     val c = scaledCentroids(n)
     val np = scaledNprobe(c)
-    val got = pairs(Similarity.ivfSq8RerankScaledTopK(
-      emb, qs, "vec_id", "embedding", 10, c, np))
+    val got = pairs(Similarity.annTopK(
+      emb, qs, "vec_id", "embedding", 10, AnnSpec(IvfScaled(c, np), Sq8, 8)))
     val recall = (got & truth).size.toDouble / truth.size
     info(s"ivf+sq8 rerank recall@10 = $recall (c=$c np=$np n=$n)")
     assert(recall >= 0.85, s"probed-list SQ8 recall too low: $recall")
@@ -368,7 +369,7 @@ class SimilaritySpec extends GraftSuite {
       .toDF("vec_id", "embedding")
     val far = Seq((100L, Array(1e6)), (101L, Array(-1e6)))
       .toDF("vec_id", "embedding")
-    val out = Similarity.sq8TopK(corpus, far, "vec_id", "embedding", 1)
+    val out = Similarity.annTopK(corpus, far, "vec_id", "embedding", 1, AnnSpec(Flat, Sq8, 0))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     // +1e6 clamps to code 255 (recon 2.55): best dot = 2.55 * 2.55
     assert(out(100L)._1 == 1L)
@@ -431,5 +432,43 @@ class SimilaritySpec extends GraftSuite {
     val perQ = a1.groupBy(_._1)
     assert(perQ.size == 10 && perQ.values.forall(_.length == 10),
       "10 neighbors for each of the 10 queries")
+  }
+
+  test("index build side writes run under each caller's job group") {
+    // the centroids/bounds writes overlap the codes write on threads of
+    // their own; two builds under two job groups in one JVM must tag
+    // every job with their own caller's group, the side writes included
+    import graft.operators.Similarity.{scaledCentroids, scaledNprobe}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val c = scaledCentroids(emb.count())
+    val np = scaledNprobe(c)
+    val sc = spark.sparkContext
+    def groupsOfBuild(group: String): Seq[String] = {
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+      }
+      val sentinel = s"$group-sentinel"
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, "index build")
+        try Similarity.ivfSq8IndexBuild(emb, "vec_id", "embedding", c, np,
+          graft.operators.TempDirs.fresh("graft_annidx_spec"))
+        finally sc.clearJobGroup()
+        sc.setJobGroup(sentinel, "sentinel")
+        try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!groups.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(20)
+      } finally sc.removeSparkListener(listener)
+      val seen = groups.asScala.toSeq
+      assert(seen.lastOption.contains(sentinel), seen)
+      seen.dropRight(1)
+    }
+    Seq("graft-build-a", "graft-build-b").foreach { g =>
+      val seen = groupsOfBuild(g)
+      assert(seen.nonEmpty && seen.forall(_ == g), seen)
+    }
   }
 }
