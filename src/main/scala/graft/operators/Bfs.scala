@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Multi-source breadth-first search over an undirected edge list —
   * hop-count shortest paths (the reachability/radius primitive next
@@ -18,40 +19,30 @@ import org.apache.spark.sql.functions._
   */
 object Bfs {
 
-  /** Symmetrized-edge threshold below which the whole BFS folds into a
-    * single task (r17 round 2 — the ClusterDedup.localComponents
-    * recipe applied to the frontier loop). Each of the `rounds`
-    * frontier expansions plans a join + distinct + anti-join whose
-    * scheduling cost (~0.5-1.5 s/round, CcRoundProbe) dwarfs the KBs
-    * of data the bench graphs move. Hop distances are pure integer
-    * set arithmetic — partitioning- and order-invariant — so one task
-    * reproduces the loop's output bit-identically (BfsSpec pins it).
-    * The default prices one task's memory (4M symmetric rows of two
-    * longs ≈ 64 MB input + the adjacency map); the threshold derives
-    * from the COUNTED data, so at 100 TB the frontier loop below runs
-    * unchanged. Runtime-conf so specs can force either path.
+  /** @param edges   distinct undirected pairs in `u`/`v` columns
+    * @param sources `node` column — distance-0 seeds
+    * @param rounds  fixed hop budget; nodes further than this are absent
     */
-  private val LocalMaxConf = "spark.graft.bfs.localMaxEdges"
-  private val LocalMaxDefault = 4000000L
-
-  /** Exact hop distances of a ≤ localMax-edge graph inside ONE task.
-    * Mirrors the distributed loop verbatim: dist-0 rows are the source
-    * rows AS GIVEN (duplicates preserved — the loop never distincts
-    * them), each round settles the unseen distinct neighbor set of the
-    * previous frontier, and expansion stops at `rounds` hops. Edge and
-    * source rows ride ONE union (tag column) so no driver collect is
-    * ever involved, coalesce(1) folds the cached partitions without a
-    * shuffle, and the output checkpoint keeps the caller's lineage as
-    * shallow as the loop's.
-    */
-  private def localDistances(sym: DataFrame, sources: DataFrame,
-                             rounds: Int): DataFrame = {
-    val spark = sym.sparkSession
+  def distances(edges: DataFrame, sources: DataFrame, rounds: Int): DataFrame = {
+    val spark = edges.sparkSession
     import spark.implicits._
-    val tagged = sym.select(lit(0).as("t"), col("u"), col("v"))
-      .unionByName(sources.select(lit(1).as("t"),
-        col("node").as("u"), lit(-1L).as("v")))
-    tagged.as[(Int, Long, Long)].coalesce(1).mapPartitions { it =>
+    val sym = edges.select(col("u"), col("v"))
+      .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
+      .transform(CacheLedger.persist) // probed every round; released by CacheLedger.release()/clearCache
+    // SINGLE-TASK path for long ids; its count doubles as the cache fill
+    // the loop's first round would otherwise pay inside a bigger job.
+    // It mirrors the loop verbatim: dist-0 rows are the source rows AS
+    // GIVEN (duplicates preserved — the loop never distincts them), each
+    // round settles the unseen distinct neighbor set of the previous
+    // frontier, and expansion stops at `rounds` hops. Edge and source
+    // rows ride ONE union (tag column), so no driver collect is involved.
+    val longIds = Seq("u", "v").forall(c => sym.schema(c).dataType == LongType) &&
+      sources.schema.fields.exists(f => f.name == "node" && f.dataType == LongType)
+    val local = LocalSolve(spark, Option.when(longIds)(
+        sym.select(lit(0).as("t"), col("u"), col("v"))
+          .unionByName(sources.select(lit(1).as("t"), col("node").as("u"), lit(-1L).as("v")))
+          .as[(Int, Long, Long)]),
+        sym.count(), "node", "dist") { it =>
       val adj = scala.collection.mutable.LongMap
         .empty[scala.collection.mutable.ArrayBuffer[Long]]
       val srcRows = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -81,45 +72,20 @@ object Bfs {
         r += 1
       }
       out.iterator
-    }.toDF("node", "dist")
-  }
-
-  /** @param edges   distinct undirected pairs in `u`/`v` columns
-    * @param sources `node` column — distance-0 seeds
-    * @param rounds  fixed hop budget; nodes further than this are absent
-    */
-  def distances(edges: DataFrame, sources: DataFrame, rounds: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val sym = edges.select(col("u"), col("v"))
-      .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
-      .transform(CacheLedger.persist) // probed every round; released by CacheLedger.release()/clearCache
-    // SINGLE-TASK fast path: long-typed graphs whose counted symmetric
-    // edge cardinality fits one task skip the per-round scheduling
-    // entirely; the count doubles as the cache fill the loop's first
-    // round would otherwise pay inside a bigger job.
-    val longIds = {
-      import org.apache.spark.sql.types.LongType
-      Seq("u", "v").forall(c => sym.schema(c).dataType == LongType) &&
-        sources.schema.fields.exists(f =>
-          f.name == "node" && f.dataType == LongType)
     }
-    if (longIds) {
-      val localMax = spark.conf.getOption(LocalMaxConf)
-        .map(_.toLong).getOrElse(LocalMaxDefault)
-      if (localMax > 0 && sym.count() <= localMax)
-        return Checkpoints.truncate(localDistances(sym, sources, rounds))
+    local.getOrElse {
+      var dist = sources.select(col("node"), lit(0L).as("dist"))
+      var frontier = dist.select(col("node"))
+      for (r <- 1 to rounds) {
+        val next = frontier.join(sym, frontier("node") === sym("u"))
+          .select(col("v").as("node")).distinct()
+          .join(dist, Seq("node"), "left_anti")
+          .withColumn("dist", lit(r.toLong))
+          .transform(Checkpoints.truncate(_, eager = false))
+        dist = dist.unionByName(next)
+        frontier = next.select(col("node"))
+      }
+      dist
     }
-    var dist = sources.select(col("node"), lit(0L).as("dist"))
-    var frontier = dist.select(col("node"))
-    for (r <- 1 to rounds) {
-      val next = frontier.join(sym, frontier("node") === sym("u"))
-        .select(col("v").as("node")).distinct()
-        .join(dist, Seq("node"), "left_anti")
-        .withColumn("dist", lit(r.toLong))
-        .transform(Checkpoints.truncate(_, eager = false))
-      dist = dist.unionByName(next)
-      frontier = next.select(col("node"))
-    }
-    dist
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Synchronous label propagation for community detection — the third
   * iterative graph primitive next to [[PageRank]] and
@@ -21,44 +22,35 @@ import org.apache.spark.sql.functions._
   */
 object LabelProp {
 
-  /** Symmetric-edge threshold below which all `rounds` synchronous
-    * rounds fold into a single task (r17 round 2 — the
-    * ClusterDedup.localComponents recipe). Every round of the
-    * distributed loop plans a join + aggregate + window whose
-    * scheduling cost dwarfs the KBs the bench graphs move
-    * (CcRoundProbe: ~0.5-1.5 s/round of fixed cost). The update rule
-    * is pure integer arithmetic with a total tie-break (count desc,
-    * label asc), so one task reproduces the loop bit-identically
-    * (LabelPropSpec pins it). Default prices one task's memory (4M
-    * symmetric rows ≈ 64 MB + the adjacency map); the threshold is
-    * priced off the COUNTED cardinality, so at 100 TB the loop runs
-    * unchanged. Runtime-conf so specs can force either path.
+  /** @param edges (src, dst) pairs, made undirected + deduped here.
+    * Returns (node, label) after `rounds` synchronous rounds, labels
+    * seeded with each node's own id.
     */
-  private val LocalMaxConf = "spark.graft.lpa.localMaxEdges"
-  private val LocalMaxDefault = 4000000L
-
-  /** Exact synchronous LPA of a ≤ localMax-row symmetric edge list in
-    * ONE task. Mirrors the loop verbatim: labels seed as each node's
-    * id, every round each node adopts the most frequent label among
-    * its neighbors' PREVIOUS-round labels, ties to the smallest label.
-    * `und` is already symmetric + distinct, so the adjacency map holds
-    * each node's full neighbor set and every node has ≥ 1 neighbor.
-    *
-    * Node ids here are STRINGS (the gates build "s<k>"/"c<k>" ids), and
-    * the tie-break must order them exactly as Spark's window
-    * `orderBy(label)` does: UTF8String compares UNSIGNED UTF-8 bytes,
-    * which differs from java.lang.String's UTF-16 order outside ASCII —
-    * so nodes are ranked once under an explicit unsigned-byte
-    * comparator and the rounds run on integer ranks (rank order ==
-    * Spark string order, for any input).
-    */
-  private def localRun(und: DataFrame, rounds: Int): DataFrame = {
-    val spark = und.sparkSession
+  def run(edges: DataFrame, rounds: Int): DataFrame = {
+    val spark = edges.sparkSession
     import spark.implicits._
-    und.select(col("u"), col("v")).as[(String, String)]
-      .coalesce(1) // no shuffle: the cached partitions fold into one task
-      .mapPartitions { it =>
-        val edges = it.toArray
+    // persisted via the ledger: the operator returns a LAZY plan, so
+    // release is the caller's move (Verify/Bench clearCache per gate)
+    val und = CacheLedger.persist(
+      edges.select(col("src").as("u"), col("dst").as("v"))
+        .union(edges.select(col("dst"), col("src")))
+        .distinct())
+    // SINGLE-TASK path for string-typed graphs; its count doubles as the
+    // cache fill the loop's first round would otherwise pay inside a
+    // bigger job. It mirrors the loop verbatim: labels seed as each
+    // node's id, every round each node adopts the most frequent label
+    // among its neighbors' PREVIOUS-round labels, ties to the smallest
+    // label. `und` is symmetric + distinct, so the adjacency map holds
+    // each node's full neighbor set. The tie-break must order ids
+    // exactly as the window's `orderBy(label)` does: UTF8String compares
+    // UNSIGNED UTF-8 bytes, which differs from java.lang.String's UTF-16
+    // order outside ASCII — so nodes are ranked once under an explicit
+    // unsigned-byte comparator and the rounds run on integer ranks.
+    val strIds = Seq("u", "v").forall(c => und.schema(c).dataType == StringType)
+    val local = LocalSolve(spark,
+        Option.when(strIds)(und.select(col("u"), col("v")).as[(String, String)]),
+        und.count(), "node", "label") { it =>
+        val pairs = it.toArray
         val ord: Ordering[String] = (a: String, b: String) => {
           val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
           val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -70,12 +62,12 @@ object LabelProp {
           }
           if (c != 0) c else x.length - y.length
         }
-        val nodes = edges.iterator.flatMap(e => Iterator(e._1, e._2))
+        val nodes = pairs.iterator.flatMap(e => Iterator(e._1, e._2))
           .toArray.distinct.sorted(ord)
         val idx = nodes.iterator.zipWithIndex.toMap
         val adj = Array.fill(nodes.length)(
           scala.collection.mutable.ArrayBuffer.empty[Int])
-        edges.foreach { case (u, v) => adj(idx(u)) += idx(v) }
+        pairs.foreach { case (u, v) => adj(idx(u)) += idx(v) }
         var labels = Array.tabulate(nodes.length)(identity)
         for (_ <- 1 to rounds) {
           val next = new Array[Int](nodes.length)
@@ -100,49 +92,22 @@ object LabelProp {
         }
         nodes.indices.iterator.map(i => (nodes(i), nodes(labels(i))))
       }
-      .toDF("node", "label")
-  }
-
-  /** @param edges (src, dst) pairs, made undirected + deduped here.
-    * Returns (node, label) after `rounds` synchronous rounds, labels
-    * seeded with each node's own id.
-    */
-  def run(edges: DataFrame, rounds: Int): DataFrame = {
-    // persisted via the ledger: the operator returns a LAZY plan, so
-    // release is the caller's move (Verify/Bench clearCache per gate)
-    val und = CacheLedger.persist(
-      edges.select(col("src").as("u"), col("dst").as("v"))
-        .union(edges.select(col("dst"), col("src")))
-        .distinct())
-    // SINGLE-TASK fast path: long-typed graphs whose counted symmetric
-    // edge cardinality fits one task skip the per-round scheduling
-    // entirely; the count doubles as the cache fill the loop's first
-    // round would otherwise pay inside a bigger job.
-    val spark = edges.sparkSession
-    val strIds = {
-      import org.apache.spark.sql.types.StringType
-      Seq("u", "v").forall(c => und.schema(c).dataType == StringType)
+    local.getOrElse {
+      val nodes = und.select(col("u").as("node")).distinct()
+      var labels = nodes.select(col("node"), col("node").as("label"))
+      for (_ <- 1 to rounds) {
+        val counts = und
+          .join(labels, und("v") === labels("node"))
+          .groupBy(und("u").as("n"), col("label"))
+          .agg(count(lit(1)).as("c"))
+        val best = counts
+          .withColumn("rk", row_number().over(
+            Window.partitionBy(col("n")).orderBy(col("c").desc, col("label"))))
+          .filter(col("rk") === 1)
+          .select(col("n").as("node"), col("label"))
+        labels = Checkpoints.truncate(best, eager = false)
+      }
+      labels
     }
-    if (strIds) {
-      val localMax = spark.conf.getOption(LocalMaxConf)
-        .map(_.toLong).getOrElse(LocalMaxDefault)
-      if (localMax > 0 && und.count() <= localMax)
-        return Checkpoints.truncate(localRun(und, rounds))
-    }
-    val nodes = und.select(col("u").as("node")).distinct()
-    var labels = nodes.select(col("node"), col("node").as("label"))
-    for (_ <- 1 to rounds) {
-      val counts = und
-        .join(labels, und("v") === labels("node"))
-        .groupBy(und("u").as("n"), col("label"))
-        .agg(count(lit(1)).as("c"))
-      val best = counts
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("n")).orderBy(col("c").desc, col("label"))))
-        .filter(col("rk") === 1)
-        .select(col("n").as("node"), col("label"))
-      labels = Checkpoints.truncate(best, eager = false)
-    }
-    labels
   }
 }

@@ -252,9 +252,9 @@ class AnalyticsSpec extends GraftSuite {
     def run() = graft.operators.Bfs.distances(edges, srcs, rounds = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val fast = run()
-    spark.conf.set("spark.graft.bfs.localMaxEdges", "0")
+    spark.conf.set("spark.graft.localMaxEdges", "0")
     val loop = try run()
-      finally spark.conf.unset("spark.graft.bfs.localMaxEdges")
+      finally spark.conf.unset("spark.graft.localMaxEdges")
     assert(fast == loop,
       s"fast≠loop: ${fast.diff(loop).take(5)} vs ${loop.diff(fast).take(5)}")
   }

@@ -104,9 +104,9 @@ class GraphSpec extends GraftSuite {
       .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
     for (rounds <- Seq(1, 3)) {
       val fast = run(rounds)
-      spark.conf.set("spark.graft.lpa.localMaxEdges", "0")
+      spark.conf.set("spark.graft.localMaxEdges", "0")
       val loop = try run(rounds)
-        finally spark.conf.unset("spark.graft.lpa.localMaxEdges")
+        finally spark.conf.unset("spark.graft.localMaxEdges")
       assert(fast == loop,
         s"rounds=$rounds fast≠loop: ${fast.diff(loop).take(5)} vs ${loop.diff(fast).take(5)}")
     }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.TopK
+import graft.operators.{Bfs, ClusterDedup, LabelProp, LocalSolve, TopK}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -124,6 +124,62 @@ class PropertySpec extends GraftSuite {
           .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
         assert(native == window)
       }
+    }
+  }
+
+  /** `f` on the single-task path, then with the threshold at 0 (every
+    * graph operator's distributed loop). */
+  private def bothPaths[A](f: => A): (A, A) =
+    (f, withSQLConf(LocalSolve.MaxEdgesConf -> "0")(f))
+
+  // one graph per trial, each shape on its own id range: a random graph
+  // over 0..19 (its own self-loops and repeats included), a chain over
+  // 100.. longer than the 4-hop BFS budget, isolated self-loops over
+  // 200.., and a repeated subset of all of those edges
+  private val graphGen: Gen[Seq[(Long, Long)]] = for {
+    nRand <- Gen.choose(0, 30)
+    rand <- Gen.listOfN(nRand, Gen.zip(Gen.choose(0L, 19L), Gen.choose(0L, 19L)))
+    chainLen <- Gen.choose(0, 12)
+    nLoops <- Gen.choose(0, 3)
+    base = rand ++ (100L until 100L + chainLen).map(a => (a, a + 1)) ++
+      (200L until 200L + nLoops).map(a => (a, a))
+    dupes <- Gen.someOf(base)
+  } yield base ++ dupes
+
+  // LPA ids: every "Ａ" (U+FF21) id sorts before every "😀" (U+1F600) id
+  // in unsigned UTF-8 (Spark's string order) but after it in UTF-16, so
+  // each tie between an even and an odd id exercises the single-task
+  // tie-break's byte comparator
+  private def lpaId(i: Long): String = (if (i % 2 == 0) "Ａ" else "😀") + i
+
+  test("graph operators give the same output on the single-task path and the distributed loop") {
+    def cc(es: Seq[(Long, Long)]) = bothPaths(ClusterDedup.connectedComponents(
+        es.map { case (a, b) => (a min b, a max b) }.toDF("id_a", "id_b"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+    def bfs(es: Seq[(Long, Long)], srcs: Seq[Long]) = bothPaths(Bfs.distances(
+        es.toDF("u", "v"), srcs.toDF("node"), rounds = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+    def lpa(es: Seq[(Long, Long)], rounds: Int) = bothPaths(LabelProp.run(
+        es.map { case (a, b) => (lpaId(a), lpaId(b)) }.toDF("src", "dst"), rounds)
+      .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq)
+    def check[A](what: String, got: (Seq[A], Seq[A])): Unit = {
+      val (fast, loop) = got
+      assert(fast == loop,
+        s"$what fast≠loop: ${fast.diff(loop).take(5)} vs ${loop.diff(fast).take(5)}")
+    }
+    // empty edge lists and empty source lists
+    check("cc empty", cc(Nil))
+    check("bfs empty", bfs(Nil, Nil))
+    check("bfs no edges", bfs(Nil, Seq(1L, 1L)))
+    check("bfs no sources", bfs(Seq((1L, 2L)), Nil))
+    check("lpa empty", lpa(Nil, 2))
+    // sources mix graph nodes, chain heads, a repeat and an absent id
+    val srcGen = Gen.listOf(Gen.oneOf(0L, 5L, 100L, 100L, 200L, 999L)).map(_.take(4))
+    forAll(Gen.zip(graphGen, srcGen, Gen.choose(1, 4)), trials = 12) {
+      case (es, srcs, rounds) =>
+        check(s"cc $es", cc(es))
+        check(s"bfs $es from $srcs", bfs(es, srcs))
+        check(s"lpa $es rounds=$rounds", lpa(es, rounds))
     }
   }
 }
