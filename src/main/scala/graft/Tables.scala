@@ -13,8 +13,11 @@ final case class Tables(spark: SparkSession, dir: String) {
     * [[graft.sources.BucketedLake]] marker reads through a
     * re-registered bucketed table (joins/aggregates on the bucket key
     * skip their exchange — the write-once layout survives into every
-    * session); a plain directory is a plain parquet read. The marker
-    * probe is one `getFileStatus` per load — nothing at scan time.
+    * session); a plain directory or file is a parquet read whose schema
+    * comes from one footer on the driver
+    * ([[graft.sources.ParquetRead]]), so a load runs no Spark job. The
+    * marker probe is one `getFileStatus` per load, the footer read one
+    * listing and one footer — nothing at scan time.
     */
   private def load(name: String): DataFrame =
     graft.sources.BucketedLake.read(spark, s"$dir/$name.parquet")
@@ -27,11 +30,10 @@ final case class Tables(spark: SparkSession, dir: String) {
   def orders: DataFrame     = load("orders")
   def lineitem: DataFrame   = load("lineitem")
 
-  /** events.parquet stores `ts` as TIMESTAMP(NANOS), which Spark's
-    * parquet reader rejects; with `spark.sql.legacy.parquet.nanosAsLong`
-    * (set in GraftSession/Verify/Bench) it arrives as a nanos long and
-    * is converted here. Integer division — nanos (~1.7e18) overflow
-    * double precision.
+  /** events.parquet stores `ts` as TIMESTAMP(NANOS); with
+    * `spark.sql.legacy.parquet.nanosAsLong` (set in GraftSession) it
+    * arrives as a nanos long and is converted here. Integer division —
+    * nanos (~1.7e18) overflow double precision.
     */
   def events: DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}

@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Minimal lakehouse commit log — the transaction-log pattern behind
@@ -395,6 +396,6 @@ object CommitLog {
                version: Option[Long] = None): DataFrame = {
     val files = liveFiles(spark, tableDir, version).map(n => s"$tableDir/$n")
     if (files.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(files: _*)
+    else ParquetRead.read(spark, files: _*)
   }
 }

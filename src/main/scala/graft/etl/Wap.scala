@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -91,7 +92,7 @@ object Wap {
         "pointer swap is the object-store-safe publish")
     recover(spark, root, table) // heal a crashed prior swap before anything else
     df.write.mode("overwrite").parquet(stagedPath)
-    val staged = spark.read.parquet(stagedPath)
+    val staged = ParquetRead.read(spark, stagedPath)
     val audit = Validation.annotate(staged, rules)
       .agg(count(lit(1)).as("n"),
         coalesce(sum(when(!col("acceptable"), 1L).otherwise(0L)), lit(0L)).as("bad"))
@@ -121,7 +122,7 @@ object Wap {
       require(f.rename(new org.apache.hadoop.fs.Path(stagedPath), serving),
         s"rename $stagedPath -> $servingPath failed")
       if (hadPrev) f.delete(prev, true)
-      val published = spark.read.parquet(servingPath)
+      val published = ParquetRead.read(spark, servingPath)
       val d = TableDigest.digest(published, table, digestCols(published))
         .collect().head
       WapReport(table, published = true, n, bad, d.getLong(2), servingPath, stagedPath)
@@ -160,7 +161,7 @@ object Wap {
     val staged = CommitLog.stageData(spark, df, tableDir)
     if (staged.isEmpty) // a zero-file write can never clear the row floor
       return VersionedWapReport(tableDir, published = false, 0L, 0L, 0L, -1L)
-    val stagedDf = spark.read.parquet(staged.map(n => s"$tableDir/$n"): _*)
+    val stagedDf = ParquetRead.read(spark, staged.map(n => s"$tableDir/$n"): _*)
     val audit = Validation.annotate(stagedDf, rules)
       .agg(count(lit(1)).as("n"),
         coalesce(sum(when(!col("acceptable"), 1L).otherwise(0L)), lit(0L)).as("bad"))

@@ -38,11 +38,14 @@ object Bfs {
     // rows ride ONE union (tag column), so no driver collect is involved.
     val longIds = Seq("u", "v").forall(c => sym.schema(c).dataType == LongType) &&
       sources.schema.fields.exists(f => f.name == "node" && f.dataType == LongType)
+    // the loop's `node` is nullable when a source or a reached neighbor
+    // can be; its `dist` is a literal
+    val nullNodes = sources.schema("node").nullable || (rounds > 0 && sym.schema("v").nullable)
     val local = LocalSolve(spark, Option.when(longIds)(
         sym.select(lit(0).as("t"), col("u"), col("v"))
           .unionByName(sources.select(lit(1).as("t"), col("node").as("u"), lit(-1L).as("v")))
           .as[(Int, Long, Long)]),
-        sym.count(), "node", "dist") { it =>
+        sym.count(), "node" -> nullNodes, "dist" -> false) { it =>
       val adj = scala.collection.mutable.LongMap
         .empty[scala.collection.mutable.ArrayBuffer[Long]]
       val srcRows = scala.collection.mutable.ArrayBuffer.empty[Long]

@@ -75,9 +75,11 @@ object ClusterDedup {
       // min id of everything merged into it: the propagation loop's
       // fixpoint. The eager checkpoint runs it before p0 unpersists.
       val longIds = Seq("id_a", "id_b").forall(c => p0.schema(c).dataType == LongType)
+      // the loop's columns are nullable exactly when an input id column is
+      val nullIds = Seq("id_a", "id_b").exists(c => p0.schema(c).nullable)
       val local = LocalSolve(spark,
           Option.when(longIds)(p0.select(col("id_a"), col("id_b")).as[(Long, Long)]), nEdges,
-          "id", "cluster") { it =>
+          "id" -> nullIds, "cluster" -> nullIds) { it =>
           val parent = scala.collection.mutable.LongMap.empty[Long]
           def find(x: Long): Long = {
             var r = x

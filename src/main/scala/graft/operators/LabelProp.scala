@@ -49,7 +49,7 @@ object LabelProp {
     val strIds = Seq("u", "v").forall(c => und.schema(c).dataType == StringType)
     val local = LocalSolve(spark,
         Option.when(strIds)(und.select(col("u"), col("v")).as[(String, String)]),
-        und.count(), "node", "label") { it =>
+        und.count(), "node" -> true, "label" -> true) { it =>
         val pairs = it.toArray
         val ord: Ordering[String] = (a: String, b: String) => {
           val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.functions.{col, when}
 
 /** The one way the iterative graph operators solve a small input inside
   * a single task: [[ClusterDedup]]'s components (union-find), [[Bfs]]'s
@@ -32,17 +33,26 @@ object LocalSolve {
     * DataFrame with columns `cols`, when `input` is defined (the caller's
     * id-type guard passed) and `rows` symmetric-edge rows fit the
     * threshold; `None` tells the caller to run its distributed loop.
+    * Each column comes with the nullability the loop's output gives it,
+    * so a gate writes one schema whichever path ran: a column the
+    * encoder makes `not null` (a primitive) that the loop's makes
+    * nullable is relaxed by a projection the optimizer folds away, and
+    * a frame with nothing to relax is checkpointed as it is.
     * The threshold is read and checked first, whatever the input, so a
     * value that is not a non-negative integer throws on every graph.
     * `input` and `rows` are by-name: at a threshold of 0 nothing is
     * counted, and an ineligible input is never built.
     */
   def apply[T, U: Encoder](spark: SparkSession, input: => Option[Dataset[T]], rows: => Long,
-      cols: String*)(solve: Iterator[T] => Iterator[U]): Option[DataFrame] = {
+      cols: (String, Boolean)*)(solve: Iterator[T] => Iterator[U]): Option[DataFrame] = {
     val limit = spark.conf.getOption(MaxEdgesConf).fold(MaxEdgesDefault)(v =>
       v.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
         s"$MaxEdgesConf must be a non-negative integer, got '$v'")))
-    input.filter(_ => limit > 0 && rows <= limit).map(ds =>
-      Checkpoints.truncate(ds.coalesce(1).mapPartitions(solve).toDF(cols: _*)))
+    input.filter(_ => limit > 0 && rows <= limit).map { ds =>
+      val out = ds.coalesce(1).mapPartitions(solve).toDF(cols.map(_._1): _*)
+      val relax = cols.collect { case (c, true) if !out.schema(c).nullable => c }.toSet
+      Checkpoints.truncate(if (relax.isEmpty) out else out.select(out.columns.toSeq.map(c =>
+        if (relax(c)) when(col(c).isNotNull, col(c)).as(c) else col(c)): _*))
+    }
   }
 }

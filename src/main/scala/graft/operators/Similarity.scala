@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VecFns
+import graft.sources.ParquetRead
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -869,8 +870,8 @@ object Similarity {
     val spark = delta.sparkSession
     val dw = CacheLedger.persist(widen(project(delta, idCol, vecCol, "", toDouble = true)))
     val nNew = dw.count()
-    val cents = spark.read.parquet(s"$path/centroids")
-    val bounds = spark.read.parquet(s"$path/bounds")
+    val cents = ParquetRead.read(spark, s"$path/centroids")
+    val bounds = ParquetRead.read(spark, s"$path/bounds")
     sq8Encode(nearestLists(dw, "id", "v", cents, 1, scaled = true), bounds, "v", "vr")
       // one appended file per touched list (the build's layout rule)
       .repartition(writeWidth(spark, nNew), col("cluster"))
@@ -895,12 +896,12 @@ object Similarity {
     val spark = vectors.sparkSession
     val np = if (nprobe > 0) nprobe
       else markerLong(readMarker(spark, path), "nprobe", path).toInt
-    val cents = spark.read.parquet(s"$path/centroids")
-    val bounds = spark.read.parquet(s"$path/bounds")
+    val cents = ParquetRead.read(spark, s"$path/centroids")
+    val bounds = ParquetRead.read(spark, s"$path/bounds")
     val q = project(queries, idCol, vecCol, "q_", toDouble = true)
     val probes = nearestLists(q, "q_id", "q_v", cents, np, scaled = true)
       .select(col("q_id"), col("cluster"))
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = ParquetRead.read(spark, s"$path/codes")
       .select(col("id"), col("vr"), col("cluster").cast("long").as("cluster"))
     val scored = codes.join(broadcast(probes), "cluster").filter(notSelf)
       .join(broadcast(sq8Encode(q, bounds, "q_v", "qr")), "q_id")

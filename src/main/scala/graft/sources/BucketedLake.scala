@@ -83,7 +83,9 @@ object BucketedLake {
 
   /** Read `path`: with a layout marker present, through a re-registered
     * external bucketed table (so joins/aggregates on the bucket key
-    * skip their exchange); otherwise a plain parquet read. The catalog
+    * skip their exchange); otherwise a plain parquet read through
+    * [[ParquetRead]], whose schema comes from one footer on the driver
+    * with no Spark job (the table's marker carries its schema). The catalog
     * entry is deterministic per path; a registration created from an
     * EARLIER marker (the path was re-written with a different spec —
     * ADVICE r12) is detected by the marker-content fingerprint stored
@@ -94,7 +96,7 @@ object BucketedLake {
   def read(spark: SparkSession, path: String): DataFrame = {
     val marker = new Path(path, MarkerFile)
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) return spark.read.parquet(path)
+    if (!fs.exists(marker)) return ParquetRead.read(spark, path)
     val raw = readFully(fs, marker)
     val spec = parse(raw)
     val fp = java.security.MessageDigest.getInstance("MD5")

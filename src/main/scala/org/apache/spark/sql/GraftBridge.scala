@@ -26,4 +26,12 @@ object GraftBridge {
 
   def logicalPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].logicalPlan
+
+  /** Whether Spark's file index skips a file or directory of this name
+    * when it lists a table (`_`/`.` names, except the parquet summary
+    * files and `k=v` partition directories) — `HadoopFSUtils` is
+    * `private[spark]`.
+    */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.{CurateQ, GraphQ}
-import org.apache.spark.sql.functions._
 
 /** Round-7 wave K (queries/CurateQ.scala + GraphQ.qModularity). */
 class CurateSpec extends GraftSuite {

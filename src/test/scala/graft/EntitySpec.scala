@@ -28,7 +28,7 @@ class EntitySpec extends GraftSuite {
 
   test("BlockedMatch.levWithin agrees with Spark's levenshtein at every threshold") {
     import graft.operators.BlockedMatch.levWithin
-    import org.apache.spark.sql.functions.{col, levenshtein, lit}
+    import org.apache.spark.sql.functions.{col, levenshtein}
     val strs = Seq("", "a", "ab", "Customer#000000123", "Customer#000015124",
       "Custmer#000000123", "kitten", "sitting", "flaw", "lawn",
       "μüαβ", "μüβ", "αβγδ", "identical", "identical")
@@ -88,7 +88,6 @@ class EntitySpec extends GraftSuite {
   }
 
   test("fellegi-sunter: true copies outscore chance collisions") {
-    import org.apache.spark.sql.functions._
     val rows = EntityQ.qFellegiSunter(spark, sf0001).collect()
     assert(rows.nonEmpty)
     val matches = rows.filter(_.getAs[Boolean]("is_match"))

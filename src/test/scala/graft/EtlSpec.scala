@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import graft.etl.{Normalize, Validation}
 import graft.sources.{Intake, SniffCsv}
-import org.apache.spark.sql.functions._
 
 class EtlSpec extends GraftSuite {
   import spark.implicits._

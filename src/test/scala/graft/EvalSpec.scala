@@ -1,11 +1,9 @@
 package graft
 
 import graft.queries.EvalQ
-import org.apache.spark.sql.functions._
 
 /** Round-7 wave M (queries/EvalQ.scala). */
 class EvalSpec extends GraftSuite {
-  import spark.implicits._
 
   test("BPE training: merges are real pairs and symbol count shrinks each round") {
     val rows = EvalQ.textBpeTrain(spark, sf0001).collect().sortBy(_.getAs[Long]("round"))

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.TopK
-import org.apache.spark.sql.functions._
 
 class GroupTopKSpec extends GraftSuite {
   import spark.implicits._

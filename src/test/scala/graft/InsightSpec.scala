@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.InsightQ
-import org.apache.spark.sql.functions._
 
 /** Round-7 wave L (queries/InsightQ.scala). */
 class InsightSpec extends GraftSuite {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.OptimQ
-import org.apache.spark.sql.functions._
 
 /** Round-7 optimizer-infrastructure wave (queries/OptimQ.scala). */
 class OptimSpec extends GraftSuite {

@@ -1,7 +1,9 @@
 package graft
 
 import graft.operators.{Bfs, ClusterDedup, LabelProp, LocalSolve, TopK}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -153,32 +155,45 @@ class PropertySpec extends GraftSuite {
   private def lpaId(i: Long): String = (if (i % 2 == 0) "Ａ" else "😀") + i
 
   test("graph operators give the same output on the single-task path and the distributed loop") {
-    def cc(es: Seq[(Long, Long)]) = bothPaths(ClusterDedup.connectedComponents(
-        es.map { case (a, b) => (a min b, a max b) }.toDF("id_a", "id_b"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
-    def bfs(es: Seq[(Long, Long)], srcs: Seq[Long]) = bothPaths(Bfs.distances(
-        es.toDF("u", "v"), srcs.toDF("node"), rounds = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
-    def lpa(es: Seq[(Long, Long)], rounds: Int) = bothPaths(LabelProp.run(
-        es.map { case (a, b) => (lpaId(a), lpaId(b)) }.toDF("src", "dst"), rounds)
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq)
-    def check[A](what: String, got: (Seq[A], Seq[A])): Unit = {
-      val (fast, loop) = got
+    // each path's output schema, and its rows sorted
+    def out[A: Ordering: scala.reflect.ClassTag](df: DataFrame)(row: Row => A) =
+      (df.schema, df.collect().map(row).sorted.toSeq)
+    // long ids as `toDF` gives them (not null) or as a lake gives them
+    // (nullable): the loops' output nullability follows the input's
+    def pairs(es: Seq[(Long, Long)], nullable: Boolean, a: String, b: String) =
+      if (nullable) es.map { case (x, y) => (Option(x), Option(y)) }.toDF(a, b)
+      else es.toDF(a, b)
+    def cc(es: Seq[(Long, Long)], nullable: Boolean = false) =
+      bothPaths(out(ClusterDedup.connectedComponents(pairs(
+        es.map { case (a, b) => (a min b, a max b) }, nullable, "id_a", "id_b")))(
+      r => (r.getLong(0), r.getLong(1))))
+    def bfs(es: Seq[(Long, Long)], srcs: Seq[Long], nullable: Boolean = false) =
+      bothPaths(out(Bfs.distances(pairs(es, nullable, "u", "v"),
+        if (nullable) srcs.map(Option(_)).toDF("node") else srcs.toDF("node"), rounds = 4))(
+      r => (r.getLong(0), r.getLong(1))))
+    def lpa(es: Seq[(Long, Long)], rounds: Int) = bothPaths(out(LabelProp.run(
+        es.map { case (a, b) => (lpaId(a), lpaId(b)) }.toDF("src", "dst"), rounds))(
+      r => (r.getString(0), r.getString(1))))
+    def check[A](what: String, got: ((StructType, Seq[A]), (StructType, Seq[A]))): Unit = {
+      val ((fastSchema, fast), (loopSchema, loop)) = got
+      assert(fastSchema == loopSchema,
+        s"$what fast schema ${fastSchema.fields.mkString(", ")} ≠ loop ${loopSchema.fields.mkString(", ")}")
       assert(fast == loop,
         s"$what fast≠loop: ${fast.diff(loop).take(5)} vs ${loop.diff(fast).take(5)}")
     }
     // empty edge lists and empty source lists
     check("cc empty", cc(Nil))
+    check("cc empty nullable", cc(Nil, nullable = true))
     check("bfs empty", bfs(Nil, Nil))
     check("bfs no edges", bfs(Nil, Seq(1L, 1L)))
     check("bfs no sources", bfs(Seq((1L, 2L)), Nil))
     check("lpa empty", lpa(Nil, 2))
     // sources mix graph nodes, chain heads, a repeat and an absent id
     val srcGen = Gen.listOf(Gen.oneOf(0L, 5L, 100L, 100L, 200L, 999L)).map(_.take(4))
-    forAll(Gen.zip(graphGen, srcGen, Gen.choose(1, 4)), trials = 12) {
-      case (es, srcs, rounds) =>
-        check(s"cc $es", cc(es))
-        check(s"bfs $es from $srcs", bfs(es, srcs))
+    forAll(Gen.zip(graphGen, srcGen, Gen.choose(1, 4), Gen.oneOf(false, true)), trials = 12) {
+      case (es, srcs, rounds, nullable) =>
+        check(s"cc $es nullable=$nullable", cc(es, nullable))
+        check(s"bfs $es from $srcs nullable=$nullable", bfs(es, srcs, nullable))
         check(s"lpa $es rounds=$rounds", lpa(es, rounds))
     }
   }

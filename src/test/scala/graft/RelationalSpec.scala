@@ -30,7 +30,6 @@ class RelationalSpec extends GraftSuite {
     // must stay silent and the sums must equal the default-partitioned
     // run exactly (both phases sum exact integers, so partitioning
     // cannot change the answer)
-    import org.apache.spark.sql.functions._
     val base = Relational.q1PricingSummary(spark, sf0001).collect().toSeq
     val one = spark.read.parquet(s"$sf0001/lineitem.parquet").coalesce(1)
     val dir1 = java.nio.file.Files.createTempDirectory("graft_q1_guard").toString

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 /** Round-7 robustness wave (queries/RobustQ.scala). */
 class RobustQSpec extends GraftSuite {
-  import spark.implicits._
 
   test("quarantine intake keeps clean rows and captures ragged raw lines") {
     val r = RobustQ.etlQuarantine(spark, sf0001).collect().head

@@ -169,7 +169,6 @@ class SeriesSpec extends GraftSuite {
   }
 
   test("granger: a saturated (zero-residual) fit reports NULL F, not a crash") {
-    import org.apache.spark.sql.Row
     val xs = Seq(5L, 9L, 2L, 8L, 3L, 7L, 4L, 6L, 1L, 9L)
     val rows = xs.indices.drop(1).map(t => (t.toLong, 3L * xs(t - 1), xs(t)))
     val out = SeriesQ.granger(rows.toDF("day", "y", "x")).collect()

@@ -364,7 +364,6 @@ class SimilaritySpec extends GraftSuite {
     // outside on both sides must score as if they were the boundary —
     // so BOTH queries rank the near-boundary corpus row first and the
     // reconstructed dot (sq8 column) equals boundary·boundary.
-    import org.apache.spark.sql.functions._
     val corpus = Seq((0L, Array(0.0)), (1L, Array(2.55)), (2L, Array(1.00)))
       .toDF("vec_id", "embedding")
     val far = Seq((100L, Array(1e6)), (101L, Array(-1e6)))

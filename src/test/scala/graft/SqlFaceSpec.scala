@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 /** Round-7 API-surface wave (queries/SqlFaceQ.scala). */
 class SqlFaceSpec extends GraftSuite {
-  import spark.implicits._
 
   test("native expressions resolve through the SQL face with sane outputs") {
     val rows = SqlFaceQ.qSqlExtensions(spark, sf0001).collect()

@@ -1,6 +1,5 @@
 package graft
 
-import graft.streaming.EventStream
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 

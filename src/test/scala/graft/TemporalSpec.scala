@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.TemporalQ
-import org.apache.spark.sql.functions._
 
 /** Round-7 temporal/relational-algebra wave (queries/TemporalQ.scala). */
 class TemporalSpec extends GraftSuite {

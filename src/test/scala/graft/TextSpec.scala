@@ -36,7 +36,10 @@ class TextSpec extends GraftSuite {
     // route through a temp view shaped like documents
     val got = graft.queries.Text.textLangid(spark, sf0001)
     assert(got.columns.contains("pred_lang"))
-    val mini = df.withColumn("source", lit("x")).withColumn("n_chars", length($"text"))
+    // each marker-dominant doc is predicted as its own language
+    val pred = Text.langidOf(df).select($"doc_id", $"pred_lang", $"lang")
+      .as[(Long, String, String)].collect()
+    assert(pred.toSeq == Seq((1L, "de", "de"), (2L, "en", "en"), (3L, "es", "es")))
     // directly exercise marker logic via tokensIn
     val cnt = df.select(TextFns.tokensIn($"text", Seq("der", "die", "und", "das"))).as[Long].collect()
     assert(cnt.toSeq == Seq(4L, 0L, 0L))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.Xlsx
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.io.ByteArrayOutputStream
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 /** The dependency-free XLSX reader must handle the format's real
