@@ -338,17 +338,9 @@ object Bench {
            |        best = dt if best is None or dt < best else best
            |    print(f"ORACLE {name} {best:.4f}")
            |""".stripMargin
-      def jq(s: String): String = "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-      val sqlJson = sf1.flatMap { case (n, _) => SparkEntry.oracleSql.get(n).map(n -> _) }
-        .map { case (n, s) => s"${jq(n)}: ${jq(s)}" }.mkString("{", ",", "}")
+      import scala.jdk.CollectionConverters._
+      val sqlJson = new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(
+        sf1.flatMap { case (n, _) => SparkEntry.oracleSql.get(n).map(n -> _) }.toMap.asJava)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("/tmp/graft_bench_sf1/_oracle_sql.json"), sqlJson)
       val pyFile = java.nio.file.Files.writeString(

@@ -34,9 +34,6 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); read as long, converted
-      // back to micros in Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // micros-lake variant: naive parquet timestamps read as TIMESTAMP
       // (session is UTC, so instants are identical) — keeps filter
       // pushdown on date columns instead of a plan-side NTZ cast

@@ -30,26 +30,18 @@ final case class Tables(spark: SparkSession, dir: String) {
   def orders: DataFrame     = load("orders")
   def lineitem: DataFrame   = load("lineitem")
 
-  /** events.parquet stores `ts` as TIMESTAMP(NANOS); with
-    * `spark.sql.legacy.parquet.nanosAsLong` (set in GraftSession) it
-    * arrives as a nanos long and is converted here. Integer division —
-    * nanos (~1.7e18) overflow double precision.
+  /** events.parquet stores `ts` as TIMESTAMP(NANOS), which Spark reads
+    * as a microsecond TIMESTAMP. A TIMESTAMP(MICROS,
+    * isAdjustedToUTC=false) lake reads as TIMESTAMP_NTZ instead; naive
+    * micros ≡ UTC instants under the session's UTC zone, so the cast is
+    * value-preserving and restores the TIMESTAMP type the whole
+    * operator surface (unix_micros etc.) consumes.
     */
   def events: DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     val raw = load("events")
-    raw.schema("ts").dataType match {
-      case LongType => // TIMESTAMP(NANOS) lake read under nanosAsLong
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType => // TIMESTAMP(MICROS, isAdjustedToUTC=false) lake:
-        // naive micros ≡ UTC instants under the session's UTC zone —
-        // the cast is value-preserving and restores the TIMESTAMP type
-        // the whole operator surface (unix_micros etc.) consumes
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.col("ts").cast("timestamp"))
-      case _ => raw
-    }
+    if (raw.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
+      raw.withColumn("ts", org.apache.spark.sql.functions.col("ts").cast("timestamp"))
+    else raw
   }
   def documents: DataFrame  = load("documents")
   def embeddings: DataFrame = load("embeddings")

@@ -2,55 +2,19 @@ package graft.queries
 
 import graft.Tables
 import graft.multimodal.BinaryOps
-import graft.operators.{AnnSpec, Similarity}
+import graft.operators.{AnnSpec, Similarity, TempDirs}
 import graft.operators.AnnSpec.{Exact, Flat, Ivf, IvfScaled, Pq, Sq8}
 import graft.streaming.EventStream
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Similarity search (§2.4), multimodal (§2.6) and streaming-shape
   * (§2.7) queries.
   */
 object SimilarityQ {
-
-  /** Typed failure for the replay harnesses' driver-side collects: the
-    * three micro-batch replay gates are documented as gate-scale
-    * HARNESSES (the collected corpus feeds MemoryStream batch by
-    * batch; the joined/stateful plan under test is the distributed
-    * one), so the collect is bounded by contract — this cap enforces
-    * the contract instead of merely commenting it, the same recipe as
-    * [[graft.sources.Xlsx]]'s `toLocalIterator` row guard. A future sf
-    * bump that would silently pull a huge table to the driver fails
-    * with this error, not an OOM.
-    */
-  final case class ReplayCorpusTooLarge(rows: Long, cap: Long)
-    extends RuntimeException(
-      s"replay-harness corpus exceeds $cap driver-side rows (saw row $rows): " +
-        "the stream_*_replay gates collect the gate corpus to feed MemoryStream " +
-        "micro-batches and are bounded by contract — run the replay on a " +
-        "gate-scale slice, not a production table")
-
-  private[graft] val ReplayRowCap = 2000000L
-
-  /** Bounded driver-side collect for the replay harnesses: streams
-    * through `toLocalIterator` (one partition on the driver at a time)
-    * and throws the typed [[ReplayCorpusTooLarge]] at `cap` instead of
-    * materializing an over-contract corpus.
-    */
-  private[graft] def collectReplay[T: scala.reflect.ClassTag](
-      ds: org.apache.spark.sql.Dataset[T], cap: Long = ReplayRowCap): Array[T] = {
-    import scala.jdk.CollectionConverters._
-    val buf = scala.collection.mutable.ArrayBuffer.empty[T]
-    val it = ds.toLocalIterator().asScala
-    var n = 0L
-    for (r <- it) {
-      n += 1
-      if (n > cap) throw ReplayCorpusTooLarge(n, cap)
-      buf += r
-    }
-    buf.toArray
-  }
 
   private def queriesOf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -474,7 +438,7 @@ object SimilarityQ {
     // scratch-ledger dir (r16, judge ADVICE #1): swept by the next
     // CacheLedger.release() / JVM exit, so battery re-invocations no
     // longer accumulate corpus-sized index copies under /tmp
-    val idx = graft.operators.TempDirs.fresh("graft_annidx")
+    val idx = TempDirs.fresh("graft_annidx")
     Similarity.ivfSq8IndexBuild(e, "vec_id", "embedding", c, np, idx)
     // query side resolves nprobe from the marker — the artifact, not
     // the session, carries the operating point
@@ -505,7 +469,7 @@ object SimilarityQ {
     val delta = e.filter($"vec_id" % 10 === 3)
     val c = Similarity.scaledCentroids(base.count())
     val np = Similarity.scaledNprobe(c)
-    val idx = graft.operators.TempDirs.fresh("graft_annidx")
+    val idx = TempDirs.fresh("graft_annidx")
     Similarity.ivfSq8IndexBuild(base, "vec_id", "embedding", c, np, idx)
     Similarity.ivfSq8IndexAppend(idx, delta, "vec_id", "embedding")
     Similarity.ivfSq8IndexQuery(idx, e, queriesOf(spark, dir),
@@ -529,7 +493,7 @@ object SimilarityQ {
     val e = Tables(spark, dir).embeddings
     val c = Similarity.scaledCentroids(e.count())
     val np = Similarity.scaledNprobe(c)
-    val idx = graft.operators.TempDirs.fresh("graft_annidx")
+    val idx = TempDirs.fresh("graft_annidx")
     Similarity.ivfSq8IndexBuild(e, "vec_id", "embedding", c, np, idx, trainRounds = 2)
     Similarity.ivfSq8IndexQuery(idx, e, queriesOf(spark, dir),
       "vec_id", "embedding", k = 10, fetch = 8)
@@ -1576,13 +1540,170 @@ object SimilarityQ {
       |WHERE c.event_type = 'click' AND p.event_type = 'purchase'
       |ORDER BY c.user_id, click_id, purchase_id""".stripMargin
 
+  /** Typed failure for [[collectReplay]]: the replay gates collect
+    * their corpus to the driver to feed MemoryStream batch by batch
+    * (the joined/stateful plan under test is the distributed one), so
+    * the collect is bounded by contract — this cap enforces the
+    * contract instead of merely commenting it, the same recipe as
+    * [[graft.sources.Xlsx]]'s `toLocalIterator` row guard. A future sf
+    * bump that would silently pull a huge table to the driver fails
+    * with this error, not an OOM.
+    */
+  final case class ReplayCorpusTooLarge(rows: Long, cap: Long)
+    extends RuntimeException(
+      s"replay-harness corpus exceeds $cap driver-side rows (saw row $rows): " +
+        "the stream_*_replay gates collect the gate corpus to feed MemoryStream " +
+        "micro-batches and are bounded by contract — run the replay on a " +
+        "gate-scale slice, not a production table")
+
+  private[graft] val ReplayRowCap = 2000000L
+
+  /** Bounded driver-side collect for every replay gate's corpus: streams
+    * through `toLocalIterator` (one partition on the driver at a time)
+    * and throws the typed [[ReplayCorpusTooLarge]] at `cap` instead of
+    * materializing an over-contract corpus.
+    */
+  private[graft] def collectReplay[T](ds: Dataset[T], cap: Long = ReplayRowCap): Seq[T] = {
+    import scala.jdk.CollectionConverters._
+    val buf = Vector.newBuilder[T]
+    var n = 0L
+    for (r <- ds.toLocalIterator().asScala) {
+      n += 1
+      if (n > cap) throw ReplayCorpusTooLarge(n, cap)
+      buf += r
+    }
+    buf.result()
+  }
+
+  /** Splits an ordered replay corpus into 4 contiguous micro-batches,
+    * all of one size but the last; a corpus of fewer than 4 rows
+    * leaves the trailing batches empty.
+    */
+  private def chunks[T](rows: Seq[T]): Seq[Seq[T]] =
+    rows.grouped(math.max(1, (rows.length + 3) / 4)).toSeq.padTo(4, Seq.empty)
+
+  /** A replay `feed` that adds `batches` to `in` in order, one
+    * micro-batch each (`processAllAvailable` between batches makes the
+    * watermark progression deterministic); an empty batch adds nothing.
+    */
+  private def inOrder[T](in: MemoryStream[T], batches: Seq[Seq[T]])(q: StreamingQuery): Unit =
+    batches.foreach { b =>
+      if (b.nonEmpty) in.addData(b)
+      q.processAllAvailable()
+    }
+
+  /** The harness every replay gate runs: a gate collects its corpus
+    * ([[collectReplay]]), splits it ([[chunks]]), builds its plan on
+    * [[stream]]s of this harness's child session and hands it to
+    * [[replay]] with the `feed` that drives the micro-batches. Only the
+    * source and the sink are harness; the plan under test is the same
+    * distributed streaming plan a cluster runs against Kafka.
+    *
+    * The child session shares the SparkContext and owns its SQLConf,
+    * with replay-sized shuffle partitions: a stateful micro-batch
+    * commits one state-store instance per shuffle partition per
+    * stateful operator, and at the battery's 32 partitions the 4-batch
+    * replays spent most of their wall clock in near-empty store
+    * commits. 4 partitions keeps the replay distributed and changes
+    * nothing semantically — the gates hash-match the batch oracle at
+    * any partitioning (that is the point of the exact-integer folds).
+    * `rocksDb` selects the RocksDB state store, which
+    * `transformWithState` requires.
+    */
+  private final class Replay(spark: SparkSession, rocksDb: Boolean = false) {
+    val session: SparkSession = spark.newSession()
+    session.conf.set("spark.sql.shuffle.partitions", "4")
+    // every processAllAvailable otherwise appends a trailing NO-DATA
+    // micro-batch to publish the new watermark — doubling the
+    // per-replay batch count, each a full commit cycle. The replays
+    // never rely on no-data flushes: every gate that needs the tail
+    // drained feeds explicit sentinel DATA batches (wave 2 exists
+    // precisely because a watermark takes effect one batch late), so
+    // the emitted row set is identical.
+    session.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    if (rocksDb) session.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+    def stream[T: Encoder]: MemoryStream[T] = MemoryStream[T](session)
+
+    /** Starts `out` in output `mode`, runs `feed`, stops the query and
+      * reads the output back with an explicit schema — the streaming
+      * frame's own — so a zero-row commit cannot throw schema inference
+      * off. Executors write the output and the driver never holds it.
+      * An `append` stream writes the parquet file sink. An `update`
+      * stream (the file sink is append-only) goes through `foreachBatch`
+      * with an idempotent per-epoch overwrite: each micro-batch
+      * overwrites its own `b<epoch>` directory, so a replayed epoch
+      * (restart re-runs the same id) rewrites the same files instead of
+      * double-appending, and the read-back unions every epoch's
+      * emissions. Sink and checkpoint dirs are fast (RAM-backed when
+      * available) scratch-ledger entries ([[TempDirs]]): the replay's
+      * cost is per-micro-batch commit latency, most of it checkpoint
+      * and sink fsync on a disk tmpdir; the ledger sweeps both after
+      * the gate's output materializes.
+      */
+    def replay(out: DataFrame, mode: String)(feed: StreamingQuery => Unit): DataFrame = {
+      val sinkDir = TempDirs.freshFast("graft_stream_sink")
+      val w = out.writeStream.outputMode(mode)
+        .option("checkpointLocation", TempDirs.freshFast("graft_stream_ck"))
+      val (q, read) = mode match {
+        case "append" => (w.format("parquet").option("path", sinkDir).start(), spark.read)
+        case "update" => (w.foreachBatch { (b: DataFrame, id: Long) =>
+          b.write.mode("overwrite").parquet(s"$sinkDir/b$id")
+        }.start(), spark.read.option("recursiveFileLookup", "true"))
+      }
+      try feed(q) finally q.stop()
+      read.schema(out.schema).parquet(sinkDir)
+    }
+  }
+
+  /** Clicks and purchases of the lake's events as two streams, each
+    * split into 4 contiguous event-time chunks; chunk i of both sides
+    * makes micro-batch i. `join` is the plan under test, written
+    * append-mode. `drainWaves` far-future sentinel waves follow the
+    * real batches: each adds a user −1 click and a user −2 purchase
+    * (mutually non-matching) 10 more hours ahead, and wave w+1 is what
+    * promotes wave w's max into the effective watermark.
+    */
+  private def clickPurchaseReplay(spark: SparkSession, dir: String, drainWaves: Int)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    import spark.implicits._
+    val h = new Replay(spark)
+    val e = Tables(spark, dir).events
+      .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id",
+        $"value".cast("double").as("value"), $"event_type")
+    def side(tpe: String): Seq[(Long, Long, Long, Double)] =
+      collectReplay(e.filter($"event_type" === tpe)
+        .select($"user_id", $"ts_us", $"event_id", $"value")
+        .as[(Long, Long, Long, Double)]).sortBy(r => (r._2, r._3))
+    val (clicks, buys) = (side("click"), side("purchase"))
+    val (cs, ps) = (h.stream[(Long, Long, Long, Double)], h.stream[(Long, Long, Long, Double)])
+    def asEvents(m: MemoryStream[(Long, Long, Long, Double)]): DataFrame =
+      m.toDS().toDF("user_id", "ts_us", "event_id", "value")
+        .withColumn("ts", expr("timestamp_micros(ts_us)"))
+        .withWatermark("ts", "2 hours")
+    h.replay(join(asEvents(cs), asEvents(ps)), "append") { q =>
+      chunks(clicks).zip(chunks(buys)).foreach { case (c, p) =>
+        if (c.nonEmpty) cs.addData(c)
+        if (p.nonEmpty) ps.addData(p)
+        q.processAllAvailable()
+      }
+      lazy val maxUs = (clicks ++ buys).map(_._2).max
+      (1 to drainWaves).foreach { w =>
+        val t = maxUs + w * 10 * 3600000000L
+        cs.addData((-1L, t, -w.toLong, 0.0))
+        ps.addData((-2L, t, -w.toLong, 0.0))
+        q.processAllAvailable()
+      }
+    }
+  }
+
   /** TRUE micro-batch replay of the stream-stream interval join
     * ([[EventStream.intervalJoin]]): clicks and purchases each split
     * into 4 contiguous event-time chunks, fed through two
-    * MemoryStreams batch by batch (`processAllAvailable` between
-    * batches makes the watermark progression deterministic), appended
-    * to a memory sink, and compared against the SAME batch SQL oracle
-    * as `q_interval_join`. Feeding each stream in nondecreasing
+    * MemoryStreams batch by batch, appended to the harness's file sink,
+    * and compared against the SAME batch SQL oracle as
+    * `q_interval_join`. Feeding each stream in nondecreasing
     * event-time order means no row ever arrives behind the global
     * watermark, so the streaming result provably equals the complete
     * batch join — the replay proves the state-expiry bound drops
@@ -1590,117 +1711,9 @@ object SimilarityQ {
     * HARNESS, not the operator: the joined plan is the same
     * distributed stream-stream join a cluster runs against Kafka.
     */
-  /** Child session for the replay harnesses: same SparkContext, OWN
-    * SQLConf with replay-sized shuffle partitions. A stateful
-    * streaming micro-batch commits one state-store instance per
-    * shuffle partition per stateful operator; at the battery's 32
-    * partitions the 4-batch replays spent most of their wall clock in
-    * near-empty store commits. 4 partitions keeps the replay
-    * distributed and changes NOTHING semantically — the gates
-    * hash-match the batch oracle at any partitioning (that is the
-    * point of the exact-integer folds).
-    */
-  private def replaySession(spark: SparkSession): SparkSession = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    // r16: every processAllAvailable otherwise appends a trailing
-    // NO-DATA micro-batch to publish the new watermark — doubling the
-    // per-replay batch count, each a full commit cycle. The replays
-    // never rely on no-data flushes: every gate that needs the tail
-    // drained feeds explicit sentinel DATA batches (wave 2 exists
-    // precisely because a watermark takes effect one batch late), so
-    // the emitted row set is identical — re-proved by the oracle
-    // hash-compare on all nine replay gates at sf0.01 + sf0.1.
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    ss
-  }
-
-  /** FILE-sink replay transport (r16, judge r15 ask #2 — every replay
-    * gate now runs it; r15 proved the pattern on static/outer): the
-    * append-mode stream writes parquet under a scratch-ledger sink
-    * (executors write, the driver never holds the output — the deploy
-    * shape, and the harness's driver-memory ceiling is gone), `feed`
-    * drives the micro-batches, and the committed files read back with
-    * an EXPLICIT schema — the streaming frame's own — so a
-    * zero-row commit cannot throw schema inference off (judge r15
-    * ADVICE #4). Values are identical to the memory sink's: the sink
-    * only changes transport, and parquet round-trips of
-    * long/double/string columns are bit-exact, so gate hashes are
-    * unchanged. Sink + checkpoint dirs are scratch-ledger entries
-    * ([[graft.operators.TempDirs]]), swept after the gate's output
-    * materializes.
-    */
-  private def fileSinkReplay(spark: SparkSession, out: DataFrame)(
-      feed: org.apache.spark.sql.streaming.StreamingQuery => Unit): DataFrame = {
-    // fast (RAM-backed when available) scratch: the replay's cost is
-    // per-micro-batch commit latency, ~0.5-0.7 s of which was
-    // checkpoint/sink fsync to the disk tmpdir (r16 StreamProbe) —
-    // exactly what a production deployment's fast checkpoint volume
-    // removes. Both dirs are bounded (offsets/state deltas + the
-    // gate's own output) and swept by the scratch ledger.
-    val sinkDir = graft.operators.TempDirs.freshFast("graft_stream_sink")
-    val ckpt = graft.operators.TempDirs.freshFast("graft_stream_ck")
-    val q = out.writeStream.outputMode("append").format("parquet")
-      .option("path", sinkDir).option("checkpointLocation", ckpt).start()
-    try feed(q) finally q.stop()
-    spark.read.schema(out.schema).parquet(sinkDir)
-  }
-
-  /** [[fileSinkReplay]] for UPDATE-mode streams (the parquet sink is
-    * append-only, so update emissions route through `foreachBatch` +
-    * an idempotent per-epoch partition overwrite — the production
-    * recipe for update-mode file output): each micro-batch OVERWRITES
-    * its own `b<epoch>` directory, so a replayed epoch (restart
-    * re-runs the same id) rewrites the same files instead of
-    * double-appending — exactly-once output without a transactional
-    * sink. The read-back unions all epochs' emissions, which is
-    * precisely what the memory sink's table held.
-    */
-  private def foreachBatchReplay(spark: SparkSession, out: DataFrame)(
-      feed: org.apache.spark.sql.streaming.StreamingQuery => Unit): DataFrame = {
-    val sinkDir = graft.operators.TempDirs.freshFast("graft_stream_sink")
-    val ckpt = graft.operators.TempDirs.freshFast("graft_stream_ck")
-    val q = out.writeStream.outputMode("update")
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        b.write.mode("overwrite").parquet(s"$sinkDir/b$id")
-      }
-      .option("checkpointLocation", ckpt).start()
-    try feed(q) finally q.stop()
-    spark.read.schema(out.schema)
-      .option("recursiveFileLookup", "true").parquet(sinkDir)
-  }
-
-  def streamIntervalReplay(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val ss = replaySession(spark)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
-    val e = Tables(spark, dir).events
-      .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id",
-        $"value".cast("double").as("value"), $"event_type")
-    def side(tpe: String): Array[(Long, Long, Long, Double)] =
-      collectReplay(e.filter($"event_type" === tpe)
-        .select($"user_id", $"ts_us", $"event_id", $"value")
-        .as[(Long, Long, Long, Double)]).sortBy(r => (r._2, r._3))
-    def chunks(a: Array[(Long, Long, Long, Double)]) = {
-      val sz = math.max(1, (a.length + 3) / 4)
-      a.grouped(sz).toSeq.padTo(4, Array.empty[(Long, Long, Long, Double)])
-    }
-    val (clicks, buys) = (chunks(side("click")), chunks(side("purchase")))
-    val cs = MemoryStream[(Long, Long, Long, Double)]
-    val ps = MemoryStream[(Long, Long, Long, Double)]
-    def asEvents(m: MemoryStream[(Long, Long, Long, Double)]): DataFrame =
-      m.toDS().toDF("user_id", "ts_us", "event_id", "value")
-        .withColumn("ts", expr("timestamp_micros(ts_us)"))
-        .withWatermark("ts", "2 hours")
-    fileSinkReplay(spark, EventStream.intervalJoin(asEvents(cs), asEvents(ps))) { q =>
-      (0 until 4).foreach { i =>
-        if (clicks(i).nonEmpty) cs.addData(clicks(i).toSeq)
-        if (buys(i).nonEmpty) ps.addData(buys(i).toSeq)
-        q.processAllAvailable()
-      }
-    }.orderBy($"user_id", $"click_id", $"purchase_id")
-  }
+  def streamIntervalReplay(spark: SparkSession, dir: String): DataFrame =
+    clickPurchaseReplay(spark, dir, drainWaves = 0)(EventStream.intervalJoin)
+      .orderBy("user_id", "click_id", "purchase_id")
 
   private val streamIntervalReplaySql = qIntervalJoinSql
 
@@ -1718,54 +1731,11 @@ object SimilarityQ {
     * Sentinel rows are filtered from the sink; the result must equal
     * the complete batch LEFT JOIN the oracle runs, null rows included.
     */
-  def streamOuterReplay(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val ss = replaySession(spark)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
-    val e = Tables(spark, dir).events
-      .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id",
-        $"value".cast("double").as("value"), $"event_type")
-    def side(tpe: String): Array[(Long, Long, Long, Double)] =
-      collectReplay(e.filter($"event_type" === tpe)
-        .select($"user_id", $"ts_us", $"event_id", $"value")
-        .as[(Long, Long, Long, Double)]).sortBy(r => (r._2, r._3))
-    def chunks(a: Array[(Long, Long, Long, Double)]) = {
-      val sz = math.max(1, (a.length + 3) / 4)
-      a.grouped(sz).toSeq.padTo(4, Array.empty[(Long, Long, Long, Double)])
-    }
-    val (clicks, buys) = (chunks(side("click")), chunks(side("purchase")))
-    val maxUs = (clicks.flatten ++ buys.flatten).map(_._2).max
-    val cs = MemoryStream[(Long, Long, Long, Double)]
-    val ps = MemoryStream[(Long, Long, Long, Double)]
-    def asEvents(m: MemoryStream[(Long, Long, Long, Double)]): DataFrame =
-      m.toDS().toDF("user_id", "ts_us", "event_id", "value")
-        .withColumn("ts", expr("timestamp_micros(ts_us)"))
-        .withWatermark("ts", "2 hours")
-    // FILE sink + read-back (r15, judge r14 ask #6; scratch-ledger
-    // dirs + explicit-schema read since r16): executors write the
-    // joined rows, the driver never holds the output; hash unchanged
-    fileSinkReplay(spark, EventStream.intervalJoinOuter(asEvents(cs), asEvents(ps))) { q =>
-      (0 until 4).foreach { i =>
-        if (clicks(i).nonEmpty) cs.addData(clicks(i).toSeq)
-        if (buys(i).nonEmpty) ps.addData(buys(i).toSeq)
-        q.processAllAvailable()
-      }
-      // drain: each wave advances event time 10 more hours; the
-      // sentinel click (user −1) and purchase (user −2) can't match
-      // anything, and wave w+1 is what promotes wave w's max into the
-      // effective watermark
-      val hour = 3600000000L
-      (1 to 2).foreach { w =>
-        val t = maxUs + w * 10 * hour
-        cs.addData((-1L, t, -w.toLong, 0.0))
-        ps.addData((-2L, t, -w.toLong, 0.0))
-        q.processAllAvailable()
-      }
-    }.filter(col("user_id") >= 0)
-      .select($"user_id", $"click_id", $"purchase_id", $"c_us", $"purchase_value")
-      .orderBy($"user_id", $"click_id", $"purchase_id")
-  }
+  def streamOuterReplay(spark: SparkSession, dir: String): DataFrame =
+    clickPurchaseReplay(spark, dir, drainWaves = 2)(EventStream.intervalJoinOuter)
+      .filter(col("user_id") >= 0)
+      .select("user_id", "click_id", "purchase_id", "c_us", "purchase_value")
+      .orderBy("user_id", "click_id", "purchase_id")
 
   private val streamOuterReplaySql =
     """SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
@@ -1786,31 +1756,18 @@ object SimilarityQ {
     */
   def streamStaticReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val ss = replaySession(spark)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
+    val h = new Replay(spark)
     val evs = collectReplay(Tables(spark, dir).events
       .select($"user_id", $"event_id", $"value".cast("double"))
       .as[(Long, Long, Double)]).sortBy(_._2)
-    val sz = math.max(1, (evs.length + 3) / 4)
-    val batches = evs.grouped(sz).toSeq
-    val dim = Tables(ss, dir).customer.select($"c_custkey", $"c_mktsegment")
-    val input = MemoryStream[(Long, Long, Double)]
+    val dim = Tables(h.session, dir).customer.select($"c_custkey", $"c_mktsegment")
+    val input = h.stream[(Long, Long, Double)]
     val enriched = input.toDS().toDF("user_id", "event_id", "value")
       .join(broadcast(dim), $"user_id" === $"c_custkey")
       .select($"user_id", $"event_id", $"c_mktsegment",
         round($"value", 4).as("value"))
-    // FILE sink + read-back (r15, judge r14 ask #6): the memory sink
-    // collected every enriched row onto the driver, so the gate
-    // harness was bounded by driver memory however distributed the
-    // plan — the parquet sink is the deploy shape (executors write,
-    // nothing aggregates on the driver) and removes the ceiling
-    // before the parity lake grows. Values are identical: the sink
-    // only changes transport, and parquet DOUBLE round-trips are
-    // bit-exact, so the gate hash is unchanged.
-    fileSinkReplay(spark, enriched) { q =>
-      batches.foreach { b => input.addData(b.toSeq); q.processAllAvailable() }
-    }.select($"user_id", $"event_id", $"c_mktsegment", $"value")
+    h.replay(enriched, "append")(inOrder(input, chunks(evs)))
+      .select($"user_id", $"event_id", $"c_mktsegment", $"value")
       .orderBy($"event_id")
   }
 
@@ -1834,32 +1791,21 @@ object SimilarityQ {
     */
   def streamOhlcReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val ss = replaySession(spark)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
+    val h = new Replay(spark)
     val evs = collectReplay(Tables(spark, dir).events
       .select(unix_micros($"ts").as("ts_us"), $"event_id",
         $"value".cast("double"), $"event_type")
       .as[(Long, Long, Double, String)]).sortBy(r => (r._1, r._2))
-    val sz = math.max(1, (evs.length + 3) / 4)
-    val batches = evs.grouped(sz).toSeq.padTo(4, Array.empty[(Long, Long, Double, String)])
     val maxUs = evs.map(_._1).max
-    val input = MemoryStream[(Long, Long, Double, String)]
+    val input = h.stream[(Long, Long, Double, String)]
     val bars = EventStream.ohlcBarsCents(
       input.toDS().toDF("ts_us", "event_id", "value", "event_type")
         .withColumn("ts", expr("timestamp_micros(ts_us)"))
         .withWatermark("ts", "2 hours"))
-    fileSinkReplay(spark, bars) { q =>
-      batches.foreach { b =>
-        if (b.nonEmpty) input.addData(b.toSeq)
-        q.processAllAvailable()
-      }
-      val hour = 3600000000L
-      (1 to 2).foreach { w =>
-        input.addData((maxUs + w * 10 * hour, -w.toLong, 0.0, "zz_sentinel"))
-        q.processAllAvailable()
-      }
-    }.filter(col("event_type") =!= "zz_sentinel")
+    val drain = (1 to 2).map(w =>
+      Seq((maxUs + w * 10 * 3600000000L, -w.toLong, 0.0, "zz_sentinel")))
+    h.replay(bars, "append")(inOrder(input, chunks(evs) ++ drain))
+      .filter(col("event_type") =!= "zz_sentinel")
       .orderBy($"window_start_us", $"event_type")
   }
 
@@ -1876,7 +1822,7 @@ object SimilarityQ {
     * tracker ([[EventStream.spendTracker]], RocksDB state store):
     * purchase events split into 4 deterministic `event_id`-ordered
     * micro-batches, folded through per-user (count, total, max)
-    * integer-cents state, update-mode rows collected per batch. Each
+    * integer-cents state, update-mode rows written per batch. Each
     * per-user statistic is CUMULATIVE and nondecreasing, so the final
     * state is the per-user max over all emitted rows — and equals the
     * batch aggregate the oracle computes, whatever the batch split.
@@ -1886,24 +1832,17 @@ object SimilarityQ {
     */
   def streamSpendReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val ss = replaySession(spark)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
+    val h = new Replay(spark, rocksDb = true)
     val evs = collectReplay(Tables(spark, dir).events
       .filter($"event_type" === "purchase")
       .select($"user_id", $"event_id", $"value".cast("double"))
       .as[(Long, Long, Double)])
       .sortBy(_._2)
       .map(t => EventStream.ValEv(t._1, t._2, t._3))
-    val sz = math.max(1, (evs.length + 3) / 4)
-    val batches = evs.grouped(sz).toSeq
-    // the provider set on the THROWAWAY child session — nothing to restore
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[EventStream.ValEv]
-    foreachBatchReplay(spark, EventStream.spendTracker(input.toDS()).toDF()) { q =>
-      batches.foreach { b => input.addData(b.toSeq); q.processAllAvailable() }
-    }.groupBy($"user_id")
+    val input = h.stream[EventStream.ValEv]
+    h.replay(EventStream.spendTracker(input.toDS()).toDF(), "update")(
+        inOrder(input, chunks(evs)))
+      .groupBy($"user_id")
       .agg(max($"n").as("n"), max($"total_cents").as("total_cents"),
         max($"max_cents").as("max_cents"))
       .orderBy($"user_id")
@@ -1935,14 +1874,12 @@ object SimilarityQ {
     */
   def streamCdcReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val ss = replaySession(spark)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
+    val h = new Replay(spark, rocksDb = true)
     val o = Tables(spark, dir).orders
       .select($"o_orderkey", $"o_orderstatus",
         round($"o_totalprice" * 100).cast("long").as("cents"))
     def tier(v: Long, filt: org.apache.spark.sql.Column,
-             cents: org.apache.spark.sql.Column, op: String): Array[EventStream.CdcEv] =
+             cents: org.apache.spark.sql.Column, op: String): Seq[EventStream.CdcEv] =
       collectReplay(o.filter(filt)
           .select($"o_orderkey", $"o_orderstatus", cents.as("c"))
           .as[(Long, String, Long)])
@@ -1952,16 +1889,11 @@ object SimilarityQ {
       tier(1L, $"o_orderkey" % 10 >= 8, $"cents", "I"),
       tier(2L, $"o_orderkey" % 7 === 0, expr("(cents * 11) div 10"), "U"),
       tier(3L, $"o_orderkey" % 13 === 0, lit(0L), "D"))
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[EventStream.CdcEv]
-    foreachBatchReplay(spark, EventStream.cdcApplyStream(input.toDS()).toDF()) { q =>
-      batches.foreach { b =>
-        if (b.nonEmpty) input.addData(b.toSeq); q.processAllAvailable()
-      }
-    }.withColumn("rk", org.apache.spark.sql.functions.row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy($"key").orderBy($"version".desc)))
+    val input = h.stream[EventStream.CdcEv]
+    h.replay(EventStream.cdcApplyStream(input.toDS()).toDF(), "update")(
+        inOrder(input, batches))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy($"key").orderBy($"version".desc)))
       .filter($"rk" === 1 && $"op" =!= "D")
       .groupBy($"status")
       .agg(count(lit(1)).as("n_orders"), sum($"cents").as("total_cents"),
@@ -1989,9 +1921,7 @@ object SimilarityQ {
     */
   def streamDedupReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val ss = replaySession(spark)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
+    val h = new Replay(spark)
     val evs = collectReplay(Tables(spark, dir).events
       .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id", $"event_type")
       .as[(Long, Long, Long, String)]).sortBy(r => (r._2, r._3))
@@ -2004,38 +1934,18 @@ object SimilarityQ {
     require(evs.iterator.map(_._3).toSet.size == evs.length,
       "stream_dedup_replay fixture has duplicate event_ids: the batch-DISTINCT " +
         "oracle and the dedup-by-event_id stream would no longer state the same contract")
-    val sz = math.max(1, (evs.length + 3) / 4)
-    val batches = evs.grouped(sz).toSeq.padTo(4, Array.empty[(Long, Long, Long, String)])
-    val in = MemoryStream[(Long, Long, Long, String)]
+    val batches = chunks(evs)
+    // each chunk twice, then the previous chunk's last event again
+    val delivered = batches.zip(Seq.empty +: batches).map { case (b, prev) =>
+      b ++ b ++ prev.lastOption
+    }
+    val in = h.stream[(Long, Long, Long, String)]
     val src = in.toDS().toDF("user_id", "ts_us", "event_id", "event_type")
       .withColumn("ts", expr("timestamp_micros(ts_us)"))
       .withWatermark("ts", "2 hours")
-    val name = "stream_dedup_replay_" + java.util.UUID.randomUUID().toString.take(8)
-    val q = EventStream.dedupStream(src)
-      .select($"user_id", $"event_id", $"ts_us", $"event_type")
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      // explicit fast-scratch checkpoint: without it Spark allocates
-      // one in the disk tmpdir and every micro-batch pays commit
-      // fsync there (r16 StreamProbe: ~0.5-0.7 s/batch)
-      .option("checkpointLocation", graft.operators.TempDirs.freshFast("graft_stream_ck"))
-      .start()
-    try {
-      (0 until 4).foreach { i =>
-        val replayTail =
-          if (i > 0 && batches(i - 1).nonEmpty) Seq(batches(i - 1).last) else Seq.empty
-        val b = batches(i)
-        if ((b ++ b ++ replayTail).nonEmpty) in.addData(b.toSeq ++ b.toSeq ++ replayTail)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val out = ss.table(name).collect()
-    ss.catalog.dropTempView(name)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts_us", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(out.toIndexedSeq, 4), schema)
+    h.replay(EventStream.dedupStream(src)
+        .select($"user_id", $"event_id", $"ts_us", $"event_type"), "append")(
+        inOrder(in, delivered))
       .orderBy($"event_id")
   }
 
@@ -2064,17 +1974,13 @@ object SimilarityQ {
     */
   def streamSessionReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val ss = replaySession(spark)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
+    val h = new Replay(spark)
     val evs = collectReplay(Tables(spark, dir).events
       .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id",
         $"value".cast("double"))
       .as[(Long, Long, Long, Double)]).sortBy(r => (r._2, r._3))
-    val sz = math.max(1, (evs.length + 3) / 4)
-    val batches = evs.grouped(sz).toSeq.padTo(4, Array.empty[(Long, Long, Long, Double)])
     val maxTs = evs.iterator.map(_._2).max
-    val in = MemoryStream[(Long, Long, Long, Double)]
+    val in = h.stream[(Long, Long, Long, Double)]
     val src = in.toDS().toDF("user_id", "ts_us", "event_id", "value")
       .withColumn("ts", expr("timestamp_micros(ts_us)"))
       .withWatermark("ts", "2 hours")
@@ -2086,30 +1992,10 @@ object SimilarityQ {
         unix_micros($"session_window.start").as("start_us"),
         unix_micros($"session_window.end").as("end_us"),
         $"n_events", $"total_cents")
-    val name = "stream_session_replay_" + java.util.UUID.randomUUID().toString.take(8)
-    val q = agg.writeStream.outputMode("append").format("memory").queryName(name)
-      // explicit fast-scratch checkpoint (the stream_dedup_replay note)
-      .option("checkpointLocation", graft.operators.TempDirs.freshFast("graft_stream_ck"))
-      .start()
-    try {
-      (0 until 4).foreach { i =>
-        if (batches(i).nonEmpty) in.addData(batches(i).toSeq)
-        q.processAllAvailable()
-      }
-      (1 to 2).foreach { j =>
-        in.addData(Seq((-1L, maxTs + j * 30L * 86400000000L, -j.toLong, 0.0)))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val out = ss.table(name).filter($"user_id" >= 0).collect()
-    ss.catalog.dropTempView(name)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("start_us", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("end_us", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_events", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("total_cents", org.apache.spark.sql.types.LongType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(out.toIndexedSeq, 4), schema)
+    val drain = (1 to 2).map(j =>
+      Seq((-1L, maxTs + j * 30L * 86400000000L, -j.toLong, 0.0)))
+    h.replay(agg, "append")(inOrder(in, chunks(evs) ++ drain))
+      .filter($"user_id" >= 0)
       .orderBy($"user_id", $"start_us")
   }
 
@@ -2157,47 +2043,23 @@ object SimilarityQ {
     */
   def streamSessionState(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val ss = replaySession(spark)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
+    val h = new Replay(spark)
     val evs = collectReplay(Tables(spark, dir).events
       .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id")
       .as[(Long, Long, Long)]).sortBy(r => (r._2, r._3))
-    val sz = math.max(1, (evs.length + 3) / 4)
-    val batches = evs.grouped(sz).toSeq.padTo(4, Array.empty[(Long, Long, Long)])
     val maxTs = evs.iterator.map(_._2).max
-    val in = MemoryStream[(Long, Long, Long)]
+    val in = h.stream[(Long, Long, Long)]
     val src = in.toDS().toDF("user_id", "ts_us", "event_id")
       .withColumn("ts", expr("timestamp_micros(ts_us)"))
       .withWatermark("ts", "2 hours")
       .as[EventStream.Ev]
-    val name = "stream_session_state_" + java.util.UUID.randomUUID().toString.take(8)
-    val q = EventStream.sessionize(src, gapUs = 1800000000L)
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      // explicit fast-scratch checkpoint (the stream_dedup_replay note)
-      .option("checkpointLocation", graft.operators.TempDirs.freshFast("graft_stream_ck"))
-      .start()
-    try {
-      (0 until 4).foreach { i =>
-        if (batches(i).nonEmpty) in.addData(batches(i).toSeq)
-        q.processAllAvailable()
-      }
-      // two sentinel batches: the first advances the watermark past
-      // every open session's `last + gap`; timeouts fire on the NEXT
-      // batch after a watermark update, so the second drains them
-      (1 to 2).foreach { j =>
-        in.addData(Seq((-1L, maxTs + j * 30L * 86400000000L, -j.toLong)))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val out = ss.table(name).filter($"user_id" >= 0).collect()
-    ss.catalog.dropTempView(name)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("start_us", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("end_us", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_events", org.apache.spark.sql.types.LongType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(out.toIndexedSeq, 4), schema)
+    // two sentinel batches: the first advances the watermark past
+    // every open session's `last + gap`; timeouts fire on the NEXT
+    // batch after a watermark update, so the second drains them
+    val drain = (1 to 2).map(j => Seq((-1L, maxTs + j * 30L * 86400000000L, -j.toLong)))
+    h.replay(EventStream.sessionize(src, gapUs = 1800000000L).toDF(), "append")(
+        inOrder(in, chunks(evs) ++ drain))
+      .filter($"user_id" >= 0)
       .orderBy($"user_id", $"start_us")
   }
 

@@ -33,11 +33,6 @@ class LakeReadSpec extends GraftSuite {
   test("derived schema equals inference for every lake table at sf0.001, sf0.01 and sf0.1") {
     for (lake <- lakes; name <- Tables(spark, lake).names)
       sameSchema(s"$lake/$name.parquet")
-    // events is TIMESTAMP(NANOS): a long under the session's nanosAsLong,
-    // a truncated timestamp without it — the footer route follows suit
-    withSQLConf("spark.sql.legacy.parquet.nanosAsLong" -> "false") {
-      sameSchema(s"$sf0001/events.parquet")
-    }
   }
 
   test("derived schema equals inference for Spark-written parquet") {

@@ -13,7 +13,6 @@ class SessionSpec extends GraftSuite {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == n.toString)
     assert(spark.sparkContext.defaultParallelism == n)
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
-    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "false")
     // only GraftExtensions injects this strategy (GraftExtensions.register
     // adds functions, not planner rules)

@@ -1,20 +1,12 @@
 package graft
 
 import java.util.concurrent.{Callable, CyclicBarrier, Executors, TimeUnit}
-import org.apache.spark.sql.functions.{col, xxhash64}
 
 /** Gates that run at once on one session — as a notebook or a server
   * shares it — must give exactly their serial outputs: no operator,
   * lake read or cache may leak state between concurrent queries.
   */
 class SharedSessionSpec extends GraftSuite {
-
-  /** Row count and order-independent sum of per-row `xxhash64`. */
-  private def pin(gate: String): (Long, Long) = {
-    val df = SparkEntry.queries(gate)(spark, sf0001)
-    val hashes = df.select(xxhash64(df.columns.map(col): _*)).collect().map(_.getLong(0))
-    (hashes.length.toLong, hashes.sum)
-  }
 
   test("two gates running at once on one session give their serial outputs") {
     val gates = Seq("q_label_prop", "text_tfidf")

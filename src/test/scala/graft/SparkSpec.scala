@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, xxhash64}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all specs — one JVM-wide SparkSession. */
@@ -14,6 +15,14 @@ abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf0001: String = SparkSpec.sf0001
   def sf001: String  = SparkSpec.sf001
+
+  /** A gate's sf0.001 output as its row count and its order-independent
+    * sum of per-row `xxhash64` values. */
+  def pin(gate: String): (Long, Long) = {
+    val df = SparkEntry.queries(gate)(spark, sf0001)
+    val hashes = df.select(xxhash64(df.columns.map(col): _*)).collect().map(_.getLong(0))
+    (hashes.length.toLong, hashes.sum)
+  }
 
   /** Set SQL confs for the duration of `body`, restoring the prior
     * values after. The shared session is JVM-wide and suites run
