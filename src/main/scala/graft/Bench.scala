@@ -1,520 +1,395 @@
 package graft
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import java.lang.management.ManagementFactory
+import java.nio.file.{Files, OpenOption, Paths, StandardOpenOption}
+import java.util.concurrent.TimeUnit
+import org.apache.spark.sql.SparkSession
+import scala.collection.mutable.ListBuffer
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.io.Source
+import scala.jdk.CollectionConverters._
+import scala.util.{Try, Using}
+import scala.util.control.NonFatal
+
+/** The timing run. Tiers: the gate battery; isolated and fresh-child-JVM
+  * re-times of its 20 slowest gates and the watchlist; and, at sf0.1,
+  * the sf1 tiers — the headliners on a 10×-replicated flat lake and on
+  * its orderkey-bucketed copy, each timed in-process and in fresh child
+  * JVMs, against the DuckDB oracle on the flat lake. The record is one
+  * JSON line on stdout, also written to `SPARK_GRAFT_BENCH_OUT` (default
+  * `BENCH_FULL.json`) and to a round-stamped copy no later run touches.
+  *
+  * Record rule: a gate that did not run is absent from its map; a
+  * scalar, ratio or median that did not run reads null; -1.0 means a
+  * run failed, and a `[bench…] FAILED` line on stderr names it.
+  *
+  * Settings: `SPARK_GRAFT_SF_DIR` (lake, default sf0.1),
+  * `SPARK_GRAFT_WARMUP_DIR` (codegen warm-up lake, "" for a cold
+  * start), `SPARK_GRAFT_BENCH_OUT`, `SPARK_GRAFT_BENCH_BUDGET` (wall
+  * seconds, default 2700), `SPARK_GRAFT_BENCH_ITERS` (default 2),
+  * `SPARK_GRAFT_BENCH_ROUND` (the copy's round, default one past the
+  * highest `BENCH_r*.json`) and `SPARK_GRAFT_BENCH_ONLY` (a
+  * comma-separated gate subset: battery only, every iteration time in
+  * `alltimes`, no file written — how a fresh child JVM runs).
+  */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    // wall-clock budget (r17, judge ask #1): the driver killed the r16
-    // 32-core run at ~60 min (rc 124) BEFORE the one-line JSON printed,
-    // so the round had no parseable 32-core record. The bench now
-    // budgets itself: tiers check remaining time before spending it and
-    // trim (sf1 child iterations first, then whole optional tiers) so
-    // the final JSON ALWAYS prints. Methodology of whatever does run is
-    // unchanged; trimmed tiers are named in `notes` and read as absent
-    // maps / null ratios, exactly like a tier whose build failed.
-    val benchT0 = System.nanoTime()
-    val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "2700").toDouble
-    def remaining(): Double = budgetSec - (System.nanoTime() - benchT0) / 1e9
-    val trimmed = scala.collection.mutable.ListBuffer.empty[String]
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // post-shuffle coalescing stays on Spark's parallelism-first
-    // default: A/B'd r16, parallelismFirst=false + 64m advisory (Spark's
-    // documented production recommendation) measured 96.2 s -> 113.3 s
-    // on a 30-gate subset — byte-based coalescing serializes CPU-dense
-    // small-byte stages on local[32] (ts_theil_sen 4.6 -> 8.0 s); see
-    // OPTIMIZATION_r16.md.
-    val spark = GraftSession.get("bench")
-    // min of `iters` runs per query: the first run pays one-time
-    // codegen/JIT compilation that a long-lived 100 TB job amortizes
-    // away; min-of-N reports the steady-state cost.
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
-    // optional comma-separated subset for iterating on one operator
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val candidates = SparkEntry.queries.keys.toSeq.sorted
-      .filter(name => only.forall(_.contains(name)))
-    // JIT/codegen warmup OUTSIDE the timed region: run every query once
-    // at the smallest SF so whole-stage-codegen classes compile before
-    // timing starts — a cold JVM otherwise charges one-time compilation
-    // (~40s across 80 queries) to whichever queries run first, noise a
-    // long-lived 100 TB job never sees. Set SPARK_GRAFT_WARMUP_DIR=""
-    // to measure cold-start instead.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    if (warmDir.nonEmpty) Gates.warm(spark, candidates, warmDir)
-    // full inter-gate cleanup (Gates.release): two rounds mis-read
-    // battery interference as regressions that re-measured fine
-    // isolated (r8: q_confusion_metrics/text_bm25; r9: etl_bucketed_join
-    // 8.6 vs 2.6 s). System.gc is the expensive part, so it runs every
-    // gcEvery gates rather than per gate; the isolated tier below gc's
-    // before every re-time and is the authoritative per-gate number.
-    val gcEvery = 25
-    var gateIdx = 0
-    // 0.1 ms precision in every emitted map: full-precision doubles made
-    // the one-line suite record ~14 KB, and the driver's log tail
-    // truncates that into an unparseable fragment (the r11 BENCH_r11
-    // "parsed": null) — sub-0.1 ms digits carry no information here
-    def f4(v: Double): String =
-      if (v < 0) "-1.0" else (math.round(v * 10000.0) / 10000.0).toString
-    def jmap(m: Iterable[(String, Double)]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + f4(v) }.mkString("{", ",", "}")
-    val allTimes = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    val results = candidates.map { name =>
-      val times = Seq.fill(iters)(Gates.run(spark, "bench", name, sfDir))
-      // release this query's persisted intermediates AFTER all its
-      // iterations (iteration 2 deliberately measures the cache-hit
-      // steady state), so queries don't memory-pressure each other
-      gateIdx += 1
-      Gates.release(spark, gc = gateIdx % gcEvery == 0)
-      allTimes(name) = times
-      name -> Gates.best(times)
-    }.toMap
-    val qs = jmap(results.toSeq.sortBy(_._1))
-    // contention self-diagnosis: re-time the 20 slowest queries ALONE
-    // after the whole suite, each behind a full Gates.release + gc. In
-    // the main pass a query shares the JVM with its neighbors'
-    // GC/codegen debris, and a busy driver box inflates everything
-    // 2-6× (round-2 postmortem: the driver's bench read as a
-    // regression until an idle re-run) — isolated-vs-main deltas make
-    // that inflation visible inside the JSON itself, and for these
-    // gates the ISOLATED number is the authoritative per-gate record
-    // (the `authoritative` field below says so machine-readably).
-    val slow0 = results.toSeq.filter(_._2 >= 0.0).sortBy(-_._2).take(20).map(_._1)
-    // watchlist: gates a past round flagged as battery-vs-isolated
-    // regressions — always re-timed isolated so the artifact itself
-    // answers "real or harness warmth" without a manual triage pass
-    // (r8: q_confusion_metrics/text_bm25; r9: dedup_ngram_jaccard,
-    // q_regression_diagnostics — both re-measured fine isolated)
-    val watch = Seq("dedup_ngram_jaccard", "q_regression_diagnostics",
-      // r11 battery drifters (1.6-1.8x their r10 battery reads) — on the
-      // list until an isolated re-time rules a real regression in or out
-      "q_approx_quantile", "q_user_paths",
-      // r13 driver re-run read 9.2 s isolated vs the committed 4.0 s
-      // band (code untouched) — watch-listed so every artifact carries
-      // its own isolated re-time as the drift anchor
-      "q_pagerank",
-      // r14 battery read 9.87 s, 1.9× its r13 battery read (judge r14
-      // ask #5) — watch-listed: every artifact now carries an isolated
-      // + fresh re-time so the inflation is diagnosed in-band as real
-      // or as micro-batch scheduling under battery warmth
-      "stream_interval_replay")
-      .filter(g => results.getOrElse(g, -1.0) >= 0.0)
-    val slow = (slow0 ++ watch).distinct
-    // both diagnostic passes are skipped under BENCH_ONLY — that mode is
-    // a single-operator iteration aid, not a suite measurement
-    val isolated = if (only.isDefined) Seq.empty else slow.flatMap { name =>
-      // budget guard (checked per gate, just before spending the time):
-      // stop the tier rather than lose the final JSON — the skipped
-      // gates' battery cells remain authoritative for them
-      if (remaining() < 120) { trimmed += s"isolated:$name"; None }
-      else {
-        Gates.release(spark, gc = true)
-        val times = Seq.fill(iters)(Gates.run(spark, "bench isolated", name, sfDir))
-        Gates.release(spark, gc = false)
-        Some(name -> Gates.best(times))
+  /** The TPC-H-shape headliners both sf1 tiers time. */
+  private val headliners = Seq("q1_pricing_summary", "q3_top_orders",
+    "q5_region_revenue", "q6_forecast_revenue", "q12_ship_mode",
+    "q18_large_orders", "q21_waiting_orders")
+  /** Gates a past round flagged as battery-vs-isolated regressions
+    * (r8/r9, r11, r13, r14): always re-timed isolated and fresh, so the
+    * record itself tells a real regression from harness warmth. */
+  private val watchlist = Seq("dedup_ngram_jaccard", "q_regression_diagnostics",
+    "q_approx_quantile", "q_user_paths", "q_pagerank", "stream_interval_replay")
+  // sf1 fresh protocol (r14, variance-robust): each gate pools
+  // sf1Children child JVMs × max(iters, sf1MinIters) iterations, and the
+  // oracle takes its min over the same sample count. The child heap is
+  // pinned: children inheriting a 96 GiB parent heap squeezed the page
+  // cache and read bucketed cells 2-3× slow (r13).
+  private val sf1Children = 2
+  private val sf1MinIters = 5
+  private val childHeap = "16g"
+  private val flatDir = "/tmp/graft_bench_sf1"
+  private val bucketedDir = "/tmp/graft_bench_sf1b"
+  // System.gc is the expensive part of the inter-gate release
+  private val gcEvery = 25
+  private val mapper = new ObjectMapper()
+  private def oracleIters(iters: Int): Int = sf1Children * iters.max(sf1MinIters)
+
+  /** The run's wall-clock budget: a run killed at an outside time limit
+    * printed no record (r16), so every tier asks [[allow]] just before
+    * spending time, and what it dropped is named in the notes. */
+  final class Budget(val seconds: Double) {
+    private val t0 = System.nanoTime()
+    val trimmed: ListBuffer[String] = ListBuffer.empty
+    def remaining: Double = seconds - (System.nanoTime() - t0) / 1e9
+    def allow(need: Double, what: String): Boolean = {
+      val ok = remaining >= need
+      if (!ok) trimmed += what
+      ok
+    }
+  }
+
+  /** One sf1 tier: in-process cells, per gate (pooled fresh min, pooled
+    * fresh median), and total fresh over total oracle for each. */
+  final case class Sf1(inProcess: Seq[(String, Double)], fresh: Seq[(String, Double, Double)],
+      overOracle: Option[Double], overOracleMedian: Option[Double]) {
+    def freshMin: Seq[(String, Double)] = fresh.map(t => t._1 -> t._2)
+    def freshMedian: Seq[(String, Double)] = fresh.map(t => t._1 -> t._3)
+  }
+
+  /** What one run measured; [[record]] writes it. */
+  final case class Result(sf: String, iters: Int, warmup: String, budgetSec: Double,
+      queries: Seq[(String, Double)], allTimes: Option[Seq[(String, Seq[Double])]] = None,
+      isolated: Seq[(String, Double)] = Nil, fresh: Seq[(String, Double)] = Nil,
+      oracle: Seq[(String, Double)] = Nil, flat: Option[Sf1] = None,
+      bucketed: Option[Sf1] = None, bucketBuildSec: Option[Double] = None,
+      trimmed: Seq[String] = Nil, partial: Boolean = false)
+
+  /** The session, iteration count and warm-up lake of one run, and its
+    * budget: every tier times through these. */
+  final class Run(spark: SparkSession, iters: Int, warmDir: String, budget: Budget) {
+    def times(tag: String, name: String, dir: String): Seq[Double] =
+      Seq.fill(iters)(Gates.run(spark, tag, name, dir))
+
+    /** Gate `name`'s iteration times at `dir` from a child JVM that has
+      * run nothing else — same classpath and flags, heap pinned, warmed
+      * at the parent's warm-up lake — or None if any of it failed. */
+    private def childTimes(name: String, dir: String, childIters: Int): Option[Seq[Double]] = {
+      val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+      val flags = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq.filterNot(a =>
+        Seq("-Xmx", "-Xms", "-XX:MaxHeapSize", "-XX:InitialHeapSize").exists(a.startsWith))
+      val cmd = (java +: flags) ++ Seq(s"-Xmx$childHeap", "-cp", System.getProperty("java.class.path"), "graft.Bench")
+      val env = Map("SPARK_GRAFT_BENCH_ONLY" -> name, "SPARK_GRAFT_SF_DIR" -> dir,
+        "SPARK_GRAFT_CPUS" -> GraftSession.cores.toString,
+        "SPARK_GRAFT_BENCH_ITERS" -> childIters.toString, "SPARK_GRAFT_WARMUP_DIR" -> warmDir)
+      val ts = runChild(cmd, env, 300 + 20L * childIters)
+        .flatMap(out => Try(mapper.readTree(out.linesIterator.filter(_.startsWith("{")).toSeq.last)).toOption)
+        .toSeq.flatMap(_.path("alltimes").path(name).elements().asScala.map(_.asDouble))
+      if (ts.nonEmpty && ts.forall(_ >= 0)) Some(ts)
+      else { System.err.println(s"[bench fresh] $name FAILED: no clean child record at $dir"); None }
+    }
+
+    /** (pooled min, pooled median) of `children` child JVMs; a failed
+      * child makes both -1.0, never the min of the runs that passed. */
+    private def freshCell(name: String, dir: String, children: Int, childIters: Int): (Double, Double) = {
+      val runs = Seq.fill(children)(childTimes(name, dir, childIters))
+      if (runs.contains(None)) (-1.0, -1.0)
+      else { val pooled = runs.flatten.flatten; (pooled.min, median(pooled)) }
+    }
+
+    /** One sf1 tier at `dir`. The in-process cells run in a JVM full of
+      * the battery's debris and read up to ~5× slow (r9), so the fresh
+      * cells are the record, timed behind a release + gc and a lake
+      * prewarm. Below 300 s left a gate gets one child; below 120 s the
+      * tier stops. Ratios need every gate's fresh and oracle cell. */
+    def sf1Tier(dir: String, tag: String, gates: Seq[String], oracle: Map[String, Double],
+        children: Int = sf1Children): Sf1 = {
+      val inProcess = gates.map { name =>
+        val cell = Gates.best(times(s"bench $tag", name, dir))
+        spark.catalog.clearCache()
+        name -> cell
       }
-    }
-    val iso = jmap(isolated)
-    // insurance against an external kill mid-tier: the battery+isolated
-    // record is already written to the stable path here; the full JSON
-    // overwrites it at the end. Stdout stays one line (printed once).
-    if (only.isEmpty) {
-      val partial = s"""{"metric":"total","value":${f4(results.values.filter(_ >= 0).sum)},"unit":"sec","queries":$qs,"isolated":$iso,"notes":"PARTIAL — tiers in progress","sf":"$sfDir","iters":$iters}"""
-      val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), partial + "\n")
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    // fresh-JVM re-times: the isolated pass above still runs inside a
-    // JVM that has executed the whole suite (heap/codegen/GC debris
-    // inflates post-suite re-times ~1.7× — the round-3 memory gotcha),
-    // so each of the slowest queries is also re-timed in a CHILD JVM
-    // that has run nothing else. Same classpath; HEAP IS PINNED (the
-    // parent's -Xmx/-Xms are stripped, see freshRun) so fresh cells
-    // are comparable whatever JVM the parent ran under. Child warms up
-    // at sf0.001 then times sfDir, so the number is steady-state, not
-    // cold-start. SPARK_GRAFT_BENCH_FRESH=0 disables (e.g. under a
-    // tight driver time budget).
-    val freshOn = only.isEmpty && sys.env.getOrElse("SPARK_GRAFT_BENCH_FRESH", "1") != "0"
-    // fresh children run under a PINNED standard heap, not the parent's
-    // flags: the r13 postmortem showed children INHERITING a 96 GiB
-    // parent heap squeezed the page cache and read bucketed-fresh
-    // cells 2-3× slow — a tier whose answer flips with the parent's
-    // -Xmx is a measurement-protocol defect, not a layout result.
-    val childHeap = sys.env.getOrElse("SPARK_GRAFT_CHILD_HEAP", "16g")
-    // run one gate against one lake in a CHILD JVM that has run
-    // nothing else (same classpath, heap pinned to childHeap; warms at
-    // warmDir first). Returns the child's min AND every iteration
-    // time, so callers can pool medians across children.
-    def freshRun(name: String, dir: String, childIters: Int): (Double, Seq[Double]) = {
-      import scala.jdk.CollectionConverters._
-      val javaBin = new java.io.File(new java.io.File(System.getProperty("java.home"), "bin"), "java").getAbsolutePath
-      val inherited = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
-        .filterNot(a => a.startsWith("-Xmx") || a.startsWith("-Xms") ||
-          a.startsWith("-XX:MaxHeapSize") || a.startsWith("-XX:InitialHeapSize"))
-      val jvmArgs = inherited :+ s"-Xmx$childHeap"
-      val cp = System.getProperty("java.class.path")
-      val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_GRAFT_BENCH_ONLY", name)
-      pb.environment().put("SPARK_GRAFT_SF_DIR", dir)
-      pb.environment().put("SPARK_GRAFT_CPUS", GraftSession.cores.toString)
-      pb.environment().put("SPARK_GRAFT_BENCH_ITERS", childIters.toString)
-      // the child must warm up where the parent did (a custom or
-      // disabled warmup dir would otherwise silently revert to the
-      // default path, which may not exist in that configuration)
-      pb.environment().put("SPARK_GRAFT_WARMUP_DIR", warmDir)
-      pb.redirectErrorStream(false)
-      try {
-        val p = pb.start()
-        val outF = scala.concurrent.Future(scala.io.Source.fromInputStream(p.getInputStream).mkString)(scala.concurrent.ExecutionContext.global)
-        scala.concurrent.Future(scala.io.Source.fromInputStream(p.getErrorStream).mkString)(scala.concurrent.ExecutionContext.global)
-        if (!p.waitFor(300 + 20L * childIters, java.util.concurrent.TimeUnit.SECONDS)) { p.destroyForcibly(); (-1.0, Seq.empty) }
-        else {
-          val out = scala.concurrent.Await.result(outF, scala.concurrent.duration.Duration(10, "s"))
-          val re = ("\"" + java.util.regex.Pattern.quote(name) +
-            "\":(-?[0-9]+(?:\\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)").r
-          val min = re.findFirstMatchIn(out).map(_.group(1).toDouble).getOrElse(-1.0)
-          val reAll = ("\"alltimes\":\\{\"" + java.util.regex.Pattern.quote(name) +
-            "\":\\[([0-9.,eE+-]*)\\]").r
-          val ts = reAll.findFirstMatchIn(out).map(_.group(1)).getOrElse("")
-            .split(",").filter(_.nonEmpty).map(_.toDouble).toSeq
-          (min, ts)
-        }
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] fresh $name FAILED: ${e.getMessage}"); (-1.0, Seq.empty)
-      }
-    }
-    def freshTime(name: String, dir: String): Double = freshRun(name, dir, iters)._1
-    // pre-touch every lake file through the OS page cache before
-    // launching fresh children: both engines are graded min-of-iters
-    // WARM (the oracle reads the same files moments earlier), so the
-    // controlled cache state is "lake resident" — without this, the
-    // bucketed lake (written last, evicted first under parent heap
-    // pressure) pays cold reads the flat lake doesn't, and the layout
-    // dividend inverts (the r13 driver-rerun failure).
-    def prewarm(dir: String): Unit = try {
-      val root = java.nio.file.Paths.get(dir)
-      if (java.nio.file.Files.isDirectory(root)) {
-        val buf = new Array[Byte](1 << 20)
-        val walk = java.nio.file.Files.walk(root)
-        try walk.forEach { p =>
-          if (java.nio.file.Files.isRegularFile(p)) {
-            val in = java.nio.file.Files.newInputStream(p)
-            try { while (in.read(buf) >= 0) () } finally in.close()
-          }
-        } finally walk.close()
-      }
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] prewarm $dir failed: ${e.getMessage}")
-    }
-    // same controlled cache state for the watchlist/slow fresh re-times
-    // as for the sf1 tiers (r14 advice): the parent battery read sfDir
-    // moments ago, but a long watchlist run can evict it — re-touch
-    if (freshOn && slow.nonEmpty && remaining() > 120) prewarm(sfDir)
-    val fresh = if (!freshOn) Seq.empty else slow.flatMap { n =>
-      if (remaining() < 90) { trimmed += s"fresh:$n"; None }
-      else Some(n -> freshTime(n, sfDir))
-    }
-    val fr = jmap(fresh)
-    // failure sentinels must not shrink the headline number
-    // sf1 headliner tier: when benching at sf0.1, ALSO time the TPC-H
-    // shape headliners against a 10×-replicated lake (≈6M lineitem
-    // rows = sf1) — the "within 2× at the same scale factor" bar one
-    // tier up, recorded machine-readably with the round. Replication
-    // shifts order keys so join fan-out per key stays realistic
-    // (Sf1Lakes.buildFlat); dims are reused, as in a real lake where
-    // facts outgrow dims. SPARK_GRAFT_BENCH_SF1=0 disables.
-    // The same seven headliners run in the sf1_bucketed tier below.
-    val headliners = Seq("q1_pricing_summary", "q3_top_orders",
-      "q5_region_revenue", "q6_forecast_revenue", "q12_ship_mode",
-      "q18_large_orders", "q21_waiting_orders")
-    val sf1Budget = remaining() > 300
-    if (only.isEmpty && sfDir.endsWith("sf0.1") && !sf1Budget) trimmed += "sf1_tier"
-    val sf1On = only.isEmpty && sfDir.endsWith("sf0.1") && sf1Budget &&
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_SF1", "1") != "0"
-    val sf1 = if (!sf1On) Seq.empty else {
-      try {
-        val out = "/tmp/graft_bench_sf1"
-        // ONE shared construction with the standalone perf-iteration
-        // tool — the lake the artifact measures IS the lake a perf
-        // session drives (review r14: the inline copy was a drift
-        // channel)
-        graft.tools.Sf1Lakes.buildFlat(spark, sfDir, out)
-        headliners.map { name =>
-          val times = Seq.fill(iters)(Gates.run(spark, "bench sf1", name, out))
-          spark.catalog.clearCache()
-          name -> Gates.best(times)
-        }
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] sf1 tier build FAILED: ${e.getMessage}")
-        Seq.empty
-      }
-    }
-    val sf1J = jmap(sf1)
-    // the sf1 tier runs at the END of the full suite inside a JVM full
-    // of heap/codegen debris — the in-process numbers above inflate up
-    // to ~5× (round-9 postmortem: q6 read 2.01 s in-suite vs 0.41 s
-    // isolated, a phantom "superlinearity"). Re-time every sf1
-    // headliner in fresh child JVMs; the fresh number is the record.
-    //
-    // r14 variance-robust protocol (r13 judge ask #1 — the committed
-    // 1.79× bucketed ratio read 3.0× under the driver's own re-run):
-    // per gate, SPARK_GRAFT_SF1_CHILDREN child JVMs (default 2), each
-    // timing max(iters, SPARK_GRAFT_SF1_ITERS=5) iterations under the
-    // pinned childHeap, behind a parent Gates.release + gc and a lake
-    // page-cache prewarm. The published cell is the pooled min (both
-    // engines are min-of-iters warm); the pooled MEDIAN rides along in
-    // a *_median sibling so a noisy campaign is visible inside the
-    // artifact instead of flipping the headline.
-    val sf1Children = sys.env.getOrElse("SPARK_GRAFT_SF1_CHILDREN", "2").toInt.max(1)
-    val sf1ChildIters = iters.max(sys.env.getOrElse("SPARK_GRAFT_SF1_ITERS", "5").toInt)
-    def median(xs: Seq[Double]): Double = if (xs.isEmpty) -1.0 else {
-      val s = xs.sorted; val n = s.size
-      if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-    }
-    // per gate: (pooled min, pooled median) across all children × iters
-    def freshTier(gates: Seq[String], dir: String): Seq[(String, Double, Double)] = {
       Gates.release(spark, gc = true)
       prewarm(dir)
-      gates.flatMap { name =>
-        // budget, checked per gate just before spending the time: drop
-        // sf1 child-JVM iterations first (judge r16 ask #1) — below
-        // 300 s remaining each gate gets ONE child, below 120 s the
-        // tier stops (absent cells, ratio reads null)
-        if (remaining() < 120) { trimmed += s"sf1_fresh:$name"; None }
-        else {
-          val nChildren = if (remaining() < 300) {
-            if (sf1Children > 1) trimmed += s"sf1_children_1:$name"
-            1
-          } else sf1Children
-          val runs = (1 to nChildren).map(_ => freshRun(name, dir, sf1ChildIters))
-          // failure sentinels must not shrink (or silently vanish from)
-          // the headline: a child whose min is -1.0 had a failed
-          // iteration, and the gate's cell must read -1.0 — not the min
-          // of whichever iterations happened to succeed
-          if (runs.exists(_._1 < 0)) {
-            System.err.println(s"[bench] fresh-tier $name had a failed child iteration — cell = -1.0")
-            Some((name, -1.0, -1.0))
-          } else {
-            val pooled = runs.flatMap(_._2).filter(_ > 0)
-            val mins = runs.map(_._1).filter(_ > 0)
-            val mn = if (pooled.nonEmpty) pooled.min else if (mins.nonEmpty) mins.min else -1.0
-            Some((name, mn, median(pooled)))
-          }
+      val fresh = gates.flatMap { name =>
+        Option.when(budget.allow(120, s"${tag}_fresh:$name")) {
+          val n = if (children > 1 && !budget.allow(300, s"${tag}_children_1:$name")) 1 else children
+          val (min, med) = freshCell(name, dir, n, iters.max(sf1MinIters))
+          (name, min, med)
         }
       }
+      def over(cells: Seq[Double]): Option[Double] = Option.when(gates.nonEmpty &&
+        fresh.size == gates.size && cells.forall(_ > 0) && gates.forall(oracle.getOrElse(_, -1.0) > 0))(
+        ratio(cells.sum, gates.map(oracle).sum))
+      Sf1(inProcess, fresh, over(fresh.map(_._2)), over(fresh.map(_._3)))
     }
-    val sf1FreshT = if (sf1.isEmpty || !freshOn) Seq.empty
-      else freshTier(sf1.map(_._1), "/tmp/graft_bench_sf1")
-    val sf1Fresh = sf1FreshT.map(t => t._1 -> t._2)
-    val sf1FreshMed = sf1FreshT.map(t => t._1 -> t._3)
-    val sf1FreshJ = jmap(sf1Fresh)
-    // DuckDB-side baseline for the sf1 tier (r10 judge ask 8): time
-    // each headliner's ORACLE SQL on the SAME replicated lake through
-    // the driver box's python3+duckdb (min of iters, warm — the same
-    // discipline as the Spark side), so bench_vs_baseline is an
-    // artifact in BENCH itself, not a per-round judge computation.
-    // Empty (and noted) when python3/duckdb is unavailable; this is
-    // bench harness plumbing only — the library itself never touches
-    // DuckDB.
-    // same TOTAL sample count as the Spark fresh tier pools
-    // (sf1Children × sf1ChildIters — r14 advice: min-of-10 vs
-    // min-of-5 statistically favored Spark; both mins now pool over
-    // equal samples)
-    val oracleIters = iters.max(5).max(sf1Children * sf1ChildIters)
-    val sf1OracleSkip = sf1.nonEmpty && remaining() < 120
-    if (sf1OracleSkip) trimmed += "sf1_oracle"
-    val sf1Oracle: Seq[(String, Double)] = if (sf1.isEmpty || sf1OracleSkip) Seq.empty else try {
-      val lake = "/tmp/graft_bench_sf1"
-      val py =
-        s"""import duckdb, json, time, os
-           |con = duckdb.connect()
-           |for t in ["region","nation","customer","supplier","part","orders",
-           |          "lineitem","events","documents","embeddings"]:
-           |    p = f"$lake/{t}.parquet"
-           |    if os.path.isdir(p): p = f"{p}/*.parquet"
-           |    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-           |oracle = json.load(open("$lake/_oracle_sql.json"))
-           |for name, sql in oracle.items():
-           |    best = None
-           |    for _ in range($oracleIters):
-           |        t0 = time.time(); con.execute(sql).fetchall(); dt = time.time() - t0
-           |        best = dt if best is None or dt < best else best
-           |    print(f"ORACLE {name} {best:.4f}")
-           |""".stripMargin
-      import scala.jdk.CollectionConverters._
-      val sqlJson = new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(
-        sf1.flatMap { case (n, _) => SparkEntry.oracleSql.get(n).map(n -> _) }.toMap.asJava)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("/tmp/graft_bench_sf1/_oracle_sql.json"), sqlJson)
-      val pyFile = java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("/tmp/graft_bench_sf1/_oracle_bench.py"), py)
-      val pb = new ProcessBuilder("python3", pyFile.toString)
-      // both pipes drain on background threads BEFORE the bounded
-      // waitFor: the r11 form read stdout to EOF first with stderr
-      // never drained, so a chatty-or-hung child could fill the stderr
-      // pipe and wedge the whole bench run past any timeout
-      pb.redirectErrorStream(false)
-      val p = pb.start()
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val outF = scala.concurrent.Future(
-        scala.io.Source.fromInputStream(p.getInputStream).mkString)
-      scala.concurrent.Future {
-        val err = scala.io.Source.fromInputStream(p.getErrorStream).mkString
-        if (err.nonEmpty) System.err.println(s"[bench] oracle stderr: ${err.take(2000)}")
+
+    /** The tiers after the battery. Re-timing alone, behind a full
+      * release + gc, answers battery interference: a busy JVM inflated
+      * gates 2-6× (round 2), and the isolated cell is those gates'
+      * record. Fresh child JVMs then drop the suite's heap and codegen
+      * debris (~1.7×, round 3). */
+    def tiers(battery: Result, outPath: String): Result = {
+      val sfDir = battery.sf
+      val ran = battery.queries.filter(_._2 >= 0)
+      val slow = (ran.sortBy(-_._2).take(20).map(_._1) ++ watchlist.filter(ran.toMap.contains)).distinct
+      val isolated = slow.flatMap { name =>
+        Option.when(budget.allow(120, s"isolated:$name")) {
+          Gates.release(spark, gc = true)
+          val cell = Gates.best(times("bench isolated", name, sfDir))
+          Gates.release(spark, gc = false)
+          name -> cell
+        }
       }
-      if (!p.waitFor(600, java.util.concurrent.TimeUnit.SECONDS)) p.destroyForcibly()
-      val out = scala.concurrent.Await.result(outF,
-        scala.concurrent.duration.Duration(15, "s"))
-      // exponent-tolerant: python's %.4f never emits one, but a regex
-      // that silently reads 6e-05 as 6.0 is a 1e5x skew waiting to land
-      val re = "ORACLE (\\S+) (-?[0-9.]+(?:[eE][+-]?[0-9]+)?)".r
-      re.findAllMatchIn(out).map(m => m.group(1) -> m.group(2).toDouble).toSeq
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] sf1 oracle baseline unavailable: ${e.getMessage}")
-      Seq.empty
+      // insurance against an external kill mid-tier; the final record
+      // overwrites it
+      val sofar = battery.copy(isolated = isolated, trimmed = budget.trimmed.toList, partial = true)
+      write(outPath, mapper.writeValueAsString(record(sofar)))
+      if (slow.nonEmpty && budget.remaining > 120) prewarm(sfDir)
+      val fresh = slow.flatMap(n => Option.when(budget.allow(90, s"fresh:$n"))(n -> freshCell(n, sfDir, 1, iters)._1))
+      // the sf1 tiers run at sf0.1: Sf1Lakes replicates it 10× (≈6M
+      // lineitem rows), and the bucketed copy's build cost is recorded
+      // as the write-time investment later joins on the key amortize.
+      // The oracle times the flat lake once, before both tiers, so each
+      // tier's ratios read the same oracle cells.
+      val flatBuilt = sfDir.endsWith("sf0.1") && budget.allow(300, "sf1_tier") &&
+        timed("sf1 tier")(graft.tools.Sf1Lakes.buildFlat(spark, sfDir, flatDir)).isDefined
+      val oracle = if (!flatBuilt || !budget.allow(120, "sf1_oracle")) Map.empty[String, Double]
+        else oracleTimes(flatDir, headliners, oracleIters(iters))
+      val flat = Option.when(flatBuilt)(sf1Tier(flatDir, "sf1", headliners, oracle))
+      val build = Option.when(flatBuilt && budget.allow(300, "sf1_bucketed_tier"))(timed("sf1 bucketed tier")(
+        graft.tools.Sf1Lakes.buildBucketed(spark, flatDir, bucketedDir, graft.tools.Sf1Lakes.defaultBuckets)).getOrElse(-1.0))
+      val bucketed = Option.when(build.exists(_ >= 0))(sf1Tier(bucketedDir, "sf1_bucketed", headliners, oracle))
+      battery.copy(isolated = isolated, fresh = fresh, oracle = headliners.flatMap(n => oracle.get(n).map(n -> _)),
+        flat = flat, bucketed = bucketed, bucketBuildSec = build, trimmed = budget.trimmed.toList)
     }
-    val sf1OracleJ = jmap(sf1Oracle)
-    // the headline ratio the judge re-derived by hand in r9/r10: total
-    // Spark fresh-child sf1 time over total DuckDB oracle time on the
-    // identical lake + SQL semantics
-    val sf1Ratio: String = {
-      val sparkTotal = sf1Fresh.collect { case (_, v) if v > 0 => v }.sum
-      val duckTotal = sf1Oracle.collect { case (_, v) if v > 0 => v }.sum
-      if (sparkTotal > 0 && duckTotal > 0 && sf1Fresh.size == sf1Oracle.size)
-        (math.round(100.0 * sparkTotal / duckTotal) / 100.0).toString
-      else "null"
+  }
+
+  def main(args: Array[String]): Unit = {
+    val budget = new Budget(sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "2700").toDouble)
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.get("bench")
+    // min of `iters` runs per gate: the first pays one-time codegen/JIT
+    // that a long-lived job amortizes away
+    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val candidates = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
+    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
+    if (warmDir.nonEmpty) Gates.warm(spark, candidates, warmDir)
+    val run = new Run(spark, iters, warmDir, budget)
+    // a gate's cached intermediates are released after all its
+    // iterations (the second measures the cache-hit steady state)
+    val allTimes = candidates.zipWithIndex.map { case (name, i) =>
+      val ts = run.times("bench", name, sfDir)
+      Gates.release(spark, gc = (i + 1) % gcEvery == 0)
+      name -> ts
     }
-    // BUCKETED-LAYOUT tier (r11 judge ask #1): the fact⋈fact headliners
-    // (q12/q18/q21, +q3 borderline) pay 3.4-3.7× the DuckDB oracle on
-    // the unbucketed lake — their plans are already optimal there, so
-    // the next factor is LAYOUT: write the same 6M-row lake ONCE
-    // bucketed by orderkey (graft.sources.BucketedLake — the marker
-    // makes the layout durable across sessions, including the fresh
-    // child JVMs below) and re-time the same four gates unchanged.
-    // The build cost is recorded too: at 100 TB it is the one-shuffle
-    // write-time investment every future join on the key amortizes.
-    // r13: ALL 7 headliners get a bucketed cell (r12 measured only the
-    // four fact⋈fact gates, so the aggregate "within 2×" claim rested
-    // on the warm tier for q1/q5/q6 — q1/q6 are single-scan shapes the
-    // layout can't speed up, which is itself worth recording)
-    val sf1BDir = "/tmp/graft_bench_sf1b"
-    // None: the tier did not run (written as null); -1.0: its build failed
-    var sf1BucketBuild: Option[Double] = None
-    val sf1BucketedSkip = sf1.nonEmpty && remaining() < 300
-    if (sf1BucketedSkip) trimmed += "sf1_bucketed_tier"
-    val sf1Bucketed: Seq[(String, Double)] = if (sf1.isEmpty || sf1BucketedSkip) Seq.empty else try {
-      val tb0 = System.nanoTime()
-      sf1BucketBuild = Some(-1.0) // until the build returns
-      graft.tools.Sf1Lakes.buildBucketed(spark, "/tmp/graft_bench_sf1", sf1BDir,
-        graft.tools.Sf1Lakes.defaultBuckets)
-      sf1BucketBuild = Some((System.nanoTime() - tb0) / 1e9)
-      headliners.map { name =>
-        val times = Seq.fill(iters)(Gates.run(spark, "bench sf1_bucketed", name, sf1BDir))
-        spark.catalog.clearCache()
-        name -> Gates.best(times)
-      }
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] sf1 bucketed tier build FAILED: ${e.getMessage}")
-      Seq.empty
-    }
-    val sf1BucketedFreshT = if (sf1Bucketed.isEmpty || !freshOn) Seq.empty
-      else freshTier(sf1Bucketed.map(_._1), sf1BDir)
-    val sf1BucketedFresh = sf1BucketedFreshT.map(t => t._1 -> t._2)
-    val sf1BucketedFreshMed = sf1BucketedFreshT.map(t => t._1 -> t._3)
-    // the dividend the layout buys, per gate: unbucketed fresh over
-    // bucketed fresh on identical data + identical query code
-    val sf1Dividend = sf1BucketedFresh.flatMap { case (name, b) =>
-      sf1Fresh.toMap.get(name) match {
-        case Some(u) if u > 0 && b > 0 =>
-          Some(name -> math.round(100.0 * u / b) / 100.0)
-        case _ => None
-      }
-    }
-    def tierRatio(times: Seq[(String, Double)], expectSize: Int): String = {
-      val oracleMap = sf1Oracle.toMap
-      val pairs = times.collect {
-        case (n, v) if v > 0 && oracleMap.getOrElse(n, -1.0) > 0 => (v, oracleMap(n))
-      }
-      if (pairs.nonEmpty && pairs.size == expectSize)
-        (math.round(100.0 * pairs.map(_._1).sum / pairs.map(_._2).sum) / 100.0).toString
-      else "null"
-    }
-    val sf1BucketedRatio = tierRatio(sf1BucketedFresh, headliners.size)
-    val sf1BucketedRatioMed = tierRatio(sf1BucketedFreshMed, headliners.size)
-    val sf1RatioMed = tierRatio(sf1FreshMed, sf1FreshMed.size.max(1))
-    val ok = results.values.filter(_ >= 0.0)
-    val total = if (results.values.exists(_ < 0.0)) -1.0 else ok.sum
-    // battery-vs-isolated agreement, written into the artifact itself:
-    // two rounds mis-read battery warmth as regressions (r8, r9), so
-    // the JSON now names any gate whose battery time exceeds 1.3× its
-    // isolated re-time — those reads are harness interference and the
-    // isolated number is the per-gate record.
-    val agree = isolated.collect {
-      case (k, v) if v > 0 && results.getOrElse(k, -1.0) > 0 =>
-        k -> math.round(100.0 * results(k) / v) / 100.0
-    }
-    val agreeJ = agree.map { case (k, r) => s""""$k":$r""" }.mkString("{", ",", "}")
-    val outliers = agree.filter(_._2 > 1.3).map(_._1)
-    val watchNote = watch.map { g =>
-      val r = agree.toMap.getOrElse(g, -1.0)
-      s"$g battery/isolated=$r" + (if (r > 0 && r <= 1.3) " (harness warmth, not a regression)" else "")
-    }.mkString("; ")
-    val notes = (if (outliers.isEmpty)
-      "battery and isolated agree within 1.3x on every isolated-tier gate"
-    else
-      s"battery >1.3x isolated (harness warmth; isolated is authoritative): ${outliers.mkString(",")}") +
-      (if (watchNote.nonEmpty) s". watchlist: $watchNote" else "") +
-      (if (trimmed.isEmpty) ""
-       else s". BUDGET-TRIMMED (SPARK_GRAFT_BENCH_BUDGET=${budgetSec.toLong}s): ${trimmed.mkString(",")}")
-    // child mode (BENCH_ONLY, one gate): emit every iteration time so
-    // the parent can pool medians across children
-    val allJ = if (only.isDefined)
-      allTimes.map { case (k, ts) => "\"" + k + "\":" + ts.map(f4).mkString("[", ",", "]") }
-        .mkString(""","alltimes":{""", ",", "}")
-    else ""
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$allJ,"isolated":$iso,"battery_vs_isolated":$agreeJ,"notes":"$notes","fresh":$fr,"sf1_headliners":$sf1J,"sf1_headliners_fresh":$sf1FreshJ,"sf1_headliners_fresh_median":${jmap(sf1FreshMed)},"sf1_oracle":$sf1OracleJ,"sf1_spark_fresh_over_oracle":$sf1Ratio,"sf1_spark_fresh_over_oracle_median":$sf1RatioMed,""" +
-      s""""sf1_bucketed":${jmap(sf1Bucketed)},"sf1_bucketed_fresh":${jmap(sf1BucketedFresh)},"sf1_bucketed_fresh_median":${jmap(sf1BucketedFreshMed)},"sf1_bucketed_build_sec":${sf1BucketBuild.fold("null")(f4)},"sf1_layout_dividend_fresh":${sf1Dividend.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")},"sf1_bucketed_fresh_over_oracle":$sf1BucketedRatio,"sf1_bucketed_fresh_over_oracle_median":$sf1BucketedRatioMed,""" +
-      s""""sf1_fresh_protocol":"$sf1Children child JVMs x $sf1ChildIters iters per gate, child heap pinned -Xmx$childHeap (parent flags stripped), parent releaseAll+gc then lake prewarmed into page cache before each tier; cell = pooled min (warm discipline, same as oracle), median published alongside; oracle min-of-$oracleIters warm",""" +
-      s""""authoritative":"per-gate: isolated where present (top-20 + watchlist, each behind releaseAll+gc), else queries; sf1 tier: sf1_headliners_fresh (child JVM); sf1_bucketed tier: sf1_bucketed_fresh (child JVM, orderkey-bucketed layout, same query code); sf1_oracle: DuckDB min-of-$oracleIters warm on the same lake + same SQL","sf":"$sfDir","iters":$iters,"warmup":"$warmDir"}"""
-    println(json)
-    // the stdout line is scraped from a log tail that truncates past a
-    // few hundred gates (round-7 postmortem: the official record ended
-    // up with "parsed": null) — so the FULL per-gate timing map is also
-    // written machine-readably to a stable repo path. Child JVMs
-    // (BENCH_ONLY re-times) must not clobber the suite record.
-    if (only.isEmpty) {
+    val battery = Result(sfDir, iters, warmDir, budget.seconds, allTimes.map { case (n, ts) => n -> Gates.best(ts) })
+    val json = if (only.isDefined) mapper.writeValueAsString(record(battery.copy(allTimes = Some(allTimes))))
+    else {
       val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json + "\n")
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] writing $outPath failed: ${e.getMessage}")
-      }
-      // ALSO write a ROUND-STAMPED immutable copy (r11 judge ask #4):
-      // BENCH_FULL.json is overwritten every run, and the driver's own
-      // BENCH_r{N}.json wraps a truncated stdout tail — the per-gate
-      // maps must survive in a file no later run mutates. The round is
-      // SPARK_GRAFT_BENCH_ROUND when set, else inferred as
-      // max(existing BENCH_r*.json) + 1 — and when NO round files are
-      // visible (first round, or a cwd that is not the repo root) the
-      // copy is still written as r01 rather than silently skipped
-      // (ADVICE r12: the no-op lost the only immutable record).
-      try {
-        val round = sys.env.get("SPARK_GRAFT_BENCH_ROUND").map(_.toInt).getOrElse {
-          val cwd = java.nio.file.Paths.get(".")
-          val rx = "BENCH_r0*([0-9]+)\\.json".r
-          val seen = java.nio.file.Files.list(cwd).iterator()
-          var maxR = 0
-          while (seen.hasNext) {
-            val f = seen.next().getFileName.toString
-            rx.findFirstMatchIn(f).foreach(m => maxR = maxR.max(m.group(1).toInt))
-          }
-          if (maxR == 0) System.err.println(
-            "[bench] no BENCH_r*.json in cwd — stamping the immutable copy r01 " +
-              "(set SPARK_GRAFT_BENCH_ROUND to override)")
-          maxR + 1
-        }
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(f"BENCH_FULL_r$round%02d.json"), json + "\n")
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] round-stamped copy failed: ${e.getMessage}")
+      val json = mapper.writeValueAsString(record(run.tiers(battery, outPath)))
+      write(outPath, json)
+      write(roundStamped(), json, StandardOpenOption.CREATE_NEW)
+      json
+    }
+    println(json)
+    spark.stop()
+  }
+
+  /** The record, keys in a fixed order. Cells carry 4 decimals: the
+    * stdout line is read from a log tail that cut a full-precision
+    * record into an unparseable fragment (r11). */
+  def record(r: Result): ObjectNode = {
+    val q = r.queries.toMap
+    // battery over isolated: above 1.3× a battery cell is harness
+    // warmth and the isolated cell is the gate's record (r8, r9)
+    val agree = r.isolated.collect { case (k, v) if v > 0 && q.getOrElse(k, -1.0) > 0 => k -> ratio(q(k), v) }
+    val outliers = agree.filter(_._2 > 1.3).map(_._1)
+    val watch = watchlist.flatMap(g => agree.toMap.get(g).map(x =>
+      s"$g battery/isolated=$x" + (if (x <= 1.3) " (harness warmth, not a regression)" else "")))
+    val notes = Seq(
+      Option.when(r.partial)("PARTIAL — tiers in progress"),
+      Option.when(agree.nonEmpty)(if (outliers.isEmpty) "battery and isolated agree within 1.3x on every isolated-tier gate"
+        else s"battery >1.3x isolated (harness warmth; isolated is authoritative): ${outliers.mkString(",")}"),
+      Option.when(watch.nonEmpty)(s"watchlist: ${watch.mkString("; ")}"),
+      Option.when(r.trimmed.nonEmpty)(
+        s"BUDGET-TRIMMED (SPARK_GRAFT_BENCH_BUDGET=${r.budgetSec.toLong}s): ${r.trimmed.mkString(",")}")).flatten
+    val flatFresh = r.flat.toSeq.flatMap(_.freshMin).toMap
+    val dividend = r.bucketed.toSeq.flatMap(_.freshMin).collect {
+      case (k, b) if b > 0 && flatFresh.getOrElse(k, -1.0) > 0 => k -> ratio(flatFresh(k), b)
+    }
+    val o = mapper.createObjectNode()
+    def cells(key: String, m: Seq[(String, Double)]): Unit = {
+      val c = o.putObject(key); m.foreach { case (k, v) => c.put(k, cell(v)) }
+    }
+    def scalar(key: String, v: Option[Double]): Unit = v.fold(o.putNull(key))(x => o.put(key, cell(x)))
+    o.put("metric", "total")
+    o.put("value", if (r.queries.exists(_._2 < 0)) -1.0 else cell(r.queries.map(_._2).sum))
+    o.put("unit", "sec")
+    cells("queries", r.queries)
+    r.allTimes.foreach { all =>
+      val a = o.putObject("alltimes")
+      all.foreach { case (k, ts) => val arr = a.putArray(k); ts.foreach(t => arr.add(cell(t))) }
+    }
+    cells("isolated", r.isolated)
+    cells("battery_vs_isolated", agree)
+    o.put("notes", notes.mkString(". "))
+    cells("fresh", r.fresh)
+    cells("sf1_headliners", r.flat.toSeq.flatMap(_.inProcess))
+    cells("sf1_headliners_fresh", r.flat.toSeq.flatMap(_.freshMin))
+    cells("sf1_headliners_fresh_median", r.flat.toSeq.flatMap(_.freshMedian))
+    cells("sf1_oracle", r.oracle)
+    scalar("sf1_spark_fresh_over_oracle", r.flat.flatMap(_.overOracle))
+    scalar("sf1_spark_fresh_over_oracle_median", r.flat.flatMap(_.overOracleMedian))
+    cells("sf1_bucketed", r.bucketed.toSeq.flatMap(_.inProcess))
+    cells("sf1_bucketed_fresh", r.bucketed.toSeq.flatMap(_.freshMin))
+    cells("sf1_bucketed_fresh_median", r.bucketed.toSeq.flatMap(_.freshMedian))
+    scalar("sf1_bucketed_build_sec", r.bucketBuildSec)
+    cells("sf1_layout_dividend_fresh", dividend)
+    scalar("sf1_bucketed_fresh_over_oracle", r.bucketed.flatMap(_.overOracle))
+    scalar("sf1_bucketed_fresh_over_oracle_median", r.bucketed.flatMap(_.overOracleMedian))
+    o.put("sf1_fresh_protocol", s"$sf1Children child JVMs x ${r.iters.max(sf1MinIters)} iters per gate, " +
+      s"child heap pinned -Xmx$childHeap (parent flags stripped), parent releaseAll+gc then lake prewarmed " +
+      "into page cache before each tier; cell = pooled min (warm discipline, same as oracle), median " +
+      s"published alongside; oracle min-of-${oracleIters(r.iters)} warm")
+    o.put("authoritative", "per-gate: isolated where present (top-20 + watchlist, each behind releaseAll+gc), " +
+      "else queries; sf1 tier: sf1_headliners_fresh (child JVM); sf1_bucketed tier: sf1_bucketed_fresh " +
+      "(child JVM, orderkey-bucketed layout, same query code); sf1_oracle: DuckDB " +
+      s"min-of-${oracleIters(r.iters)} warm on the same lake + same SQL")
+    o.put("sf", r.sf)
+    o.put("iters", r.iters)
+    o.put("warmup", r.warmup)
+  }
+
+  private def cell(v: Double): Double = if (v < 0) -1.0 else math.round(v * 1e4) / 1e4
+  private def ratio(a: Double, b: Double): Double = math.round(100.0 * a / b) / 100.0
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted; val n = s.size
+    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
+  }
+
+  /** Seconds `build` took, or None (and a FAILED line) if it threw. */
+  private def timed(what: String)(build: => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { build; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case NonFatal(e) => System.err.println(s"[bench] $what build FAILED: ${e.getMessage}"); None }
+  }
+
+  private def write(path: => String, json: String, opts: OpenOption*): Unit =
+    try Files.writeString(Paths.get(path), json + "\n", opts: _*)
+    catch { case NonFatal(e) => System.err.println(s"[bench] writing the record failed: $e") }
+
+  /** The round-stamped copy's name: `SPARK_GRAFT_BENCH_ROUND`, else one
+    * past the highest `BENCH_r*.json` in the cwd, r01 when there is none.
+    * The copy is never overwritten: a name that exists is not written. */
+  private def roundStamped(): String = {
+    val round = sys.env.get("SPARK_GRAFT_BENCH_ROUND").map(_.toInt).getOrElse {
+      val rx = "BENCH_r0*([0-9]+)\\.json".r
+      val seen = Using.resource(Files.list(Paths.get(".")))(_.iterator.asScala
+        .flatMap(p => rx.findFirstMatchIn(p.getFileName.toString)).map(_.group(1).toInt).toList)
+      if (seen.isEmpty) System.err.println("[bench] no BENCH_r*.json in cwd — stamping the " +
+        "immutable copy r01 (set SPARK_GRAFT_BENCH_ROUND to override)")
+      (0 :: seen).max + 1
+    }
+    f"BENCH_FULL_r$round%02d.json"
+  }
+
+  // pre-touch every lake file through the OS page cache before fresh
+  // children time it: both engines are graded warm, and a lake evicted
+  // under parent heap pressure paid cold reads the other did not (r13)
+  private def prewarm(dir: String): Unit = try {
+    val root = Paths.get(dir)
+    val buf = new Array[Byte](1 << 20)
+    if (Files.isDirectory(root)) Using.resource(Files.walk(root)) { walk =>
+      walk.filter(p => Files.isRegularFile(p)).forEach { p =>
+        Using.resource(Files.newInputStream(p))(in => while (in.read(buf) >= 0) ())
       }
     }
-    spark.stop()
+  } catch { case NonFatal(e) => System.err.println(s"[bench] prewarm $dir failed: ${e.getMessage}") }
+
+  // DuckDB baseline for the sf1 tiers (r10): each headliner's oracle SQL
+  // on the same lake through python3 + duckdb, min over warm runs like
+  // the Spark side. Harness plumbing only — the library never touches
+  // DuckDB. Prints one JSON object, gate → seconds.
+  private val oracleScript =
+    """import duckdb, json, os, sys, time
+      |lake, iters = sys.argv[1], int(sys.argv[2])
+      |con = duckdb.connect()
+      |for t in ["region", "nation", "customer", "supplier", "part", "orders",
+      |          "lineitem", "events", "documents", "embeddings"]:
+      |    p = f"{lake}/{t}.parquet"
+      |    if os.path.isdir(p): p = f"{p}/*.parquet"
+      |    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+      |best = {}
+      |for name, sql in json.load(open(f"{lake}/_oracle_sql.json")).items():
+      |    for _ in range(iters):
+      |        t0 = time.time(); con.execute(sql).fetchall(); dt = time.time() - t0
+      |        best[name] = min(dt, best.get(name, dt))
+      |print(json.dumps(best))
+      |""".stripMargin
+
+  /** The oracle's min-of-`iters` seconds per gate on `lake`; empty when
+    * python3 or duckdb is unavailable. */
+  private def oracleTimes(lake: String, gates: Seq[String], iters: Int): Map[String, Double] = try {
+    val sql = gates.flatMap(n => SparkEntry.oracleSql.get(n).map(n -> _)).toMap.asJava
+    Files.writeString(Paths.get(s"$lake/_oracle_sql.json"), mapper.writeValueAsString(sql))
+    runChild(Seq("python3", "-c", oracleScript, lake, iters.toString), Map.empty, 600)
+      .map(out => mapper.readTree(out.trim.linesIterator.toSeq.last).properties().asScala
+        .map(e => e.getKey -> e.getValue.asDouble).toMap)
+      .getOrElse(Map.empty)
+  } catch { case NonFatal(e) =>
+    System.err.println(s"[bench] sf1 oracle baseline unavailable: ${e.getMessage}"); Map.empty
+  }
+
+  /** Runs `cmd` with `env` over this JVM's environment and returns its
+    * stdout, or None if it could not start, exited non-zero or outlived
+    * `timeoutSec` (it is then killed). Both pipes drain on their own
+    * threads before the bounded wait, so a child that fills one cannot
+    * wedge the run (r11); a failed child's stderr tail goes to stderr. */
+  private def runChild(cmd: Seq[String], env: Map[String, String], timeoutSec: Long): Option[String] = try {
+    val pb = new ProcessBuilder(cmd: _*)
+    env.foreach { case (k, v) => pb.environment().put(k, v) }
+    val p = pb.start()
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val out = Future(Source.fromInputStream(p.getInputStream).mkString)
+    val err = Future(Source.fromInputStream(p.getErrorStream).mkString)
+    val exited = p.waitFor(timeoutSec, TimeUnit.SECONDS)
+    if (!exited) p.destroyForcibly()
+    if (exited && p.exitValue() == 0) Some(Await.result(out, 15.seconds))
+    else {
+      val why = if (exited) s"exited ${p.exitValue()}" else s"killed after ${timeoutSec}s"
+      val tail = Try(Await.result(err, 15.seconds)).getOrElse("").takeRight(2000)
+      System.err.println(s"[bench] child ${cmd.head} $why: $tail")
+      None
+    }
+  } catch { case NonFatal(e) =>
+    System.err.println(s"[bench] child ${cmd.head} did not run: ${e.getMessage}"); None
   }
 }

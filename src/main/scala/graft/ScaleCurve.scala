@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.{Similarity, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -245,30 +246,31 @@ object ScaleCurve {
     // KNN_PLANES — is measured by the big-fixture RECALL run instead,
     // and the fixed-planes gate carries the ≤10× tier by policy.
     val maxTier: Map[String, Int] = Map("emb_knn_components" -> 10)
+    // build the tier's persisted IVF-SQ8 index in a dir this cell owns
+    // and delete it after `use` (r15: per-iteration copies used to
+    // accumulate a corpus-sized index each). Deliberately
+    // NOT TempDirs.fresh: releaseAll() runs between build and query and
+    // would sweep the index out from under the probe. `use` gets the
+    // index dir and the build's wall seconds.
+    def withIndex[A](dir: String)(use: (String, Double) => A): A = {
+      val idx = java.nio.file.Files.createTempDirectory("graft_annidx")
+      try {
+        val e = Tables(spark, dir).embeddings
+        val c = Similarity.scaledCentroids(e.count())
+        val np = Similarity.scaledNprobe(c)
+        val t0 = System.nanoTime()
+        Similarity.ivfSq8IndexBuild(e, "vec_id", "embedding", c, np, idx.toString)
+        use(idx.toString, (System.nanoTime() - t0) / 1e9)
+      } finally TempDirs.deleteRec(idx.toFile)
+    }
     // the persisted ANN index gate splits into SEPARATE build vs query
     // cells (judge r14 ask #4): build is the write-once n-sized
     // investment, query is what every later session pays — one curve
     // each, same fresh-JVM/releaseAll discipline as time()
     def timeIndexSplit(dir: String): (Double, Double) = {
-      import graft.operators.Similarity
-      def deleteRec(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(deleteRec); f.delete(): Unit
-      }
       val runs = (1 to iters).map { _ =>
         releaseAll()
-        // deliberately NOT TempDirs.fresh: releaseAll() runs BETWEEN
-        // build and query and would sweep the index out from under the
-        // probe — this split cell owns its dir and deletes it per iter
-        // (judge r15 ADVICE #1: the per-iter copies used to accumulate
-        // a corpus-sized index each across long batteries)
-        val idx = java.nio.file.Files.createTempDirectory("graft_annidx").toString
-        try {
-          val e = Tables(spark, dir).embeddings
-          val c = Similarity.scaledCentroids(e.count())
-          val np = Similarity.scaledNprobe(c)
-          val t0 = System.nanoTime()
-          Similarity.ivfSq8IndexBuild(e, "vec_id", "embedding", c, np, idx)
-          val tb = (System.nanoTime() - t0) / 1e9
+        try withIndex(dir) { (idx, tb) =>
           releaseAll()
           val q = Tables(spark, dir).embeddings
             .filter(col("vec_id") < 10)
@@ -280,7 +282,7 @@ object ScaleCurve {
         } catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[curve] ann_ivf_sq8_persisted @ $dir FAILED: ${e.getMessage}")
           (-1.0, -1.0)
-        } finally deleteRec(new java.io.File(idx))
+        }
       }
       releaseAll()
       if (runs.exists(r => r._1 < 0 || r._2 < 0)) (-1.0, -1.0)
@@ -294,18 +296,9 @@ object ScaleCurve {
     // 2k→20k→200k tiers the only growing term is c = ceil-isqrt(n)
     // in the assign fan-out, sublinear by construction.
     def timeAppendDelta(dir: String): Double = {
-      import graft.operators.Similarity
-      def deleteRec(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(deleteRec); f.delete(): Unit
-      }
       releaseAll()
-      val idx = java.nio.file.Files.createTempDirectory("graft_annidx").toString
-      try {
-        val e = Tables(spark, dir).embeddings
-        val c = Similarity.scaledCentroids(e.count())
-        val np = Similarity.scaledNprobe(c)
-        Similarity.ivfSq8IndexBuild(e, "vec_id", "embedding", c, np, idx)
-        val maxId = e.agg(max(col("vec_id"))).head().getLong(0) + 1
+      try withIndex(dir) { (idx, _) =>
+        val maxId = Tables(spark, dir).embeddings.agg(max(col("vec_id"))).head().getLong(0) + 1
         val delta = Tables(spark, base).embeddings
           .withColumn("vec_id", col("vec_id") + lit(maxId))
         val times = (1 to iters).map { _ =>
@@ -318,7 +311,7 @@ object ScaleCurve {
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[curve] ann_ivf_sq8_append @ $dir FAILED: ${e.getMessage}")
         -1.0
-      } finally { releaseAll(); deleteRec(new java.io.File(idx)) }
+      } finally releaseAll()
     }
     val rows = gates.flatMap { g =>
       val tierDirs = dirs.filter { case (label, _) =>

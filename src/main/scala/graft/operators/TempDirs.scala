@@ -74,7 +74,8 @@ object TempDirs {
     while (d != null) { deleteRec(d.toFile); d = live.poll() }
   }
 
-  private def deleteRec(f: java.io.File): Unit = {
+  /** Deletes `f` and, for a directory, everything under it. */
+  private[graft] def deleteRec(f: java.io.File): Unit = {
     val cs = f.listFiles()
     if (cs != null) cs.foreach(deleteRec)
     f.delete(): Unit

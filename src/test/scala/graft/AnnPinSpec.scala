@@ -1,9 +1,11 @@
 package graft
 
-/** Output pins for the ANN gates built from `Similarity.annTopK`'s
+/** Output pins for the ANN gates: those built from `Similarity.annTopK`'s
   * shared stages — the in-memory pipelines, the persisted index, the
   * recall eval and the k-means step that shares their seed set and
-  * assignment. Each gate's sf0.001 output must keep its row count and
+  * assignment — and the brute-force, LSH, MIPS, kNN-join and
+  * graph-search gates still outside it, so folding them in has a guard.
+  * Each gate's sf0.001 output must keep its row count and
   * its order-independent sum of per-row `xxhash64` values. The DuckDB
   * compare is what proves these outputs right; the pin catches any
   * expression drift in a shared stage without it.
@@ -26,7 +28,13 @@ class AnnPinSpec extends GraftSuite {
     "ann_ivf_sq8_append" -> (100L, 374898135969460397L),
     "ann_ivf_sq8_trained" -> (100L, -3385149399687715408L),
     "ann_recall_eval" -> (10L, 1197298787047668740L),
-    "emb_kmeans_step" -> (512L, -5490820331656527218L))
+    "emb_kmeans_step" -> (512L, -5490820331656527218L),
+    "ann_bruteforce_topk" -> (100L, -9059862207215250726L),
+    "ann_lsh_topk" -> (100L, 1222485054873394005L),
+    "ann_mips_topk" -> (100L, 1222485054873394005L),
+    "ann_knn_join" -> (2500L, -511473802118913508L),
+    "ann_knn_join_scaled" -> (2500L, -511473802118913508L),
+    "ann_graph_search" -> (100L, -4775047322711660255L))
 
   pins.foreach { case (gate, expected) =>
     test(s"$gate output matches its sf0.001 pin") {
