@@ -1,8 +1,7 @@
 package graft
 
-import graft.functions.VecFns
 import graft.operators.{AnnSpec, Similarity}
-import graft.operators.AnnSpec.{Exact, Flat, Ivf, IvfScaled, Pq, Sq8}
+import graft.operators.AnnSpec.{Exact, Flat, InnerProduct, Ivf, IvfScaled, Lsh, MipsLsh, Pq, Sq8}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,8 +15,9 @@ import org.apache.spark.sql.functions._
   * line — the per-round `RECALL_r{N}.json` record, so recall drift is
   * visible round-over-round exactly like bench times.
   *
-  * Ground truth: cosine brute force for the cosine-ranked shapes (LSH,
-  * IVF, PQ, IVF-PQ, graph); raw inner product for MIPS — the two
+  * Ground truth: cosine brute force, `AnnSpec(Flat, Exact, 0)`, for the
+  * cosine-ranked shapes (LSH, IVF, PQ, IVF-PQ, graph); raw inner
+  * product, `AnnSpec(Flat, InnerProduct, 0)`, for MIPS — the two
   * orders genuinely differ (that difference is why the augmented
   * transform exists), so MIPS against cosine truth would under-report.
   */
@@ -51,26 +51,28 @@ object Recall {
     val emb = Tables(spark, sfDir).embeddings.persist()
     val nVec = emb.count()
     val qs = emb.filter($"vec_id" < nQueries)
-    val nq = qs.count()
 
     def pairs(df: DataFrame): Set[(Long, Long)] =
       df.select(col("q_id"), col("neighbor_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
 
-    val cosTruth = pairs(Similarity.bruteForceTopK(emb, qs, "vec_id", "embedding", k))
+    def topK(spec: AnnSpec): Set[(Long, Long)] =
+      pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, spec))
+    val cosTruth = topK(AnnSpec(Flat, Exact, 0))
     // MIPS truth ranks by raw inner product (ties by id)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"q_id").orderBy($"ip".desc, $"id")
-    val mipsTruth = pairs(emb.select($"vec_id".as("id"), $"embedding".as("v"))
-      .crossJoin(broadcast(qs.select($"vec_id".as("q_id"), $"embedding".as("q_v"))))
-      .filter($"id" =!= $"q_id")
-      .withColumn("ip", VecFns.dot($"v", $"q_v"))
-      .withColumn("rk", row_number().over(w))
-      .filter($"rk" <= k)
-      .withColumn("neighbor_id", $"id"))
+    val mipsTruth = topK(AnnSpec(Flat, InnerProduct, 0))
 
     def recallOf(got: Set[(Long, Long)], truth: Set[(Long, Long)]): Double =
       math.round(10000.0 * (got & truth).size / truth.size) / 10000.0
+
+    // the SCALED operating points: every knob derived from the corpus
+    // count (c = ceil-isqrt ≥ 10, np = max(8, c/16))
+    val scaledC = Similarity.scaledCentroids(nVec)
+    val scaledNp = Similarity.scaledNprobe(scaledC)
+
+    // curve points that are one AnnSpec each, measured against `truth`
+    def specs(truth: Set[(Long, Long)])(points: (String, AnnSpec)*): Seq[(String, () => Double)] =
+      points.map { case (p, spec) => p -> (() => recallOf(topK(spec), truth)) }
 
     // kNN edge graphs for beam search: k=5 is the ann_knn_join gate
     // artifact; the graph default ships on the denser k=10 build (the
@@ -82,148 +84,97 @@ object Recall {
       .select(col("q_id").as("src"), col("neighbor_id").as("dst"))
     lazy val edges5 = edgesOf(5).persist()
     lazy val edges10 = edgesOf(10).persist()
+    def graph(edges: => DataFrame, beam: Int, hops: Int): () => Double = () =>
+      recallOf(pairs(Similarity.graphSearch(emb, qs, edges, "vec_id", "embedding", k, beam, hops)), cosTruth)
+
+    // persisted-index A/B (r16): seeded (first-N-by-id, the gate
+    // recipe) vs trained (2 Lloyd rounds of the shared kmeansFit)
+    // coarse centroids at MATCHED nprobe — does training the coarse
+    // quantizer buy recall at the same probe budget?
+    def persisted(trainRounds: Int): () => Double = () => {
+      val idx = graft.operators.TempDirs.fresh("graft_annidx_recall")
+      Similarity.ivfSq8IndexBuild(emb, "vec_id", "embedding", scaledC, scaledNp, idx,
+        trainRounds = trainRounds)
+      recallOf(pairs(Similarity.ivfSq8IndexQuery(
+        idx, emb, qs, "vec_id", "embedding", k, fetch = 8)), cosTruth)
+    }
 
     // The default operating point per shape (the flat keys, compared
     // round-over-round) PLUS a recall/parameter curve: each knob is
     // the recall↔cost trade an index shopper tunes BEFORE shipping —
     // the artifact shows the knob actually buys recall, and how much.
     val curve: Seq[(String, Seq[(String, () => Double)])] = Seq(
-      "lsh" -> Seq(
-        "planes=4" -> (() => recallOf(
-          pairs(Similarity.lshTopK(emb, qs, "vec_id", "embedding", k, planes = 4)), cosTruth)),
-        "planes=3" -> (() => recallOf(
-          pairs(Similarity.lshTopK(emb, qs, "vec_id", "embedding", k, planes = 3)), cosTruth)),
-        "planes=2" -> (() => recallOf(
-          pairs(Similarity.lshTopK(emb, qs, "vec_id", "embedding", k, planes = 2)), cosTruth))),
-      "ivf" -> Seq(
-        s"c=$ivfC,nprobe=2" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 2), Exact, 0))), cosTruth)),
-        s"c=$ivfC,nprobe=4" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 4), Exact, 0))), cosTruth)),
-        s"c=$ivfC,nprobe=8" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Exact, 0))), cosTruth))),
-      "pq" -> Seq(
-        "sub=4,cb=8" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(4, 8, 0), 0))), cosTruth)),
-        "sub=8,cb=16" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(8, 16, 0), 0))), cosTruth)),
-        "sub=8,cb=32" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(8, 32, 0), 0))), cosTruth)),
-        "sub=16,cb=32" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 32, 0), 0))), cosTruth)),
-        "sub=16,cb=64" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 64, 0), 0))), cosTruth)),
+      "lsh" -> specs(cosTruth)(
+        "planes=4" -> AnnSpec(Lsh(4), Exact, 0),
+        "planes=3" -> AnnSpec(Lsh(3), Exact, 0),
+        "planes=2" -> AnnSpec(Lsh(2), Exact, 0)),
+      "ivf" -> specs(cosTruth)(
+        s"c=$ivfC,nprobe=2" -> AnnSpec(Ivf(ivfC, 2), Exact, 0),
+        s"c=$ivfC,nprobe=4" -> AnnSpec(Ivf(ivfC, 4), Exact, 0),
+        s"c=$ivfC,nprobe=8" -> AnnSpec(Ivf(ivfC, 8), Exact, 0)),
+      "pq" -> specs(cosTruth)(
+        "sub=4,cb=8" -> AnnSpec(Flat, Pq(4, 8, 0), 0),
+        "sub=8,cb=16" -> AnnSpec(Flat, Pq(8, 16, 0), 0),
+        "sub=8,cb=32" -> AnnSpec(Flat, Pq(8, 32, 0), 0),
+        "sub=16,cb=32" -> AnnSpec(Flat, Pq(16, 32, 0), 0),
+        "sub=16,cb=64" -> AnnSpec(Flat, Pq(16, 64, 0), 0),
         // the r11 production tier: ADC shortlist + exact re-rank
-        "sub=16,cb=32,rerank=2x" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 32, 0), 2))), cosTruth)),
-        "sub=16,cb=32,rerank=4x" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 32, 0), 4))), cosTruth)),
-        "sub=16,cb=32,rerank=8x" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 32, 0), 8))), cosTruth)),
+        "sub=16,cb=32,rerank=2x" -> AnnSpec(Flat, Pq(16, 32, 0), 2),
+        "sub=16,cb=32,rerank=4x" -> AnnSpec(Flat, Pq(16, 32, 0), 4),
+        "sub=16,cb=32,rerank=8x" -> AnnSpec(Flat, Pq(16, 32, 0), 8),
         // trained codebooks (2 Lloyd rounds per subspace) — the
         // quantization-quality half of the production recovery
-        "sub=16,cb=32,trained=2it" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 32, 2), 0))), cosTruth)),
-        "sub=16,cb=32,trained=2it,rerank=4x" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 32, 2), 4))), cosTruth)),
+        "sub=16,cb=32,trained=2it" -> AnnSpec(Flat, Pq(16, 32, 2), 0),
+        "sub=16,cb=32,trained=2it,rerank=4x" -> AnnSpec(Flat, Pq(16, 32, 2), 4),
         // the SCALED operating points (r12): at 200k vectors the sf-tier
         // default (cb=32, 4x over-fetch) collapses to 0.44 — corpus
         // density shrinks the ADC rank margin, so codebook size and the
         // exact-re-rank fetch factor must grow with n. The re-rank cost
         // stays fetch·k exact rows per query — noise next to the code scan.
-        "sub=16,cb=64,trained=2it,rerank=8x" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 64, 2), 8))), cosTruth)),
-        "sub=16,cb=64,trained=2it,rerank=16x" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Pq(16, 64, 2), 16))), cosTruth))),
-      "ivf_pq" -> Seq(
-        s"c=$ivfC,np=4,sub=4,cb=8" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 4), Pq(4, 8, 0), 0))), cosTruth)),
-        s"c=$ivfC,np=8,sub=8,cb=16" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(8, 16, 0), 0))), cosTruth)),
-        s"c=$ivfC,np=8,sub=16,cb=32" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 0), 0))), cosTruth)),
-        s"c=$ivfC,np=8,sub=16,cb=64" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(16, 64, 0), 0))), cosTruth)),
-        s"c=$ivfC,np=8,sub=16,cb=32,rerank=2x" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 0), 2))), cosTruth)),
-        s"c=$ivfC,np=8,sub=16,cb=32,rerank=4x" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 0), 4))), cosTruth)),
-        s"c=$ivfC,np=8,sub=16,cb=32,rerank=8x" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 0), 8))), cosTruth)),
-        s"c=$ivfC,np=8,sub=16,cb=32,trained=2it,rerank=4x" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 2), 4))), cosTruth)),
-        s"c=$ivfC,np=8,sub=16,cb=64,trained=2it,rerank=8x" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(16, 64, 2), 8))), cosTruth)),
-        s"c=$ivfC,np=8,sub=16,cb=64,trained=2it,rerank=16x" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Ivf(ivfC, 8), Pq(16, 64, 2), 16))), cosTruth)),
-        // the r13 SCALED gate's operating point: every knob derived
-        // from the corpus count (c = ceil-isqrt ≥ 10, np = max(8, c/16))
-        // or pinned at its measured big-corpus value (cb=64, 16× fetch)
-        // — the ann_ivf_pq_trained_rerank_scaled recipe, measured here
-        // at whatever n this run loads (200k for the big-fixture row)
-        "scaled:c=isqrt(n),np=c/16,sub=16,cb=64,trained=2it,rerank=16x" -> (() => {
-          val c = Similarity.scaledCentroids(nVec)
-          val np = Similarity.scaledNprobe(c)
-          recallOf(pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(IvfScaled(c, np), Pq(16, 64, 2), 16))), cosTruth)
-        })),
+        "sub=16,cb=64,trained=2it,rerank=8x" -> AnnSpec(Flat, Pq(16, 64, 2), 8),
+        "sub=16,cb=64,trained=2it,rerank=16x" -> AnnSpec(Flat, Pq(16, 64, 2), 16)),
+      "ivf_pq" -> specs(cosTruth)(
+        s"c=$ivfC,np=4,sub=4,cb=8" -> AnnSpec(Ivf(ivfC, 4), Pq(4, 8, 0), 0),
+        s"c=$ivfC,np=8,sub=8,cb=16" -> AnnSpec(Ivf(ivfC, 8), Pq(8, 16, 0), 0),
+        s"c=$ivfC,np=8,sub=16,cb=32" -> AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 0), 0),
+        s"c=$ivfC,np=8,sub=16,cb=64" -> AnnSpec(Ivf(ivfC, 8), Pq(16, 64, 0), 0),
+        s"c=$ivfC,np=8,sub=16,cb=32,rerank=2x" -> AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 0), 2),
+        s"c=$ivfC,np=8,sub=16,cb=32,rerank=4x" -> AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 0), 4),
+        s"c=$ivfC,np=8,sub=16,cb=32,rerank=8x" -> AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 0), 8),
+        s"c=$ivfC,np=8,sub=16,cb=32,trained=2it,rerank=4x" -> AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 2), 4),
+        s"c=$ivfC,np=8,sub=16,cb=64,trained=2it,rerank=8x" -> AnnSpec(Ivf(ivfC, 8), Pq(16, 64, 2), 8),
+        s"c=$ivfC,np=8,sub=16,cb=64,trained=2it,rerank=16x" -> AnnSpec(Ivf(ivfC, 8), Pq(16, 64, 2), 16),
+        // the r13 SCALED gate's operating point (cb=64 and the 16×
+        // fetch pinned at their measured big-corpus values) — the
+        // ann_ivf_pq_trained_rerank_scaled recipe, measured here at
+        // whatever n this run loads (200k for the big-fixture row)
+        "scaled:c=isqrt(n),np=c/16,sub=16,cb=64,trained=2it,rerank=16x" ->
+          AnnSpec(IvfScaled(scaledC, scaledNp), Pq(16, 64, 2), 16)),
       // SQ8 (r13): codebook-free scalar quantization — like PQ it
       // scans every code (memory tier, not candidate pruning), but at
       // 1 byte/dim the 8-bit reconstruction error is tiny, so raw
       // recall should sit near 1.0 at any corpus density
-      "sq8" -> Seq(
-        "raw" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Sq8, 0))), cosTruth)),
-        "rerank=8x" -> (() => recallOf(
-          pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Sq8, 8))), cosTruth))),
+      "sq8" -> specs(cosTruth)(
+        "raw" -> AnnSpec(Flat, Sq8, 0),
+        "rerank=8x" -> AnnSpec(Flat, Sq8, 8)),
       // IVF+SQ8 (r14): the FAISS IVFSQ composition — coarse lists
       // prune to the scaled ~1/16 scan fraction, SQ8 codes score only
       // the probed lists; recall should track flat SQ8 (the per-dim
       // reconstruction error is density-independent) minus only the
       // true neighbors outside the probed lists
-      "ivf_sq8" -> Seq(
-        "scaled:c=isqrt(n),np=c/16,rerank=4x" -> (() => {
-          val c = Similarity.scaledCentroids(nVec)
-          recallOf(pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(IvfScaled(c, Similarity.scaledNprobe(c)), Sq8, 4))), cosTruth)
-        }),
-        "scaled:c=isqrt(n),np=c/16,rerank=8x" -> (() => {
-          val c = Similarity.scaledCentroids(nVec)
-          recallOf(pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(IvfScaled(c, Similarity.scaledNprobe(c)), Sq8, 8))), cosTruth)
-        }),
-        // persisted-index A/B (r16, judge r15 ask #3): seeded
-        // (first-N-by-id, the gate recipe) vs trained (2 Lloyd rounds
-        // of the shared kmeansFit) coarse centroids at MATCHED nprobe
-        // — does training the coarse quantizer buy recall at the same
-        // probe budget?
-        "persisted:seeded,rerank=8x" -> (() => {
-          val c = Similarity.scaledCentroids(nVec)
-          val idx = graft.operators.TempDirs.fresh("graft_annidx_recall")
-          Similarity.ivfSq8IndexBuild(emb, "vec_id", "embedding", c,
-            Similarity.scaledNprobe(c), idx)
-          recallOf(pairs(Similarity.ivfSq8IndexQuery(
-            idx, emb, qs, "vec_id", "embedding", k, fetch = 8)), cosTruth)
-        }),
-        "persisted:trained=2it,rerank=8x" -> (() => {
-          val c = Similarity.scaledCentroids(nVec)
-          val idx = graft.operators.TempDirs.fresh("graft_annidx_recall")
-          Similarity.ivfSq8IndexBuild(emb, "vec_id", "embedding", c,
-            Similarity.scaledNprobe(c), idx, trainRounds = 2)
-          recallOf(pairs(Similarity.ivfSq8IndexQuery(
-            idx, emb, qs, "vec_id", "embedding", k, fetch = 8)), cosTruth)
-        })),
-      "mips" -> Seq(
-        "planes=4" -> (() => recallOf(
-          pairs(Similarity.mipsTopK(emb, qs, "vec_id", "embedding", k, planes = 4)), mipsTruth)),
-        "planes=2" -> (() => recallOf(
-          pairs(Similarity.mipsTopK(emb, qs, "vec_id", "embedding", k, planes = 2)), mipsTruth))),
+      "ivf_sq8" -> (specs(cosTruth)(
+        "scaled:c=isqrt(n),np=c/16,rerank=4x" -> AnnSpec(IvfScaled(scaledC, scaledNp), Sq8, 4),
+        "scaled:c=isqrt(n),np=c/16,rerank=8x" -> AnnSpec(IvfScaled(scaledC, scaledNp), Sq8, 8)) ++ Seq(
+        "persisted:seeded,rerank=8x" -> persisted(0),
+        "persisted:trained=2it,rerank=8x" -> persisted(2))),
+      "mips" -> specs(mipsTruth)(
+        "planes=4" -> AnnSpec(MipsLsh(4), InnerProduct, 0),
+        "planes=2" -> AnnSpec(MipsLsh(2), InnerProduct, 0)),
       "graph" -> Seq(
-        "edges=5,beam=4,hops=3" -> (() => recallOf(
-          pairs(Similarity.graphSearch(emb, qs, edges5, "vec_id", "embedding", k, 4, 3)), cosTruth)),
-        "edges=5,beam=16,hops=5" -> (() => recallOf(
-          pairs(Similarity.graphSearch(emb, qs, edges5, "vec_id", "embedding", k, 16, 5)), cosTruth)),
-        "edges=10,beam=16,hops=5" -> (() => recallOf(
-          pairs(Similarity.graphSearch(emb, qs, edges10, "vec_id", "embedding", k, 16, 5)), cosTruth)),
-        "edges=10,beam=32,hops=6" -> (() => recallOf(
-          pairs(Similarity.graphSearch(emb, qs, edges10, "vec_id", "embedding", k, 32, 6)), cosTruth))))
+        "edges=5,beam=4,hops=3" -> graph(edges5, 4, 3),
+        "edges=5,beam=16,hops=5" -> graph(edges5, 16, 5),
+        "edges=10,beam=16,hops=5" -> graph(edges10, 16, 5),
+        "edges=10,beam=32,hops=6" -> graph(edges10, 32, 6)))
 
     // r11: the PQ shapes' shipped default is the re-rank composition
     // (ann_pq_rerank / ann_ivf_pq_rerank gates) — the raw ADC points
@@ -235,34 +186,26 @@ object Recall {
       "ivf_sq8" -> "scaled:c=isqrt(n),np=c/16,rerank=8x",
       "mips" -> "planes=2", "graph" -> "edges=10,beam=32,hops=6")
 
-    // cost at the default operating point: scored candidates (the rows
-    // the exact re-rank actually touches). Brute force = nq·(N−1) is
-    // the 1.0-recall anchor every pruning factor reads against. PQ has
-    // no candidate pruning — it scans every CODE (that is the point:
-    // memory compression, not candidate pruning), so its cost equals
-    // brute force in rows while each row is numSub bytes, not d floats.
-    val costThunks: Map[String, () => Long] = Map(
-      "brute" -> (() => nq * (nVec - 1)),
-      "lsh" -> (() => Similarity.lshCandidateCount(emb, qs, "vec_id", "embedding", planes = 2)),
-      "ivf" -> (() => Similarity.candidateCount(emb, qs, "vec_id", "embedding",
-        AnnSpec(Ivf(ivfC, 8), Exact, 0))),
-      "pq" -> (() => nq * (nVec - 1)),
-      "sq8" -> (() => nq * (nVec - 1)),
-      "ivf_pq" -> (() => Similarity.candidateCount(emb, qs, "vec_id", "embedding",
-        AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 2), 4))),
-      "ivf_pq_scaled" -> (() => {
-        val c = Similarity.scaledCentroids(nVec)
-        Similarity.candidateCount(emb, qs, "vec_id", "embedding",
-          AnnSpec(IvfScaled(c, Similarity.scaledNprobe(c)), Pq(16, 64, 2), 16))
-      }),
-      // IVF+SQ8 scores every probed-list row once (1 byte/dim codes)
-      "ivf_sq8" -> (() => {
-        val c = Similarity.scaledCentroids(nVec)
-        Similarity.candidateCount(emb, qs, "vec_id", "embedding",
-          AnnSpec(IvfScaled(c, Similarity.scaledNprobe(c)), Sq8, 8))
-      }),
-      "mips" -> (() => Similarity.mipsCandidateCount(emb, qs, "vec_id", "embedding", planes = 2)),
-      "graph" -> (() => Similarity.graphVisited(emb, qs, edges10, "vec_id", "embedding", 32, 6).count()))
+    // cost at the default operating point: scored candidates (the pairs
+    // the coarse tier hands the code stage). Brute force, nq·(N−1), is
+    // the 1.0-recall anchor every pruning factor reads against. PQ and
+    // SQ8 have no candidate pruning — they scan every CODE (that is the
+    // point: memory compression, not candidate pruning), so their cost
+    // equals brute force in rows while each row is a few bytes, not d
+    // floats.
+    val costThunks: Map[String, () => Long] = Seq(
+      "brute" -> AnnSpec(Flat, Exact, 0),
+      "lsh" -> AnnSpec(Lsh(2), Exact, 0),
+      "ivf" -> AnnSpec(Ivf(ivfC, 8), Exact, 0),
+      "pq" -> AnnSpec(Flat, Pq(16, 32, 2), 4),
+      "sq8" -> AnnSpec(Flat, Sq8, 8),
+      "ivf_pq" -> AnnSpec(Ivf(ivfC, 8), Pq(16, 32, 2), 4),
+      "ivf_sq8" -> AnnSpec(IvfScaled(scaledC, scaledNp), Sq8, 8),
+      "mips" -> AnnSpec(MipsLsh(2), InnerProduct, 0)
+    ).map { case (s0, spec) =>
+      s0 -> (() => Similarity.candidateCount(emb, qs, "vec_id", "embedding", spec))
+    }.toMap + ("graph" -> (() =>
+      Similarity.graphVisited(emb, qs, edges10, "vec_id", "embedding", 32, 6).count()))
     val evaluated = curve
       .filter { case (shape, _) => shapesEnv.forall(_.contains(shape)) }
       .map { case (shape, pts) =>

@@ -9,8 +9,9 @@ import org.apache.spark.sql.DataFrame
   * operator returns. A long-lived library session calls [[release]]
   * after materializing its outputs to free every pinned block without
   * the bluntness of `spark.catalog.clearCache()` (which would also
-  * drop the CALLER's caches). Verify/Bench use clearCache per gate,
-  * so sweeps never accumulate either way; PageRank additionally
+  * drop the CALLER's caches). Verify and Bench call `Gates.release`
+  * between gates, which runs [[release]] and then clears every other
+  * cache, so sweeps never accumulate either way; PageRank additionally
   * offers an eager `runReleased` variant for its checkpoint-friendly
   * shape.
   */

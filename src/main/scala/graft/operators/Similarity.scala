@@ -7,43 +7,16 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (SURVEY.md §2.4).
   *
-  * Brute force is the exact baseline: queries broadcast, scoring is
-  * map-side over the (sharded) vector set, and only scored rows
-  * shuffle once on query id for the final top-k. The LSH and IVF
-  * variants bound the candidate set per query (O(n/buckets)) — the
-  * 100 TB path — and trade recall, which the specs measure against
-  * brute force.
+  * One candidate generator, [[annTopK]], composes every top-k query
+  * from an [[AnnSpec]]. `AnnSpec(Flat, Exact, 0)` is the exact
+  * baseline: queries broadcast, scoring is map-side over the (sharded)
+  * vector set, and only bounded per-partition top-k rows shuffle on
+  * query id. The LSH, MIPS and IVF coarse tiers bound the candidate set
+  * per query (O(n/buckets)) — the 100 TB path — and trade recall, which
+  * the specs and `graft.Recall` measure against the exact baseline.
+  * [[knnJoin]] is the LSH tier with the corpus as its own query set.
   */
 object Similarity {
-
-  /** Exact cosine top-k for each query vector (self excluded).
-    *
-    * Queries broadcast, scoring is map-side. Under the library's
-    * session contract (GraftSession / `withExtensions(new
-    * GraftExtensions)` — how Verify, Bench and every spec run), the
-    * TopK call rewrites to the native GroupTopK tier, whose partial
-    * pass keeps a bounded heap per (scan partition, query) — so only
-    * partitions × queries × k candidate rows shuffle for the final
-    * merge and the full N×Q scored set never moves. On a session
-    * WITHOUT the extensions it degrades to the window plan, which
-    * shuffles the full scored set — attach the extensions for ANN at
-    * scale.
-    */
-  def bruteForceTopK(vectors: DataFrame, queries: DataFrame,
-                     idCol: String, vecCol: String, k: Int): DataFrame = {
-    val v = vectors.select(col(idCol).as("id"), col(vecCol).as("v"),
-      VecFns.norm(col(vecCol)).as("nrm"))
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"),
-      VecFns.norm(col(vecCol)).as("q_nrm"))
-    val scored = v.crossJoin(broadcast(q))
-      .filter(col("id") =!= col("q_id"))
-      .withColumn("cos", VecFns.cosinePrenormed(
-        VecFns.dot(col("v"), col("q_v")), col("nrm"), col("q_nrm")))
-      .select(col("q_id"), col("id"), col("cos"))
-    TopK(scored, Seq(col("q_id")), Seq(col("cos").desc, col("id")), k)
-      .select(col("q_id"), col("id").as("neighbor_id"),
-        round(col("cos"), 4).as("cosine"), col("rk").cast("long").as("rk"))
-  }
 
   /** Hyperplane sign bucket: one signature of `planes` bits from the
     * compiled [[graft.functions.HyperplaneBands]] expression (a
@@ -52,147 +25,77 @@ object Similarity {
     * call inside whole-stage codegen, and its md5-derived integer
     * arithmetic is exactly replayable by the DuckDB oracle.
     */
-  private def planeSig(vecCol: String, planes: Int): Column =
-    element_at(graft.functions.HyperplaneBands(col(vecCol), 1, planes), 1)
+  private def planeSig(vec: Column, planes: Int): Column =
+    element_at(graft.functions.HyperplaneBands(vec, 1, planes), 1)
 
   /** Probe-bucket set for a query whose own bucket is in `q_bucket`:
-    * the bucket itself plus every 1-bit flip — one shared SQL fragment
-    * so the LSH, MIPS and kNN-join probes can never drift apart.
+    * the bucket itself plus every 1-bit flip.
     */
   private def probeSetExpr(planes: Int): String =
     s"array_union(array(q_bucket), transform(sequence(0, ${planes - 1}), p -> " +
       "CAST(q_bucket AS BIGINT) ^ shiftleft(CAST(1 AS BIGINT), p)))"
-
-  /** Scored-candidate count of [[lshTopK]] at an operating point — the
-    * COST side of the recall/cost trade `RECALL_r{N}.json` records
-    * (same bucketing + probe construction, counting instead of
-    * scoring).
-    */
-  private[graft] def lshCandidateCount(vectors: DataFrame, queries: DataFrame,
-                                       idCol: String, vecCol: String,
-                                       planes: Int): Long = {
-    val v = vectors.select(col(idCol).as("id"), planeSig(vecCol, planes).as("bucket"))
-    val q = queries.select(col(idCol).as("q_id"), planeSig(vecCol, planes).as("q_bucket"))
-      .withColumn("bucket", explode(expr(probeSetExpr(planes))))
-      .select(col("q_id"), col("bucket"))
-    v.join(broadcast(q), "bucket").filter(col("id") =!= col("q_id")).count()
-  }
-
-  /** Random-hyperplane LSH top-k: vectors bucket by sign pattern;
-    * queries probe their own bucket plus all 1-bit-flip neighbors.
-    */
-  def lshTopK(vectors: DataFrame, queries: DataFrame,
-              idCol: String, vecCol: String, k: Int,
-              planes: Int = 2): DataFrame = {
-    val v = vectors.select(col(idCol).as("id"), col(vecCol).as("v"),
-      VecFns.norm(col(vecCol)).as("nrm"),
-      planeSig(vecCol, planes).as("bucket"))
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"),
-      VecFns.norm(col(vecCol)).as("q_nrm"),
-      planeSig(vecCol, planes).as("q_bucket"))
-      // probe set: own bucket + 1-bit flips
-      .withColumn("bucket", explode(expr(probeSetExpr(planes))))
-      .select(col("q_id"), col("q_v"), col("q_nrm"), col("bucket"))
-    val scored = v.join(broadcast(q), "bucket")
-      .filter(col("id") =!= col("q_id"))
-      .withColumn("cos", VecFns.cosinePrenormed(
-        VecFns.dot(col("v"), col("q_v")), col("nrm"), col("q_nrm")))
-    TopK(scored, Seq(col("q_id")), Seq(col("cos").desc, col("id")), k)
-      .select(col("q_id"), col("id").as("neighbor_id"),
-        round(col("cos"), 4).as("cosine"), col("rk").cast("long").as("rk"))
-  }
-
-  /** Maximum-inner-product search (MIPS) via the Shrivastava–Li
-    * augmented transform (NeurIPS 2014 "Asymmetric LSH for sublinear
-    * time MIPS"): inner product is not a metric (no triangle
-    * inequality; a vector's own ip with itself need not dominate), so
-    * cosine/L2 LSH cannot bucket it directly. The fix is asymmetric
-    * augmentation to one extra coordinate — data x → [x; √(M²−|x|²)]
-    * (M = max corpus norm, so every augmented data vector has norm
-    * exactly M), query q → [q; 0] — after which cos(aug(x), aug(q)) =
-    * (x·q)/(M·|q|): a monotone transform of the inner product, making
-    * hyperplane sign buckets a valid MIPS candidate generator. As in
-    * every production ANN stack, the LSH tier only PRUNES; candidates
-    * re-rank by the exact inner product of the ORIGINAL vectors.
-    *
-    * Scale shape = [[lshTopK]]: bucketing is one compiled
-    * [[graft.functions.HyperplaneBands]] pass (65 weights/plane — the
-    * augmented dim), queries probe own-bucket + 1-bit flips, scoring
-    * is map-side against the broadcast query set and the final top-k
-    * runs through the bounded-heap GroupTopK tier. |x|² and M² are
-    * in-order double dot products and the augmented coordinate is one
-    * IEEE sqrt — both bit-replayable by the DuckDB oracle, so the
-    * whole gate hash-matches (recall vs brute-force MIPS is measured
-    * in SimilaritySpec).
-    */
-  def mipsTopK(vectors: DataFrame, queries: DataFrame,
-               idCol: String, vecCol: String, k: Int,
-               planes: Int = 2): DataFrame = {
-    val base = vectors.select(col(idCol).as("id"), col(vecCol).as("v"),
-      VecFns.dot(col(vecCol), col(vecCol)).as("n2"))
-    val m2 = base.agg(max(col("n2")).as("m2"))
-    // augmented DOUBLE array: original coords + the norm-completion
-    // coordinate; HyperplaneBands quantizes each to floor(x·2^20)
-    val v = base.crossJoin(broadcast(m2))
-      .withColumn("va", concat(
-        expr("transform(v, x -> cast(x as double))"),
-        array(sqrt(greatest(col("m2") - col("n2"), lit(0.0))))))
-      .select(col("id"), col("v"),
-        element_at(graft.functions.HyperplaneBands(col("va"), 1, planes), 1).as("bucket"))
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"))
-      .withColumn("qa", concat(
-        expr("transform(q_v, x -> cast(x as double))"), array(lit(0.0))))
-      .withColumn("q_bucket",
-        element_at(graft.functions.HyperplaneBands(col("qa"), 1, planes), 1))
-      .withColumn("bucket", explode(expr(probeSetExpr(planes))))
-      .select(col("q_id"), col("q_v"), col("bucket"))
-    val scored = v.join(broadcast(q), "bucket")
-      .filter(col("id") =!= col("q_id"))
-      .withColumn("ip", VecFns.dot(col("v"), col("q_v")))
-    TopK(scored, Seq(col("q_id")), Seq(col("ip").desc, col("id")), k)
-      .select(col("q_id"), col("id").as("neighbor_id"),
-        round(col("ip"), 4).as("ip"), col("rk").cast("long").as("rk"))
-  }
 
   /** Approximate top-k for each query vector (self excluded), composed
     * from the three stages `spec` names (see [[AnnSpec]]):
     *
     *  - coarse tier: Flat scores every vector; the IVF tiers score only
     *    the vectors in each query's `nprobe` nearest seed lists
-    *    ([[probedPairs]]) — O(n·nprobe/c) candidates instead of n;
-    *  - code: Exact scores raw cosine; Pq scores the asymmetric-distance
-    *    sum over `numSub` one-byte codes per vector ([[pqScores]]), Sq8
-    *    the dot of 8-bit per-dim reconstructions ([[sq8Scores]]) — at
-    *    100 TB the scan reads the code table, never the vectors;
+    *    ([[probedPairs]]) — O(n·nprobe/c) candidates instead of n; the
+    *    LSH tiers only those in the query's sign bucket and its 1-bit
+    *    flips ([[bucketPairs]]) — O(n·planes/2^planes);
+    *  - code: Exact scores raw cosine, InnerProduct the raw dot; Pq
+    *    scores the asymmetric-distance sum over `numSub` one-byte codes
+    *    per vector ([[pqScores]]), Sq8 the dot of 8-bit per-dim
+    *    reconstructions ([[sq8Scores]]) — at 100 TB the scan reads the
+    *    code table, never the vectors;
     *  - rerank: `rerank > 0` keeps rerank·k code-ranked rows per query
     *    and ranks them by exact cosine ([[exactRerank]]) — the recall
     *    recovery of every production quantized index.
     *
-    * Every stage is deterministic (first-N-by-id seeds, ties by id,
-    * 2²⁰-integer partial sums), so the DuckDB oracle replays each
+    * Every stage is deterministic (first-N-by-id seeds, md5 planes, ties
+    * by id, 2²⁰-integer partial sums), so the DuckDB oracle replays each
     * composition bit-for-bit. Every tier ends in the same per-partition
-    * bounded top-k plus global merge (the GroupTopK tier). Output
-    * (q_id, neighbor_id, score, rk), the score named by the last
-    * ranking stage: `cosine` (Exact or re-ranked), `adc` (Pq) or `sq8`.
+    * bounded top-k plus global merge: under the library's session
+    * contract (GraftSession / `withExtensions(new GraftExtensions)`)
+    * the TopK call rewrites to the native GroupTopK tier, so only
+    * partitions × queries × k rows shuffle; a session without the
+    * extensions falls back to the window plan, which shuffles every
+    * scored pair. Output (q_id, neighbor_id, score, rk), the score named
+    * by the last ranking stage: `cosine` (Exact or re-ranked), `ip`
+    * (InnerProduct), `adc` (Pq) or `sq8`.
     */
   def annTopK(vectors: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
               k: Int, spec: AnnSpec): DataFrame = {
     val (v, q, lists) = coarseTier(vectors, queries, idCol, vecCol, spec)
-    val (scored, out) = spec.code match {
-      case AnnSpec.Exact =>
-        // the candidate pairs carry both vectors: scoring needs no join back
-        val vx = v.withColumn("nrm", VecFns.norm(col("v")))
-        val qx = q.withColumn("q_nrm", VecFns.norm(col("q_v")))
-        (lists.fold(vx.crossJoin(broadcast(qx)).filter(notSelf))(_(vx, qx))
-          .withColumn("score", VecFns.cosinePrenormed(
-            VecFns.dot(col("v"), col("q_v")), col("nrm"), col("q_nrm"))),
-          round(col("score"), 4).as("cosine"))
-      case pq: AnnSpec.Pq => (pqScores(v, q, lists, pq), unquantized.as("adc"))
-      case AnnSpec.Sq8 => (sq8Scores(v, q, lists), unquantized.as("sq8"))
-    }
+    val (scored, out) = codeStage(v, q, lists, spec.code)
     if (spec.rerank <= 0) ranked(scored, k, out)
     else exactRerank(vectors, queries, idCol, vecCol, k, ranked(scored, k * spec.rerank, out))
   }
+
+  /** The code stage: the scored candidate pairs (q_id, id, score, …)
+    * and the output column the score publishes as.
+    */
+  private def codeStage(v: DataFrame, q: DataFrame, lists: Option[Pairs],
+                        code: AnnSpec.Code): (DataFrame, Column) = code match {
+    case AnnSpec.Exact =>
+      // the candidate pairs carry both vectors: scoring needs no join back
+      val vx = v.withColumn("nrm", VecFns.norm(col("v")))
+      val qx = q.withColumn("q_nrm", VecFns.norm(col("q_v")))
+      (candidates(vx, qx, lists).withColumn("score", VecFns.cosinePrenormed(
+          VecFns.dot(col("v"), col("q_v")), col("nrm"), col("q_nrm"))),
+        round(col("score"), 4).as("cosine"))
+    case AnnSpec.InnerProduct =>
+      (candidates(v, q, lists).withColumn("score", VecFns.dot(col("v"), col("q_v"))),
+        round(col("score"), 4).as("ip"))
+    case pq: AnnSpec.Pq => (pqScores(v, q, lists, pq), unquantized.as("adc"))
+    case AnnSpec.Sq8 => (sq8Scores(v, q, lists), unquantized.as("sq8"))
+  }
+
+  /** Every (vector, query) pair but the self pair under Flat, else the
+    * coarse tier's pairs.
+    */
+  private def candidates(v: DataFrame, q: DataFrame, lists: Option[Pairs]): DataFrame =
+    lists.fold(v.crossJoin(broadcast(q)).filter(notSelf))(_(v, q))
 
   /** Scored-candidate count of [[annTopK]] at `spec` — the COST side of
     * the recall/cost trade `RECALL_r{N}.json` records: the pairs its
@@ -201,7 +104,7 @@ object Similarity {
   private[graft] def candidateCount(vectors: DataFrame, queries: DataFrame,
                                     idCol: String, vecCol: String, spec: AnnSpec): Long = {
     val (v, q, lists) = coarseTier(vectors, queries, idCol, vecCol, spec)
-    lists.fold(v.crossJoin(broadcast(q)).filter(notSelf))(_(v, q)).count()
+    candidates(v, q, lists).count()
   }
 
   /** (`prefix`id, `prefix`v) projection of an input frame; SQ8 scores
@@ -235,7 +138,49 @@ object Similarity {
       case AnnSpec.IvfScaled(c, np) =>
         val vw = CacheLedger.persist(widen(v))
         (vw, q, Some(probedPairs(seeds(vw, "id", "v", c), np, scaled = true)))
+      case AnnSpec.Lsh(planes) => (v, q, Some(bucketPairs(planes, mips = false, selfJoin = false)))
+      case AnnSpec.MipsLsh(planes) => (v, q, Some(bucketPairs(planes, mips = true, selfJoin = false)))
     }
+  }
+
+  /** LSH candidates: each vector sits in one sign bucket of `planes`
+    * hyperplanes and each query probes its own bucket and every 1-bit
+    * flip of it ([[probeSetExpr]]); one bucket per vector and a
+    * duplicate-free probe set, so every (q_id, id) pair appears once.
+    * `mips` buckets the [[AnnSpec.MipsLsh]] augmentation instead of the
+    * raw vectors ([[mipsBuckets]]). The probe side broadcasts unless
+    * `selfJoin`: in [[knnJoin]] it is the corpus, so the bucket join is
+    * a plain shuffled equi-join.
+    */
+  private def bucketPairs(planes: Int, mips: Boolean, selfJoin: Boolean): Pairs = (v, q) => {
+    val (vb, qb) =
+      if (mips) mipsBuckets(v, q, planes)
+      else (v.withColumn("bucket", planeSig(col("v"), planes)),
+        q.withColumn("q_bucket", planeSig(col("q_v"), planes)))
+    val probes = qb.withColumn("bucket", explode(expr(probeSetExpr(planes))))
+    vb.join(if (selfJoin) probes else broadcast(probes), "bucket").filter(notSelf)
+  }
+
+  /** Maximum-inner-product buckets via the Shrivastava–Li augmented
+    * transform (NeurIPS 2014 "Asymmetric LSH for sublinear time
+    * MIPS"): inner product is not a metric (a vector's own ip with
+    * itself need not dominate), so cosine LSH cannot bucket it
+    * directly. Data x → [x; √(M²−|x|²)] (M = max corpus norm, so every
+    * augmented data vector has norm exactly M), query q → [q; 0]; then
+    * cos(aug(x), aug(q)) = (x·q)/(M·|q|), a monotone transform of the
+    * inner product, and hyperplane sign buckets over the augmented
+    * vectors (d + 1 weights per plane) generate its candidates.
+    * |x|² and M² are in-order double dot products and the augmented
+    * coordinate is one IEEE sqrt — bit-replayable by the DuckDB oracle.
+    */
+  private def mipsBuckets(v: DataFrame, q: DataFrame, planes: Int): (DataFrame, DataFrame) = {
+    val n2 = VecFns.dot(col("v"), col("v"))
+    val m2 = v.agg(max(n2).as("m2"))
+    val va = concat(expr("transform(v, x -> cast(x as double))"),
+      array(sqrt(greatest(col("m2") - n2, lit(0.0)))))
+    val qa = concat(expr("transform(q_v, x -> cast(x as double))"), array(lit(0.0)))
+    (v.crossJoin(broadcast(m2)).select(v.columns.map(col) :+ planeSig(va, planes).as("bucket"): _*),
+      q.withColumn("q_bucket", planeSig(qa, planes)))
   }
 
   /** Deterministic seed set (c_id, c_v): the first `n` rows by id —
@@ -430,33 +375,21 @@ object Similarity {
 
   /** Corpus-wide kNN JOIN — every vector's top-k neighbors (the kNN
     * graph behind retrieval-augmented dedup, graph clustering and
-    * kNN-LM), not just a query set's. Unlike [[lshTopK]], the probe
-    * side IS the corpus, so nothing broadcasts: vectors bucket by the
-    * compiled hyperplane signature, probes explode to their own
-    * bucket plus all 1-bit flips, and candidates come from a plain
-    * (shuffled) equi-join on the bucket — per-bucket work is
-    * O(|bucket| × |probes in bucket|), never n². The exact-cosine
-    * scoring stays in whole-stage codegen and the final top-k runs
-    * through the native bounded-heap tier.
+    * kNN-LM), not just a query set's: [[annTopK]]'s `Lsh(planes)` tier
+    * and `Exact` code with the corpus as its own query set. The probe
+    * side IS the corpus, so nothing broadcasts: both sides read one
+    * persisted projection, and candidates come from a plain (shuffled)
+    * equi-join on the bucket — per-bucket work is O(|bucket| × |probes
+    * in bucket|), never n².
     */
   def knnJoin(vectors: DataFrame, idCol: String, vecCol: String, k: Int,
               planes: Int = 4): DataFrame = {
-    val v = vectors.select(col(idCol).as("id"), col(vecCol).as("v"),
-      VecFns.norm(col(vecCol)).as("nrm"),
-      planeSig(vecCol, planes).as("bucket"))
-      .transform(CacheLedger.persist) // both join sides read it; released by CacheLedger.release()/clearCache
-    val probes = v
-      .select(col("id").as("q_id"), col("v").as("q_v"),
-        col("nrm").as("q_nrm"), col("bucket").as("q_bucket"))
-      .withColumn("bucket", explode(expr(probeSetExpr(planes))))
-      .select(col("q_id"), col("q_v"), col("q_nrm"), col("bucket"))
-    val scored = v.join(probes, "bucket") // no hint: both sides corpus-sized
-      .filter(col("id") =!= col("q_id"))
-      .withColumn("cos", VecFns.cosinePrenormed(
-        VecFns.dot(col("v"), col("q_v")), col("nrm"), col("q_nrm")))
-    TopK(scored, Seq(col("q_id")), Seq(col("cos").desc, col("id")), k)
-      .select(col("q_id"), col("id").as("neighbor_id"),
-        round(col("cos"), 4).as("cosine"), col("rk").cast("long").as("rk"))
+    // both join sides read it; CacheLedger.release (Gates.release between gates) frees it
+    val v = CacheLedger.persist(project(vectors, idCol, vecCol, "", toDouble = false))
+    val q = v.select(col("id").as("q_id"), col("v").as("q_v"))
+    val (scored, out) =
+      codeStage(v, q, Some(bucketPairs(planes, mips = false, selfJoin = true)), AnnSpec.Exact)
+    ranked(scored, k, out)
   }
 
   /** Greedy beam search over the kNN graph — the HNSW-layer-0 query
@@ -539,31 +472,6 @@ object Similarity {
         .select(col("q_id"), col("node"))
     }
     scored
-  }
-
-  /** Scored-candidate count of [[mipsTopK]] at an operating point —
-    * same augmentation + bucketing, counting instead of scoring.
-    */
-  private[graft] def mipsCandidateCount(vectors: DataFrame, queries: DataFrame,
-                                        idCol: String, vecCol: String,
-                                        planes: Int): Long = {
-    val base = vectors.select(col(idCol).as("id"), col(vecCol).as("v"),
-      VecFns.dot(col(vecCol), col(vecCol)).as("n2"))
-    val m2 = base.agg(max(col("n2")).as("m2"))
-    val v = base.crossJoin(broadcast(m2))
-      .withColumn("va", concat(
-        expr("transform(v, x -> cast(x as double))"),
-        array(sqrt(greatest(col("m2") - col("n2"), lit(0.0))))))
-      .select(col("id"),
-        element_at(graft.functions.HyperplaneBands(col("va"), 1, planes), 1).as("bucket"))
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_v"))
-      .withColumn("qa", concat(
-        expr("transform(q_v, x -> cast(x as double))"), array(lit(0.0))))
-      .withColumn("q_bucket",
-        element_at(graft.functions.HyperplaneBands(col("qa"), 1, planes), 1))
-      .withColumn("bucket", explode(expr(probeSetExpr(planes))))
-      .select(col("q_id"), col("bucket"))
-    v.join(broadcast(q), "bucket").filter(col("id") =!= col("q_id")).count()
   }
 
   /** Product-quantization scores (inner-product PQ with asymmetric
@@ -913,7 +821,7 @@ object Similarity {
   /** Exact cosine re-rank of an ANN shortlist: shortlist ids join the
     * raw vectors once (an equi-join on id — never a corpus scan),
     * queries broadcast, and the final k ranks through the bounded
-    * GroupTopK tier with the [[bruteForceTopK]] output contract
+    * GroupTopK tier with the `AnnSpec(Flat, Exact, 0)` output contract
     * (cosine rounded to 4 decimals, ties by id).
     */
   private def exactRerank(vectors: DataFrame, queries: DataFrame,

@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.AnnSpec
+import graft.operators.AnnSpec.{Exact, Flat}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -270,8 +272,8 @@ object LearnQ {
   def embProjRecall(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables(spark, dir).embeddings
-    val truth = graft.operators.Similarity
-      .bruteForceTopK(e, e.filter($"vec_id" < 10), "vec_id", "embedding", k = 10)
+    val truth = graft.operators.Similarity.annTopK(e, e.filter($"vec_id" < 10),
+        "vec_id", "embedding", 10, AnnSpec(Flat, Exact, 0))
       .select($"q_id", $"neighbor_id")
     val proj = embRandProj(spark, dir)
       .groupBy($"vec_id")

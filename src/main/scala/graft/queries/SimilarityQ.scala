@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.multimodal.BinaryOps
 import graft.operators.{AnnSpec, Similarity, TempDirs}
-import graft.operators.AnnSpec.{Exact, Flat, Ivf, IvfScaled, Pq, Sq8}
+import graft.operators.AnnSpec.{Exact, Flat, InnerProduct, Ivf, IvfScaled, Lsh, MipsLsh, Pq, Sq8}
 import graft.streaming.EventStream
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -25,7 +25,7 @@ object SimilarityQ {
   def annBruteforce(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables(spark, dir).embeddings
-    Similarity.bruteForceTopK(e, queriesOf(spark, dir), "vec_id", "embedding", k = 10)
+    Similarity.annTopK(e, queriesOf(spark, dir), "vec_id", "embedding", 10, AnnSpec(Flat, Exact, 0))
       .orderBy($"q_id", $"rk")
   }
 
@@ -54,7 +54,7 @@ object SimilarityQ {
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables(spark, dir).embeddings
-    Similarity.lshTopK(e, queriesOf(spark, dir), "vec_id", "embedding", k = 10)
+    Similarity.annTopK(e, queriesOf(spark, dir), "vec_id", "embedding", 10, AnnSpec(Lsh(2), Exact, 0))
       .orderBy($"q_id", $"rk")
   }
 
@@ -84,8 +84,8 @@ object SimilarityQ {
       |r AS (SELECT q_id, neighbor_id, c, row_number() OVER (PARTITION BY q_id ORDER BY c DESC, neighbor_id) AS rk FROM scored)
       |SELECT q_id, neighbor_id, round(c, 4) AS cosine, rk FROM r WHERE rk <= 10 ORDER BY q_id, rk""".stripMargin
 
-  /** Asymmetric-LSH maximum-inner-product search
-    * ([[Similarity.mipsTopK]]): the Shrivastava–Li augmentation makes
+  /** Asymmetric-LSH maximum-inner-product search (`AnnSpec(MipsLsh(2),
+    * InnerProduct, 0)`): the Shrivastava–Li augmentation makes
     * hyperplane buckets valid for inner product (≠ cosine — no
     * normalization, so a long vector can dominate queries it is not
     * the most-aligned with), then candidates re-rank by the exact
@@ -96,7 +96,8 @@ object SimilarityQ {
   def annMips(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables(spark, dir).embeddings
-    Similarity.mipsTopK(e, queriesOf(spark, dir), "vec_id", "embedding", k = 10)
+    Similarity.annTopK(e, queriesOf(spark, dir), "vec_id", "embedding", 10,
+        AnnSpec(MipsLsh(2), InnerProduct, 0))
       .orderBy($"q_id", $"rk")
   }
 
@@ -2096,7 +2097,7 @@ object SimilarityQ {
     import spark.implicits._
     val e = Tables(spark, dir).embeddings
     val q = queriesOf(spark, dir)
-    val bf = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 10)
+    val bf = Similarity.annTopK(e, q, "vec_id", "embedding", 10, AnnSpec(Flat, Exact, 0))
       .select($"q_id", $"neighbor_id")
     val iv = Similarity.annTopK(e, q, "vec_id", "embedding", 10,
       AnnSpec(Ivf(10, 8), Exact, rerank = 0))

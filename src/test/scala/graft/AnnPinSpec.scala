@@ -1,10 +1,10 @@
 package graft
 
 /** Output pins for the ANN gates: those built from `Similarity.annTopK`'s
-  * shared stages — the in-memory pipelines, the persisted index, the
-  * recall eval and the k-means step that shares their seed set and
-  * assignment — and the brute-force, LSH, MIPS, kNN-join and
-  * graph-search gates still outside it, so folding them in has a guard.
+  * shared stages — the in-memory pipelines (brute force, LSH and MIPS
+  * among them), the persisted index, the recall eval, the k-means step
+  * that shares their seed set and assignment, the kNN join and the
+  * gates that consume it — and the graph search.
   * Each gate's sf0.001 output must keep its row count and
   * its order-independent sum of per-row `xxhash64` values. The DuckDB
   * compare is what proves these outputs right; the pin catches any
@@ -34,7 +34,11 @@ class AnnPinSpec extends GraftSuite {
     "ann_mips_topk" -> (100L, 1222485054873394005L),
     "ann_knn_join" -> (2500L, -511473802118913508L),
     "ann_knn_join_scaled" -> (2500L, -511473802118913508L),
-    "ann_graph_search" -> (100L, -4775047322711660255L))
+    "ann_graph_search" -> (100L, -4775047322711660255L),
+    "ann_knn_classify" -> (1L, 3554476086163384453L),
+    "ann_lof_outliers" -> (20L, 6857116064611229733L),
+    "emb_knn_components" -> (3L, 1354150265000830599L),
+    "emb_knn_components_scaled" -> (3L, 1354150265000830599L))
 
   pins.foreach { case (gate, expected) =>
     test(s"$gate output matches its sf0.001 pin") {

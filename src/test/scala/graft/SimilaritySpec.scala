@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{AnnSpec, Similarity}
-import graft.operators.AnnSpec.{Exact, Flat, Ivf, IvfScaled, Pq, Sq8}
+import graft.operators.AnnSpec.{Exact, Flat, InnerProduct, Ivf, IvfScaled, Lsh, MipsLsh, Pq, Sq8}
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends GraftSuite {
@@ -14,11 +14,13 @@ class SimilaritySpec extends GraftSuite {
     df.select($"q_id", $"neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  private lazy val truth =
-    pairs(Similarity.bruteForceTopK(emb, qs, "vec_id", "embedding", 10))
+  private def bruteForce(k: Int) =
+    Similarity.annTopK(emb, qs, "vec_id", "embedding", k, AnnSpec(Flat, Exact, 0))
+
+  private lazy val truth = pairs(bruteForce(10))
 
   test("brute force returns exactly k ordered neighbors per query") {
-    val rows = Similarity.bruteForceTopK(emb, qs, "vec_id", "embedding", 10).collect()
+    val rows = bruteForce(10).collect()
     assert(rows.length == 100)
     val byQ = rows.groupBy(_.getLong(0))
     byQ.values.foreach { rs =>
@@ -30,7 +32,7 @@ class SimilaritySpec extends GraftSuite {
   test("LSH ANN recall@10 >= 0.6 vs brute force at the shipped default") {
     // floor backs the r10 default operating point (planes=2, measured
     // 0.83 at sf0.01 in RECALL_r10) with margin for corpus variance
-    val got = pairs(Similarity.lshTopK(emb, qs, "vec_id", "embedding", 10))
+    val got = pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", 10, AnnSpec(Lsh(2), Exact, 0)))
     val recall = (got & truth).size.toDouble / truth.size
     info(s"lsh recall@10 = $recall")
     assert(recall >= 0.6)
@@ -58,7 +60,11 @@ class SimilaritySpec extends GraftSuite {
       .withColumn("rk", row_number().over(w))
       .filter($"rk" <= 10)
       .withColumn("neighbor_id", $"id"))
-    val got = pairs(Similarity.mipsTopK(emb, qs, "vec_id", "embedding", 10))
+    // the Flat inner-product spec is that truth, computed by annTopK
+    assert(pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", 10,
+      AnnSpec(Flat, InnerProduct, 0))) === mipsTruth)
+    val mips = AnnSpec(MipsLsh(2), InnerProduct, 0)
+    val got = pairs(Similarity.annTopK(emb, qs, "vec_id", "embedding", 10, mips))
     val recall = (got & mipsTruth).size.toDouble / mipsTruth.size
     info(s"mips recall@10 = $recall")
     assert(recall >= 0.6)
@@ -67,16 +73,24 @@ class SimilaritySpec extends GraftSuite {
     // there): scaling one non-top vector by 3× must pull it into MIPS
     // top-k while leaving its cosine rank unchanged (scaling is
     // cosine-invariant) — the asymmetry the augmented transform exists
-    // for, exercised end to end through mipsTopK.
+    // for, exercised end to end through the MipsLsh tier.
     val boostId = emb.agg(max($"vec_id")).head().getLong(0)
     val skewed = emb.withColumn("embedding",
       when($"vec_id" === boostId,
         expr("transform(embedding, x -> cast(3.0 * x as float))"))
         .otherwise($"embedding"))
-    val skewedGot = pairs(Similarity.mipsTopK(skewed, skewed.filter($"vec_id" < 10),
-      "vec_id", "embedding", 10))
-    assert(skewedGot.exists(_._2 == boostId),
+    val skewedOut = Similarity.annTopK(skewed, skewed.filter($"vec_id" < 10),
+      "vec_id", "embedding", 10, mips)
+    assert(pairs(skewedOut).exists(_._2 == boostId),
       s"3x-scaled vector $boostId should dominate some MIPS top-10")
+    // off the unit sphere the norm-completion coordinate is far from 0,
+    // so this pin moves if the augmentation path drifts
+    assert(pinOf(skewedOut) === ((100L, 9147895160274640847L)))
+  }
+
+  test("AnnSpec rejects a cosine re-rank of an inner-product ranking") {
+    intercept[IllegalArgumentException](AnnSpec(MipsLsh(2), InnerProduct, 4))
+    assert(AnnSpec(Flat, InnerProduct, 0).rerank == 0)
   }
 
   test("PQ ANN returns k ADC-ranked rows per query with recall floor") {
@@ -155,14 +169,15 @@ class SimilaritySpec extends GraftSuite {
   }
 
   test("kNN join agrees with lshTopK on any query subset (same buckets, same probes)") {
-    // knnJoin's probe set for a vector is identical to lshTopK's for
-    // the same vector (own bucket + 1-bit flips) AT THE SAME plane
+    // lshTopK is annTopK at the Lsh tier (AnnSpec(Lsh(p), Exact, 0)).
+    // knnJoin's probe set for a vector is identical to the Lsh tier's
+    // for the same vector (own bucket + 1-bit flips) AT THE SAME plane
     // count, so restricting the corpus-wide graph to the query ids
-    // must reproduce lshTopK@5 — planes pinned to 4 on both sides
-    // (knnJoin's default; lshTopK's query-side default is 2 since r10)
-    val graph = Similarity.knnJoin(emb, "vec_id", "embedding", k = 5)
+    // must reproduce Lsh(4)@5 — knnJoin's default plane count (the
+    // ann_lsh_topk gate runs Lsh(2))
+    val graph = Similarity.knnJoin(emb, "vec_id", "embedding", k = 5, planes = 4)
       .filter($"q_id" < 10)
-    val direct = Similarity.lshTopK(emb, qs, "vec_id", "embedding", k = 5, planes = 4)
+    val direct = Similarity.annTopK(emb, qs, "vec_id", "embedding", 5, AnnSpec(Lsh(4), Exact, 0))
     assert(graph.collect().toSet === direct.collect().toSet)
   }
 
@@ -309,7 +324,7 @@ class SimilaritySpec extends GraftSuite {
     // 8×k = 80 shortlist ≥ the sf0.001 corpus ⇒ the exact re-rank pass
     // sees every candidate, so the output must be bit-identical to the
     // brute-force contract (same cosine rounding, same tie order)
-    val bf = Similarity.bruteForceTopK(emb, qs, "vec_id", "embedding", 10)
+    val bf = bruteForce(10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     val sq = Similarity.annTopK(emb, qs, "vec_id", "embedding", 10, AnnSpec(Flat, Sq8, 8))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet

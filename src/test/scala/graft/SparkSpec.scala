@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, xxhash64}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,13 +16,15 @@ abstract class GraftSuite extends AnyFunSuite {
   def sf0001: String = SparkSpec.sf0001
   def sf001: String  = SparkSpec.sf001
 
-  /** A gate's sf0.001 output as its row count and its order-independent
-    * sum of per-row `xxhash64` values. */
-  def pin(gate: String): (Long, Long) = {
-    val df = SparkEntry.queries(gate)(spark, sf0001)
+  /** A frame's row count and its order-independent sum of per-row
+    * `xxhash64` values. */
+  def pinOf(df: DataFrame): (Long, Long) = {
     val hashes = df.select(xxhash64(df.columns.map(col): _*)).collect().map(_.getLong(0))
     (hashes.length.toLong, hashes.sum)
   }
+
+  /** [[pinOf]] a gate's sf0.001 output. */
+  def pin(gate: String): (Long, Long) = pinOf(SparkEntry.queries(gate)(spark, sf0001))
 
   /** Set SQL confs for the duration of `body`, restoring the prior
     * values after. The shared session is JVM-wide and suites run
