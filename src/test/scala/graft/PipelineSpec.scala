@@ -365,6 +365,30 @@ class PipelineSpec extends GraftSuite {
     assert(manifest == Seq("_SUCCESS", "part-00000.json"), manifest)
   }
 
+  test("a file:// sink tree has 0644 files, 0755 directories, a .crc per file and a _SUCCESS per output") {
+    val in = dropOf(
+      "good.csv" -> "a,b\n1,2\n3,4\n".getBytes("UTF-8"),
+      "book.xlsx" -> xlsx(Seq("x", "y"), Seq(Seq("1", "2"))),
+      "ragged.csv" -> "a,b\n1,2\n3,4,5\n".getBytes("UTF-8"))
+    val out = Files.createTempDirectory("graft_modes").toString
+    Pipeline.ingestWith(spark, in, GraftConfig(Some(s"file://$out"), 50),
+      sessionTs = Some("20260101_000000"), sessionId = Some("0ddba11")).collect()
+    val uploads = java.nio.file.Paths.get(out, "uploads")
+    val entries = Files.walk(uploads).iterator().asScala.toSeq
+    def mode(p: java.nio.file.Path): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+    val (dirs, files) = entries.partition(Files.isDirectory(_))
+    val session = uploads.resolve("20260101_000000_0ddba11")
+    assert(dirs.map(d => uploads.relativize(d).toString).sorted ==
+      Seq("", "20260101_000000_0ddba11", "20260101_000000_0ddba11/book", "20260101_000000_0ddba11/good",
+        "20260101_000000_0ddba11/manifest"))
+    assert(dirs.forall(mode(_) == Integer.parseInt("755", 8)), dirs.map(d => d -> mode(d).toOctalString))
+    assert(files.forall(mode(_) == Integer.parseInt("644", 8)), files.map(f => f -> mode(f).toOctalString))
+    val (crcs, visible) = files.partition(_.getFileName.toString.startsWith("."))
+    assert(crcs.map(_.toString).sorted == visible.map(f => f.resolveSibling(s".${f.getFileName}.crc").toString).sorted)
+    assert(Seq("book", "good", "manifest").forall(d => Files.isRegularFile(session.resolve(s"$d/_SUCCESS"))))
+    assert(visible.count(_.getFileName.toString.startsWith("part-")) == 3, visible)
+  }
+
   test("an exception escaping a file's body reaches the caller as itself") {
     graft.testfs.UnreadableSimFileSystem.register(spark)
     val in = dropOf(
